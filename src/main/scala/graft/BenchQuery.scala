@@ -20,17 +20,6 @@ object BenchQuery {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Opt-in per-stage timing (SPARK_GRAFT_STAGES=1): attributes a QTIME
-    // to its stages without changing the measured configuration.
-    if (sys.env.get("SPARK_GRAFT_STAGES").contains("1"))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-          println(f"QSTAGE ${si.stageId}%3d tasks=${si.numTasks}%4d dur=$dur%6.2f ${si.name.take(80)}")
-        }
-      })
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     names.foreach { name =>

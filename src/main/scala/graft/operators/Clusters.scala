@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,19 +44,9 @@ object Clusters {
     * (cluster_id = own doc_id, keep = true).
     */
   def q39NearDupClusters(
-      spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame = {
-    val pairs = TextOps.q17MinHashPairs(spark, sfDir, threshold)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val labels = connectedComponents(spark, pairs)
-    Tables.documents(spark, sfDir).select(col("doc_id"))
-      .join(
-        labels.select(col("node").as("doc_id"), col("label").as("cid")),
-        Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("cid"), col("doc_id")).as("cluster_id"),
-        (col("doc_id") === coalesce(col("cid"), col("doc_id"))).as("keep"))
-  }
+      spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame =
+    clusterLabels(spark, sfDir, threshold,
+      derived = cid => Seq((col("doc_id") === cid).as("keep")))
 
   /** Quality-aware canonical selection over the q39 clusters: real
     * pipelines keep the BEST member of a near-dup cluster (the longest
@@ -78,26 +68,41 @@ object Clusters {
     */
   def q40CanonicalKeep(
       spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame = {
-    val pairs = TextOps.q17MinHashPairs(spark, sfDir, threshold)
-      .select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val labels = connectedComponents(spark, pairs)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cluster_id"))
       .orderBy(col("word_count").desc_nulls_last, col("doc_id").asc)
-    Tables.documents(spark, sfDir)
-      .select(
-        col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("word_count"))
-      .join(
-        labels.select(col("node").as("doc_id"), col("label").as("cid")),
-        Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("cid"), col("doc_id")).as("cluster_id"),
-        col("word_count"))
+    clusterLabels(spark, sfDir, threshold,
+        docCols = Seq(size(split(col("text"), " ")).cast("long").as("word_count")))
       .withColumn("rk", row_number().over(w))
       .select(col("doc_id"), col("cluster_id"), col("word_count"),
         (col("rk") === 1).as("keep"))
+  }
+
+  /** (doc_id, cluster_id, docCols..., derived...) for EVERY document:
+    * q17 near-dup pairs → connected components → left join onto the
+    * documents scan, cluster_id = the component label, or the doc's own
+    * id when it has no pair. `docCols` are projected off the SAME
+    * documents scan, so per-doc attributes cost no second scan or join.
+    * `derived` columns are built from the cluster-id expression inside
+    * the same projection: Catalyst will not collapse a later projection
+    * that references the (non-cheap) coalesce twice, so deriving them
+    * afterwards would add a Project to the plan.
+    */
+  private def clusterLabels(
+      spark: SparkSession, sfDir: String, threshold: Double,
+      docCols: Seq[Column] = Nil,
+      derived: Column => Seq[Column] = _ => Nil): DataFrame = {
+    val pairs = TextOps.q17MinHashPairs(spark, sfDir, threshold)
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
+    val labels = connectedComponents(spark, pairs)
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id") +: docCols: _*)
+    val cid = coalesce(col("cid"), col("doc_id"))
+    docs
+      .join(
+        labels.select(col("node").as("doc_id"), col("label").as("cid")),
+        Seq("doc_id"), "left")
+      .select(Seq(col("doc_id"), cid.as("cluster_id")) ++
+        docs.columns.toSeq.tail.map(col) ++ derived(cid): _*)
   }
 
   /** Last q39 star-forest pin — released by the NEXT call's swap (the

@@ -145,11 +145,13 @@ object Relational {
     * per-side distincts: in-both ⇔ intersect member, p-only ⇔ except
     * member, every join row ⇔ one distinct union member. The
     * three-branch shape scanned lineitem and part three times each and
-    * ran three distinct-shuffles; this is one scan + one distinct
-    * exchange per side (whose hash partitioning the join then reuses),
-    * and the three output rows are unpivoted from the single aggregate
-    * row. Distinct sides make the join 1:1, so no multiplicity is
-    * introduced.
+    * ran three distinct-shuffles; this is one scan + two exchanges per
+    * side: the distinct hashes on k, and the null-safe join re-hashes
+    * on (coalesce(k, 0), isnull(k)) — Catalyst's rewrite of `<=>` into
+    * an equi-join key — so it cannot reuse the distinct's partitioning
+    * (plans/r10/q09_set_ops_after.txt). The three output rows are
+    * unpivoted from the single aggregate row. Distinct sides make the
+    * join 1:1, so no multiplicity is introduced.
     */
   def q09SetOps(spark: SparkSession, sfDir: String): DataFrame = {
     val liD = Tables.lineitem(spark, sfDir).select(col("l_partkey").as("k"))
@@ -253,82 +255,45 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("matched_view").as("view_event_id"))
   }
 
-  /** Exact interpolated percentiles per group over a VALUE-COUNTS sketch —
-    * the scale-safe replacement for Spark's `percentile`
-    * TypedImperativeAggregate (which buffers every value of a group in one
-    * reducer's memory: with 3 groups, 3 tasks each hold a third of
-    * lineitem — an executor OOM at 100 TB, and 47 s at sf0.1).
+  /** Exact interpolated percentiles per group — the scale-safe
+    * replacement for Spark's `percentile` TypedImperativeAggregate (which
+    * buffers every value of a group in one reducer's memory: with 3
+    * groups, 3 tasks each hold a third of lineitem — an executor OOM at
+    * 100 TB, and 47 s at sf0.1).
     *
-    * Shape: groupBy(group, value).count() — the shuffle carries one row
-    * per DISTINCT (group, value) — then the per-(group, measure) total
-    * (a 6-row aggregate off the same exchange, broadcast back) joins onto
-    * every value-count row, and a sorted STREAMING pass assigns cumulative
-    * ranks with O(1) state per group, emitting ONLY the rows whose
-    * [cum−cnt, cum) span covers a target rank (≤ 6 per group/measure);
-    * each target quantile then interpolates between its two bracketing
-    * values — rank (n−1)·q+1, exactly DuckDB's quantile_cont. A window
-    * cumsum would buffer each partition's full distinct-value set in
-    * WindowExec's row array (a spill at scale) and hand ALL ranked rows
-    * to the aggregate; the streaming pass replaces that with a constant
-    * per-group cursor and an ~18-row aggregate input (measured 2.07 →
-    * 1.79 s warm at sf0.1, interleaved A/B). Per-group work is bounded by
-    * distinct values, not rows.
+    * Shape: a RANGE-PARTITIONED PREFIX SUM over the unpivoted rows. The
+    * (g, tag, v) rows are range-partitioned on (g, tag, v) (sampled
+    * boundaries — every partition holds a contiguous value slice, so
+    * parallelism = N regardless of group count and a near-unique
+    * continuous measure never serializes on one reducer per group).
+    * Per-partition per-(g, tag) subtotals are collected to the driver
+    * (≤ N·|groups·measures| longs); their exclusive prefix offsets and
+    * per-(g, tag) totals are broadcast back. A sorted STREAMING pass then
+    * assigns cumulative ranks seeded at each group's offset, with O(1)
+    * state per group, and emits ONLY the rows whose rank is a target
+    * (≤ 6 per group/measure); each target quantile interpolates between
+    * its two bracketing values — rank (n−1)·q+1, exactly DuckDB's
+    * quantile_cont. PlanSpec asserts the range exchange and that a
+    * group's values really span partitions; PercentileEdgeSpec checks
+    * every edge shape against a driver-side sort-based brute force.
     *
-    * ADAPTIVE cumulative-rank shape (the r6 verdict's top item): the
-    * per-(group, measure) cumsum was the suite's last single-reducer-
-    * per-group structure — memory-safe (O(1) streaming state) but a
-    * wall-clock serialization that grows linearly with a group's
-    * distinct values (a near-unique continuous measure over a crawl).
-    * Below `escalateBytes` of source the exact one-plan shape above runs
-    * unchanged — the escalation's fixed extra jobs (range-boundary
-    * sample + subtotal collect) cost more than the tiny per-group sort
-    * saves. Above it, the RANGE-PARTITIONED PREFIX SUM runs instead:
-    * value-counts range-partitioned on (g, tag, v) (sampled boundaries —
-    * every partition holds a contiguous value slice, parallelism = N
-    * regardless of group count), per-partition per-(g, tag) subtotals
-    * collected to the driver (≤ N·|groups·measures| longs), exclusive
-    * prefix offsets broadcast back, and the SAME streaming bracketing
-    * pass seeded at each group's offset instead of 0. The decision reads
-    * only driver-side file statistics — the default path pays zero extra
-    * jobs. Both paths share every rank/interpolation definition, are
-    * oracle-equal (PercentileEdgeSpec runs the edge table through both),
-    * and the escalated plan is asserted shuffle-shaped in PlanSpec (range
-    * exchange, no per-(g, tag) hash exchange).
-    *
-    * CONSTRUCTION IS EAGER ON THE ESCALATED PATH (ADVICE r7): unlike
-    * every other constructor in the registry, building this DataFrame
-    * above the threshold runs two Spark jobs up front (range-boundary
-    * sampling and the subtotal collect — the driver prefix must exist
-    * before the result plan can reference its broadcast), so a failure
-    * over a bad input surfaces at BUILD time, not action time, and
-    * plan-only tooling (explain, dry-run registries) pays those two jobs.
-    * Deferring them into the closure would push the collect onto an
-    * executor; keeping them eager is the correct trade — documented so
-    * callers don't assume lazy construction.
+    * CONSTRUCTION IS EAGER (ADVICE r7): unlike every other constructor in
+    * the registry, building this DataFrame runs two Spark jobs up front
+    * (range-boundary sampling and the subtotal collect — the driver
+    * prefix must exist before the result plan can reference its
+    * broadcast), so a failure over a bad input surfaces at BUILD time,
+    * not action time, and plan-only tooling (explain, dry-run
+    * registries) pays those two jobs. Deferring them into the closure
+    * would push the collect onto an executor; keeping them eager is the
+    * correct trade — documented so callers don't assume lazy
+    * construction.
     */
   def q32Percentiles(spark: SparkSession, sfDir: String): DataFrame =
     q32Stages(spark, sfDir).result
 
-  /** Source-byte threshold above which q32 switches to the range-
-    * partitioned prefix sum; tests force either path by overriding.
-    * RE-CALIBRATED r10: the round-9 threshold (4 MiB) split a measured
-    * crossover that no longer exists — after the prefix-sum lean-out
-    * (raw-row range shuffle, totals folded into the offset broadcast,
-    * no value-counts pin) the escalated shape wins at EVERY measured
-    * scale (interleaved A/B, local[32], warm minima: sf0.001
-    * 0.49 vs 0.61 s, sf0.01 0.57 vs 0.67 s, sf0.1 1.46 vs 1.56 s — and
-    * at crawl scale it is the only shape whose parallelism does not
-    * collapse to the group count). −1 ⇒ production always escalates;
-    * the default one-plan shape is retained as the spec suite's
-    * independently-implemented cross-check (PercentileEdgeSpec forces
-    * both paths and asserts equality), not as a production tier.
-    */
-  private[graft] final val Q32EscalateBytes: Long = -1L
-
-  /** q32 with the escalation decision exposed (and injectable) — see
-    * q32Percentiles. `ranged` is the UNPERSISTED range-partitioned
-    * unpivoted-rows plan when escalated (PlanSpec asserts its exchange
-    * shape), None on the default path. Because nothing pins it,
+  /** q32 with its range-partitioned input exposed — see q32Percentiles.
+    * `ranged` is the UNPERSISTED range-partitioned unpivoted-rows plan
+    * (PlanSpec asserts its exchange shape). Because nothing pins it,
     * re-executing `ranged` re-samples its range boundaries: the pid ↔
     * value-slice layout a test observes is a fresh instance, not the
     * one the run's broadcast offsets were computed over (those were
@@ -337,49 +302,25 @@ object Relational {
     * the SHAPE guarantees (range exchange, contiguous slices), never
     * the run's concrete boundary values.
     */
-  private[graft] final case class PercentileStages(
-      result: DataFrame, escalated: Boolean, ranged: Option[DataFrame])
+  private[graft] final case class PercentileStages(result: DataFrame, ranged: DataFrame)
 
-  private[graft] def q32Stages(
-      spark: SparkSession, sfDir: String,
-      escalateBytes: Long = Q32EscalateBytes): PercentileStages = {
+  private[graft] def q32Stages(spark: SparkSession, sfDir: String): PercentileStages = {
     val li = Tables.lineitem(spark, sfDir)
 
     // Exact quantile_cont for BOTH measure columns in ONE pass: unpivot
-    // (tag, v) with stack (codegen'd, no shuffle), value-counts per
-    // (grp, tag, v), cumulative ranks per (grp, tag), then conditional
-    // interpolation aggregates — one scan + one value-count exchange +
-    // one window partitioning instead of two of each plus a join (the
-    // round-3 shape ran the whole machinery once per measure column).
+    // (tag, v) with stack (codegen'd, no shuffle), cumulative ranks per
+    // (grp, tag), then conditional interpolation aggregates — one scan +
+    // one range exchange for both measures, not one per measure column.
     val unp = li.select(
       col("l_returnflag").as("g"),
       expr("stack(2, 'price', cast(l_extendedprice as double), " +
         "'qty', cast(l_quantity as double)) as (tag, v)"))
       // quantile_cont skips NULL measures (both engines); dropping them
-      // here keeps the typed (String,String,Double,Long) bracketing rows
-      // primitive. Groups they belonged to are preserved by the
-      // group-universe left join in finalAgg (an all-null group must
-      // still emit a row with NULL percentiles — fuzz-gate find).
+      // here keeps the typed (String,String,Double) rows primitive.
+      // Groups they belonged to are preserved by the group-universe left
+      // join below (an all-null group must still emit a row with NULL
+      // percentiles — fuzz-gate find).
       .where(col("v").isNotNull)
-    // fixed-N repartition BELOW the value-counts agg: the sf0.1 parquet has
-    // 3 splits, so without it the partial agg hashes 1.2 M stacked rows
-    // (near-unique prices — the partial barely compresses) inside 3 scan
-    // tasks (measured 0.6 s of the 2.1 s quiet total). The explicit
-    // exchange provides exactly the distribution the agg needs — no second
-    // exchange appears — while moving every hash probe into 32 post-shuffle
-    // tasks; the scan stage is left doing scan + stack + shuffle write of
-    // ~25 MB. At cluster scale the scan has real parallelism and this
-    // exchange is the same one ENSURE_REQUIREMENTS would have inserted.
-    val vc = unp
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("g"), col("tag"), col("v"))
-      .groupBy(col("g"), col("tag"), col("v")).agg(count(lit(1)).as("cnt"))
-    // n per (g, tag) via a TINY aggregate broadcast-joined back, not a
-    // second unordered window: the wAll window paid a full extra pass
-    // over every distinct value for 6 rows of output (vc's exchange is
-    // reused across both consumers — AQE ReuseExchange — so the totals
-    // branch costs one tiny exchange, not a recount of the corpus).
-    val totals = vc.groupBy(col("g"), col("tag")).agg(sum(col("cnt")).as("n"))
 
     // the quantiles wanted, grouped by measure tag — ONE definition shared
     // by the streaming bracketing pass and the interpolation aggregates so
@@ -389,44 +330,92 @@ object Relational {
     val targetsByTag: Map[String, Array[Double]] =
       quantiles.groupBy(_._1).map { case (t, qs) => t -> qs.map(_._2).toArray }
 
-    // Cumulative ranks via a STREAMING per-group pass, not WindowExec: the
-    // window buffered every partition's rows in an UnsafeRowArray (spill
-    // past task memory at scale) and handed all ~600k ranked rows to the
-    // interpolation aggregate — for ≤ 6 bracketing rows per (g, tag). With
-    // n joined onto each row first (broadcast, codegen), the target ranks
-    // are known INSIDE the pass, so it emits only rows whose [cum−cnt, cum)
-    // span covers some target rank — O(1) memory per group, and the final
-    // aggregate reads ~18 rows instead of the full distinct-value set.
-    // The SAME pass serves both cumulative-rank shapes: seeded at 0 when a
-    // partition holds whole (g, tag) groups (default path), or at the
-    // group's broadcast prefix offset when a group spans range partitions
-    // (escalated path) — the rank arithmetic cannot diverge between them.
+    // Range-partitioned prefix sum over the RAW unpivoted rows: every
+    // partition holds a CONTIGUOUS (g, tag, v) slice (sampled
+    // boundaries), so cumulative ranks = per-partition local cumsum +
+    // a per-(partition, group) offset from the driver prefix of the
+    // ≤ nParts·|groups·measures| subtotals.
+    //
+    // The range shuffle carries raw rows (cnt = 1 each), not
+    // per-(g, tag, v) value-counts: at crawl scale a value-count agg
+    // saves nothing unless values repeat heavily, while its exchange is
+    // a full extra pass over the same bytes, and the subtotal collect
+    // already yields BOTH the prefix offsets and the per-(g, tag) totals,
+    // so n rides the same broadcast as the offsets (measured at sf0.1,
+    // 2.4M stacked rows, local[32]: 2.6–4.5 s with the agg → ~1.6 s).
     import spark.implicits._
-    def bracketPass(offset: (String, String) => Long)(
-        it: Iterator[(String, String, Double, Long, Long)])
-        : Iterator[(String, String, Double, Long, Long, Long)] = {
-      var curG: String = null
-      var curTag: String = null
-      var cum = 0L
-      var ranks: Array[Long] = Array.emptyLongArray
-      it.flatMap { case (g, tag, v, cnt, n) =>
-        if (g != curG || tag != curTag) {
-          curG = g; curTag = tag; cum = offset(g, tag)
-          // same arithmetic as qAgg below: pos = (n−1)·q, ranks
-          // floor(pos)+1 and ceil(pos)+1 (Catalyst floor/ceil on a
-          // double yield BIGINT, matched by toLong here)
-          ranks = targetsByTag(tag).flatMap { q =>
-            val pos = (n - 1) * q
-            Array(math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)
-          }
+    val nParts = spark.sessionState.conf.numShufflePartitions
+    val ranged = unp
+      .repartitionByRange(nParts, col("g"), col("tag"), col("v"))
+      .sortWithinPartitions(col("g"), col("tag"), col("v"))
+      .as[(String, String, Double)]
+    // `ranged` is deliberately NOT persisted: the subtotal and
+    // bracketing passes share ONE RDD instance (rrdd below), so the
+    // range boundaries are sampled once and the shuffle files are
+    // reused across both — the pid ↔ value-slice mapping is pinned by
+    // the shared ShuffleDependency, not by a cache. The second pass
+    // pays a shuffle read plus an in-partition re-sort; in exchange
+    // the operator keeps ZERO cross-call state and no storage pin.
+    val rrdd = ranged.rdd // one RDD instance: both passes share pids
+    val partials: Array[((Int, String, String), Long)] = rrdd
+      .mapPartitionsWithIndex { (pid, it) =>
+        val m = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
+        it.foreach { case (g, tag, _) =>
+          m.updateWith((g, tag))(s => Some(s.getOrElse(0L) + 1L))
         }
-        cum += cnt
-        val lo = cum - cnt
-        if (ranks.exists(r => lo < r && cum >= r))
-          Iterator.single((g, tag, v, cnt, n, cum))
-        else Iterator.empty
+        m.iterator.map { case ((g, tag), s) => ((pid, g, tag), s) }
       }
-    }
+      .collect() // ≤ nParts · |groups·measures| rows — driver-bounded
+    val byGroup = partials.groupBy { case ((_, g, tag), _) => (g, tag) }
+    val offsets: Map[(Int, String, String), Long] = byGroup
+      .flatMap { case ((g, tag), arr) =>
+        var acc = 0L
+        arr.sortBy(_._1._1).map { case ((pid, _, _), s) =>
+          val off = acc
+          acc += s
+          ((pid, g, tag), off)
+        }
+      }
+    // per-(g, tag) total n is the grand sum of the same subtotals
+    val totals: Map[(String, String), Long] =
+      byGroup.map { case (k, arr) => k -> arr.map(_._2).sum }
+    val bcOff = spark.sparkContext.broadcast((offsets, totals))
+
+    // Cumulative ranks via a STREAMING per-group pass, not WindowExec: a
+    // window buffers every partition's rows in an UnsafeRowArray (spill
+    // past task memory at scale) and hands every ranked row to the
+    // interpolation aggregate — for ≤ 6 bracketing rows per (g, tag).
+    // With n and the group's offset known INSIDE the pass, it emits only
+    // rows whose rank is a target — O(1) memory per group, and the final
+    // aggregate reads ~18 rows instead of the full value set. Output
+    // keeps the (g, tag, v, cnt, n, cum) bracketing-row shape qAgg reads.
+    val bracketed = spark.createDataset(
+      rrdd.mapPartitionsWithIndex { (pid, it) =>
+        val (offs, tots) = bcOff.value
+        var curG: String = null
+        var curTag: String = null
+        var cum = 0L
+        var n = 0L
+        var ranks: Array[Long] = Array.emptyLongArray
+        it.flatMap { case (g, tag, v) =>
+          if (g != curG || tag != curTag) {
+            curG = g; curTag = tag
+            cum = offs.getOrElse((pid, g, tag), 0L)
+            n = tots((g, tag))
+            // same arithmetic as qAgg below: pos = (n−1)·q, ranks
+            // floor(pos)+1 and ceil(pos)+1 (Catalyst floor/ceil on a
+            // double yield BIGINT, matched by toLong here)
+            ranks = targetsByTag(tag).flatMap { q =>
+              val pos = (n - 1) * q
+              Array(math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)
+            }
+          }
+          cum += 1
+          if (ranks.contains(cum)) Iterator.single((g, tag, v, 1L, n, cum))
+          else Iterator.empty
+        }
+      })
+      .toDF("g", "tag", "v", "cnt", "n", "cum")
 
     // 1-based continuous rank: pos = (n-1)*q + 1; the quantile sits
     // between the values at ranks floor(pos) and ceil(pos)
@@ -440,134 +429,28 @@ object Relational {
       val fr = max(when(isTag, pos - floor(pos))) // frac depends only on n: constant per (group, tag)
       (loVal + (hiVal - loVal) * fr).as(name)
     }
+    val agg = bracketed
+      .groupBy(col("g"))
+      .agg(
+        qAgg("price", 0.5, "p50_raw"),
+        qAgg("price", 0.95, "p95_raw"),
+        qAgg("qty", 0.25, "qty_p25_raw"))
     // group universe from the RAW scan: a group whose measures are all
     // NULL has no bracketing rows but still owns an output row (with
     // NULL percentiles — exactly what GROUP BY + quantile_cont yields).
     // Column-pruned single-column distinct, broadcast onto ≤ |groups|
-    // aggregate rows: negligible at any scale.
+    // aggregate rows: negligible at any scale. <=> join: NULL is itself
+    // a group key (GROUP BY keeps it; an equi-join would silently drop
+    // the null-flag group's percentiles).
     val universe = li.select(col("l_returnflag").as("g")).distinct()
-    def finalAgg(bracketed: DataFrame): DataFrame = {
-      val agg = bracketed
-        .groupBy(col("g"))
-        .agg(
-          qAgg("price", 0.5, "p50_raw"),
-          qAgg("price", 0.95, "p95_raw"),
-          qAgg("qty", 0.25, "qty_p25_raw"))
-      // <=> join: NULL is itself a group key (GROUP BY keeps it; an
-      // equi-join would silently drop the null-flag group's percentiles)
-      universe.join(broadcast(agg), universe("g") <=> agg("g"), "left")
-        .select(
-          universe("g").as("l_returnflag"),
-          round(col("p50_raw"), 2).as("p50"),
-          round(col("p95_raw"), 2).as("p95"),
-          round(col("qty_p25_raw"), 2).as("qty_p25"))
-        .orderBy(col("l_returnflag"))
-    }
-
-    // <=> on g: NULL is itself a group (an equi-join would silently drop
-    // every null-flag row here — fuzz-gate find, same class as finalAgg's)
-    val joined = vc.join(
-        broadcast(totals.withColumnRenamed("g", "tg").withColumnRenamed("tag", "ttag")),
-        col("g") <=> col("tg") && col("tag") === col("ttag"))
-      .drop("tg", "ttag")
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // escalation decision from driver-side file statistics only (no job):
-    // source bytes upper-bound the distinct values any one group can hold
-    val escalate =
-      li.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(escalateBytes)
-
-    if (!escalate) {
-      // Default shape: the per-group cumsum is single-reducer
-      // (sortWithinPartitions behind a fixed-N repartition on (g, tag) —
-      // AQE-exempt, the q17/q19 lesson); parallelism is bounded by group
-      // count, which below the escalation threshold costs less than the
-      // prefix sum's extra sample + subtotal jobs.
-      val bracketed = joined
-        .repartition(nParts, col("g"), col("tag"))
-        .sortWithinPartitions(col("g"), col("tag"), col("v"))
-        .select(col("g"), col("tag"), col("v"), col("cnt"), col("n"))
-        .as[(String, String, Double, Long, Long)]
-        .mapPartitions(bracketPass((_, _) => 0L))
-        .toDF("g", "tag", "v", "cnt", "n", "cum")
-      PercentileStages(finalAgg(bracketed), escalated = false, ranged = None)
-    } else {
-      // Range-partitioned prefix sum over the RAW unpivoted rows: every
-      // partition holds a CONTIGUOUS (g, tag, v) slice (sampled
-      // boundaries), so cumulative ranks = per-partition local cumsum +
-      // a per-(partition, group) offset from the driver prefix of the
-      // ≤ nParts·|groups·measures| subtotals.
-      //
-      // r10 lean-out: the round-9 shape first hash-aggregated the rows
-      // into per-(g, tag, v) value-counts (one extra exchange + agg), a
-      // MEMORY_AND_DISK RDD pin to serve that agg to three consumers,
-      // and a broadcast join attaching the per-(g, tag) total n to every
-      // row. All three are gone: the range shuffle carries the raw rows
-      // (cnt = 1 each — the bracketing arithmetic is unchanged, a run of
-      // equal values is just uncompressed), and the subtotal collect
-      // already yields BOTH the prefix offsets and the per-(g, tag)
-      // totals, so n rides the same broadcast as the offsets. Measured
-      // at sf0.1 (2.4M stacked rows, local[32]): 2.6–4.5 s → ~1.6 s, and
-      // the first-run (JIT-cold) gap shrinks with the stage count. The
-      // shuffle grows from |distinct values| to |rows| rows — narrow
-      // (two dict-encoded strings + a double) and at crawl scale the agg
-      // saved nothing unless values repeat heavily, while its exchange
-      // was a full extra pass over the same bytes.
-      val ranged = unp
-        .repartitionByRange(nParts, col("g"), col("tag"), col("v"))
-        .sortWithinPartitions(col("g"), col("tag"), col("v"))
-        .as[(String, String, Double)]
-      // `ranged` is deliberately NOT persisted: the subtotal and
-      // bracketing passes share ONE RDD instance (rrdd below), so the
-      // range boundaries are sampled once and the shuffle files are
-      // reused across both — the pid ↔ value-slice mapping is pinned by
-      // the shared ShuffleDependency, not by a cache. The second pass
-      // pays a shuffle read plus an in-partition re-sort; in exchange
-      // the operator keeps ZERO cross-call state and no storage pin at
-      // all (the round-9 vc pin's rebuild-strand class is structurally
-      // gone with the pin itself).
-      val rrdd = ranged.rdd // one RDD instance: both passes share pids
-      val partials: Array[((Int, String, String), Long)] = rrdd
-        .mapPartitionsWithIndex { (pid, it) =>
-          val m = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
-          it.foreach { case (g, tag, _) =>
-            m.updateWith((g, tag))(s => Some(s.getOrElse(0L) + 1L))
-          }
-          m.iterator.map { case ((g, tag), s) => ((pid, g, tag), s) }
-        }
-        .collect() // ≤ nParts · |groups·measures| rows — driver-bounded
-      val offsets: Map[(Int, String, String), Long] = partials
-        .groupBy { case ((_, g, tag), _) => (g, tag) }
-        .flatMap { case ((g, tag), arr) =>
-          var acc = 0L
-          arr.sortBy(_._1._1).map { case ((pid, _, _), s) =>
-            val off = acc
-            acc += s
-            ((pid, g, tag), off)
-          }
-        }
-      // per-(g, tag) total n — the quantity the round-9 broadcast join
-      // attached row-by-row — is the grand sum of the same subtotals
-      val totalsByGroup: Map[(String, String), Long] = partials
-        .groupBy { case ((_, g, tag), _) => (g, tag) }
-        .map { case (k, arr) => k -> arr.map(_._2).sum }
-      val bcOff = spark.sparkContext.broadcast((offsets, totalsByGroup))
-      val bracketed = spark.createDataset(
-        rrdd.mapPartitionsWithIndex { (pid, it) =>
-          val (offs, tots) = bcOff.value
-          // adapt raw rows to bracketPass's (g, tag, v, cnt, n) shape:
-          // cnt = 1, n memoized per group run (rows arrive group-sorted)
-          var cg: String = null
-          var ct: String = null
-          var n = 0L
-          val withCnt = it.map { case (g, tag, v) =>
-            if (g != cg || tag != ct) { cg = g; ct = tag; n = tots((g, tag)) }
-            (g, tag, v, 1L, n)
-          }
-          bracketPass((g, tag) => offs.getOrElse((pid, g, tag), 0L))(withCnt)
-        })
-        .toDF("g", "tag", "v", "cnt", "n", "cum")
-      PercentileStages(finalAgg(bracketed), escalated = true, ranged = Some(ranged.toDF()))
-    }
+    val result = universe.join(broadcast(agg), universe("g") <=> agg("g"), "left")
+      .select(
+        universe("g").as("l_returnflag"),
+        round(col("p50_raw"), 2).as("p50"),
+        round(col("p95_raw"), 2).as("p95"),
+        round(col("qty_p25_raw"), 2).as("qty_p25"))
+      .orderBy(col("l_returnflag"))
+    PercentileStages(result, ranged.toDF())
   }
 
   /** Scalar string function suite (all codegen'd builtins). */

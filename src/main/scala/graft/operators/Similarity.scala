@@ -336,8 +336,9 @@ object Similarity {
     * Spark job over the broadcast centroid arrays; the driver's own work
     * is reduced to the O(k) regroup of the returned (fine → cell) pairs.
     * Bit-identical to the local build (same nearestCells arithmetic, same
-    * fine-index order within each cell). Below `localThreshold` centroids
-    * the job overhead exceeds the scan and the local build is used.
+    * fine-index order within each cell — SimilaritySpec asserts it).
+    * Below `localThreshold` centroids the job overhead exceeds the scan
+    * and the local build is used.
     */
   private[graft] def buildCodebookDistributed(
       spark: SparkSession,
@@ -573,7 +574,7 @@ object Similarity {
     *  - assignment searches a TWO-LEVEL codebook — ⌈√k⌉ coarse cells, then
     *    the fine centroids of the `wCells` nearest cells — O(√k·w) per
     *    vector, i.e. O(n·n^(1/4)·w) total vs the flat scan's O(n·√n).
-    *    Measured (BenchDecompose `ivf` mode, 200k×64d uniform, k=448,
+    *    Measured (r3 one-off A/B, in git history; 200k×64d uniform, k=448,
     *    local[16]): flat assign 0.48 s → two-level 0.21 s (~100 vs 448
     *    distance evals per vector; the gap WIDENS with k — at k=10⁶ it is
     *    ~4·10³ vs 10⁶). On uniform vectors only ~47% of assignments match
@@ -649,8 +650,9 @@ object Similarity {
     // takeOrdered(1) would fetch — so the separate count and takeOrdered
     // jobs collapse into one; it is skipped entirely when the caller
     // pins k. q30 is the registry's longest driver-job chain and each
-    // fold is one fewer scheduler round-trip per call (see BenchDecompose
-    // `jobgap`).
+    // fold is one fewer scheduler round-trip per call (perfbench's
+    // queries trace: `query.q30_ivf_ann.jobs`, and the scheduler gaps
+    // as `spark.unattributed_s`).
     val sized: Option[(Long, Option[(Long, Array[Double])])] =
       if (kCentroids0 > 0) None
       else Some {

@@ -664,11 +664,12 @@ object TextOps {
   def q19NgramJaccard(spark: SparkSession, sfDir: String, threshold: Double = 0.3): DataFrame =
     q19Stages(spark, sfDir, threshold).result
 
-  /** q19's intermediate plans, exposed for stage-level decomposition
-    * (graft.BenchDecompose `jaccard` mode). The distributed stages are
-    * thunks: when the small-group fast path is chosen, constructing them —
-    * including the shingle cache (`docs`) and the df broadcast probe job —
-    * is skipped entirely. `usedApproxDfOrder` reports (after a distributed
+  /** q19's intermediate plans, exposed for the specs' stage-level checks
+    * (the full call's cost is perfbench's `query.q19_ngram_jaccard.*`).
+    * The distributed stages are thunks: when the small-group fast path
+    * is chosen, constructing them — including the shingle cache (`docs`)
+    * and the df broadcast probe job — is skipped entirely.
+    * `usedApproxDfOrder` reports (after a distributed
     * stage has been forced) whether the prefix order came from the
     * top-K-hot approximate tier rather than the full exact df broadcast;
     * `approxOrderTailDfBound` is then dfK, the K-th hottest mapped df —
@@ -811,9 +812,8 @@ object TextOps {
   private val lastQ19Cache =
     new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
 
-  /** Release the swapped-in shingle cache eagerly (tests and
-    * BenchDecompose; a sequential caller normally leaves it to the next
-    * q19 call's swap).
+  /** Release the swapped-in shingle cache eagerly (tests; a sequential
+    * caller normally leaves it to the next q19 call's swap).
     */
   private[graft] def releaseQ19Cache(): Unit = {
     val prev = lastQ19Cache.getAndSet(null)

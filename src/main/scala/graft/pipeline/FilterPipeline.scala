@@ -77,7 +77,8 @@ object FilterPipeline {
     }
     // toxicity gate: the alternation regex scans every char of every doc,
     // and it was the kernel's one unconditional regex pass (~30% of scrub
-    // time measured at 2.4M docs, BenchKernelParts r10). indexOf of the
+    // time measured at 2.4M docs in r10; perfbench's crawl trace reports
+    // the scrub cost as `kernel.scrub_us_per_doc`). indexOf of the
     // four literals is JIT-intrinsified and a STRICT SUPERSET of the
     // \b-bounded matches, so skipping on miss is byte-exact. The guards
     // must track `toxicityRe`'s word list.

@@ -154,7 +154,7 @@ class BlockEvictionSpec extends AnyFunSuite {
       s"terminal unpersist re-registered a pin on recompute: $reRegistered")
   }
 
-  // ---- q32 escalated-path value-counts pin ------------------------------
+  // ---- q32 range-partitioned prefix sum (pin-free) ----------------------
 
   private def writeLineitem(): String = {
     import spark.implicits._
@@ -173,13 +173,8 @@ class BlockEvictionSpec extends AnyFunSuite {
     dir
   }
 
-  private def q32Rows(df: org.apache.spark.sql.DataFrame): List[(String, Double, Double, Double)] =
-    df.collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-      .sortBy(_._1).toList
-
   test("q32 escalated path stays exact under chaos and holds zero storage pins") {
-    // r10: the escalated path's value-counts pin is GONE by construction
+    // r10: q32's value-counts pin is GONE by construction
     // (raw-row range shuffle; totals ride the offset broadcast), so the
     // old evict-the-pin race has nothing to catch. What remains worth
     // gating: the build+result sequence stays exact while the chaos
@@ -189,14 +184,12 @@ class BlockEvictionSpec extends AnyFunSuite {
     // impossible rather than correctly-released.
     val dir = writeLineitem()
     try {
-      val expected = q32Rows(Relational.q32Stages(spark, dir, escalateBytes = Long.MaxValue).result)
+      val expected = Q32Oracle.percentiles(spark, dir)
       (0 until 6).foreach { round =>
         val before = persistedIds()
         val chaos = new Chaos(before, terminal = round % 2 == 0)
         try {
-          val st = Relational.q32Stages(spark, dir, escalateBytes = -1L)
-          assert(st.escalated)
-          assert(q32Rows(st.result) == expected,
+          assert(Q32Oracle.rows(Relational.q32Percentiles(spark, dir)) == expected,
             s"q32 escalated diverged under chaos (round $round)")
         } finally chaos.shutdown()
         val leaked = newIdsSettled(before)

@@ -7,8 +7,8 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 /** Concurrent-call gate for the operators that pin intermediates
-  * (q19's cross-call shingle-cache handoff, q32's escalated-path
-  * value-counts pin). The pins are PLAIN per-call-owned RDD persists,
+  * (q19's cross-call shingle-cache handoff; q32's prefix sum, which
+  * once pinned its value-counts). The pins are PLAIN per-call-owned RDD persists,
   * never Dataset caches: a Dataset cache is keyed by canonicalized
   * plan, so concurrent SAME-INPUT calls share one CacheManager entry
   * and the first finisher's release strands a lazily re-persisted copy
@@ -16,8 +16,8 @@ import scala.concurrent.duration._
   * interleaving of concurrent calls must (a) keep every call's result
   * exact — q19's sibling swap may release the cache a lazy plan was
   * built over, which is a recompute, never a value change — and
-  * (b) strand nothing: q32's escalated path keeps ZERO cross-call
-  * state (its pin is terminally released inside the call), and q19's
+  * (b) strand nothing: q32 keeps ZERO cross-call state (no pin at
+  * all), and q19's
   * getAndSet chain releases exactly what it replaced, so at most the
   * last swapped-in shingle cache survives until the settle release.
   * At crawl scale these operators run from long-lived multi-tenant
@@ -62,7 +62,7 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
     finally pool.shutdown()
   }
 
-  // ---- q32: escalated-path caches (vc + ranged) ------------------------
+  // ---- q32: range-partitioned prefix sum -------------------------------
 
   private def writeLineitem(variant: Int): String = {
     import spark.implicits._
@@ -81,29 +81,17 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
     dir
   }
 
-  private def q32Rows(df: org.apache.spark.sql.DataFrame): List[(String, Double, Double, Double)] =
-    df.collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-      .sortBy(_._1).toList
-
   test("concurrent escalated q32 calls stay exact and strand no cache") {
     val dirs = (0 until 4).map(writeLineitem)
     try {
-      // expected per dir from the DEFAULT path (also cross-checks the two
-      // paths agree on fresh data); MaxValue forces it
-      val expected = dirs.map { d =>
-        d -> q32Rows(Relational.q32Stages(spark, d, escalateBytes = Long.MaxValue).result)
-      }.toMap
+      // expected per dir from the driver-side brute force
+      val expected = dirs.map(d => d -> Q32Oracle.percentiles(spark, d)).toMap
       val before = persistedIds()
 
       val got = withPool(4) { implicit ec =>
         val futs = (0 until 8).map { i =>
           val d = dirs(i % dirs.length)
-          Future {
-            val st = Relational.q32Stages(spark, d, escalateBytes = -1L)
-            assert(st.escalated, "forced escalation must take the prefix-sum path")
-            d -> q32Rows(st.result)
-          }
+          Future(d -> Q32Oracle.rows(Relational.q32Percentiles(spark, d)))
         }
         Await.result(Future.sequence(futs), 5.minutes)
       }
@@ -111,8 +99,7 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
         assert(rows == expected(d), s"concurrent escalated q32 diverged on $d")
       }
 
-      // no settle call: the escalated path keeps ZERO cross-call state —
-      // every pin is terminally released inside the call, so nothing may
+      // no settle call: q32 keeps ZERO cross-call state, so nothing may
       // remain persisted once the futures have all returned
       val leaked = newIdsSettled(before)
       assert(leaked.isEmpty, s"stranded q32 caches (RDD ids): $leaked")

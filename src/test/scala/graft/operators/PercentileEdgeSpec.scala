@@ -3,11 +3,13 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q32's streaming bracketing pass edge cases the sf oracle can't pin:
-  * n = 1 (both bracket ranks collapse to 1 and the interpolation
-  * fraction is 0), n = 2 with a fractional 0.95 position, and duplicate
-  * values whose count-span covers both bracket ranks in ONE row. All
-  * values chosen so quantile_cont arithmetic is exact in doubles.
+/** q32's range-partitioned prefix sum on the shapes the sf oracle can't
+  * pin, each checked against the driver-side sort-based brute force in
+  * [[Q32Oracle]]: n = 1 (both bracket ranks collapse to 1 and the
+  * interpolation fraction is 0), n = 2 with a fractional 0.95 position,
+  * duplicate values whose run covers both bracket ranks, degenerate
+  * range boundaries, more groups than partitions, skew, non-finite
+  * measures, seeded-random tables and real sf0.001 data.
   */
 class PercentileEdgeSpec extends AnyFunSuite {
   private lazy val spark = SparkSession.builder()
@@ -16,26 +18,25 @@ class PercentileEdgeSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def newDir(): String = java.nio.file.Files
-    .createDirectories(java.nio.file.Paths.get(
-      s"target/q32edge-${java.util.UUID.randomUUID().toString.take(8)}"))
-    .toAbsolutePath.toString
-
-  private def writeEdgeTable(): String = {
+  private def table(rows: Seq[(String, Double, Double)]): String = {
     import spark.implicits._
-    val dir = newDir()
-    Seq(
-      // group X: n = 1 -> every quantile is the value itself
-      ("X", 10.0, 5.0),
-      // group Y: n = 2 -> p50 midpoint, p95 = lo + 0.95*(hi-lo)
-      ("Y", 10.0, 1.0), ("Y", 20.0, 3.0),
-      // group Z: duplicates -> p50 ranks (2,3) land inside the count-3
-      // span of value 5 (one bracketing row carries both ranks)
-      ("Z", 5.0, 2.0), ("Z", 5.0, 2.0), ("Z", 5.0, 4.0), ("Z", 7.0, 4.0)
-    ).toDF("l_returnflag", "l_extendedprice", "l_quantity")
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val dir = java.nio.file.Files
+      .createDirectories(java.nio.file.Paths.get(
+        s"target/q32edge-${java.util.UUID.randomUUID().toString.take(8)}"))
+      .toAbsolutePath.toString
+    rows.toDF("l_returnflag", "l_extendedprice", "l_quantity")
+      .repartition(3).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     dir
   }
+
+  private val edgeRows = Seq(
+    // group X: n = 1 -> every quantile is the value itself
+    ("X", 10.0, 5.0),
+    // group Y: n = 2 -> p50 midpoint, p95 = lo + 0.95*(hi-lo)
+    ("Y", 10.0, 1.0), ("Y", 20.0, 3.0),
+    // group Z: duplicates -> p50 ranks (2,3) land inside the 3-row run
+    // of value 5
+    ("Z", 5.0, 2.0), ("Z", 5.0, 2.0), ("Z", 5.0, 4.0), ("Z", 7.0, 4.0))
 
   private val want = List(
     ("X", 10.0, 10.0, 5.0),
@@ -45,73 +46,50 @@ class PercentileEdgeSpec extends AnyFunSuite {
     // -> ranks (1,2) both value 2
     ("Z", 5.0, 6.7, 2.0))
 
-  private def run(df: org.apache.spark.sql.DataFrame) = df.collect()
-    .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-    .toList
-
   test("q32 exact percentiles: single-row, two-row, and duplicate-value groups") {
-    // the default (single-reducer-per-group) shape, forced explicitly —
-    // since r10 production always takes the prefix-sum path, and this
-    // shape survives as the suite's independent cross-implementation
-    val dir = writeEdgeTable()
+    // the hand-computed values pin the brute force itself, then the operator
+    assert(Q32Oracle.percentiles(edgeRows) == want)
+    val dir = table(edgeRows)
     try {
-      val st = Relational.q32Stages(spark, dir, escalateBytes = Long.MaxValue)
-      assert(!st.escalated, "MaxValue threshold must keep the default path")
-      val got = run(st.result)
+      val got = Q32Oracle.rows(Relational.q32Percentiles(spark, dir))
       assert(got == want, s"got $got")
     } finally graft.TinyInputs.delete(dir)
   }
 
-  test("q32 production default takes the prefix-sum path at every size") {
-    val dir = writeEdgeTable()
+  test("q32 escalated prefix-sum path: same edge cases, group runs split across range partitions") {
+    // with 8 shuffle partitions and 14 stacked (g, tag, v) rows the
+    // sampled boundaries place parts of one group's value run in
+    // different partitions, so the bracketing pass MUST consume the
+    // broadcast offsets to rank correctly (a zero-offset regression
+    // returns wrong quantiles here, not a crash). The split is asserted,
+    // not assumed.
+    val dir = table(edgeRows)
     try {
       val st = Relational.q32Stages(spark, dir)
-      assert(st.escalated, "r10: Q32EscalateBytes = -1 escalates unconditionally")
-      assert(run(st.result) == want)
+      val spread = st.ranged.rdd
+        .mapPartitionsWithIndex((pid, it) => it.map(r => ((r.getString(0), r.getString(1)), pid)))
+        .distinct().collect()
+        .groupBy(_._1).map(_._2.length)
+      assert(spread.max >= 2, s"no group run spans two partitions: $spread")
+      val got = Q32Oracle.rows(st.result)
+      assert(got == Q32Oracle.percentiles(spark, dir), s"got $got")
     } finally graft.TinyInputs.delete(dir)
   }
 
-  test("q32 escalated prefix-sum path: same edge cases, group runs split across range partitions") {
-    // escalateBytes = -1 forces the range-partitioned prefix sum; with 8
-    // shuffle partitions and 11 distinct (g, tag, v) keys the sampled
-    // boundaries place parts of one group's value run in different
-    // partitions, so the bracketing pass MUST consume the broadcast
-    // offsets to rank correctly (a zero-offset regression returns wrong
-    // quantiles here, not a crash)
-    val dir = writeEdgeTable()
-    try {
-      val st = Relational.q32Stages(spark, dir, escalateBytes = -1L)
-      assert(st.escalated, "escalateBytes = -1 must force the prefix-sum path")
-      val got = run(st.result)
-      assert(got == want, s"escalated got $got")
-    } finally graft.TinyInputs.delete(dir)
+  test("q32 equals the brute-force oracle on real sf0.001 data") {
+    val sf = s"${sys.props("user.home")}/testdata/sf0.001" // TESTDATA.md
+    assert(Q32Oracle.rows(Relational.q32Percentiles(spark, sf)) ==
+      Q32Oracle.percentiles(spark, sf))
   }
 
-  test("q32 escalated path matches the default path on real sf0.001 data") {
-    val dflt = run(Relational.q32Stages(
-      spark, "/root/testdata/sf0.001", escalateBytes = Long.MaxValue).result)
-    val esc = run(
-      Relational.q32Stages(spark, "/root/testdata/sf0.001", escalateBytes = -1L).result)
-    assert(esc == dflt, s"escalated $esc vs default $dflt")
-  }
-
-  test("q32 dual-path equality on degenerate and seeded-random shapes") {
-    // Shapes the oracle corpus and the edge table never hand the ESCALATED
-    // path: an all-equal table (boundary sampling degenerates to one key —
-    // every range partition but one is empty, offsets must still rank), more
-    // groups than shuffle partitions (many groups per value slice in the
-    // per-(partition, group) subtotals), duplicate skew where one value
-    // carries ~90% of a group's count, and a seeded-random mixture with
-    // negative prices. Contract: escalated ≡ default exactly — both paths
-    // share every rank/interpolation definition, so any divergence is a bug
-    // in the prefix-sum machinery itself.
-    import spark.implicits._
-    def table(rows: Seq[(String, Double, Double)]): String = {
-      val dir = newDir()
-      rows.toDF("l_returnflag", "l_extendedprice", "l_quantity")
-        .repartition(3).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      dir
-    }
+  test("q32 equals the brute-force oracle on degenerate, skewed and non-finite shapes") {
+    // Shapes the oracle corpus and the edge table never hand the prefix
+    // sum: an all-equal table (boundary sampling degenerates to one key —
+    // every range partition but one is empty, offsets must still rank),
+    // more groups than shuffle partitions (many groups per value slice in
+    // the per-(partition, group) subtotals), duplicate skew where one
+    // value carries ~90% of a group's count, and a seeded-random mixture
+    // with negative prices.
     val rnd = new scala.util.Random(7)
     val shapes: Seq[(String, Seq[(String, Double, Double)])] = Seq(
       "all-equal" -> Seq.fill(64)(("A", 5.0, 2.0)),
@@ -127,68 +105,35 @@ class PercentileEdgeSpec extends AnyFunSuite {
       // Non-finite measures (a crawl-scale quality score that divided by
       // zero): NaN sorts ABOVE +Inf in Spark's double ordering, so NaN
       // rows land at the top ranks and an interpolation whose bracket
-      // touches one goes NaN — the contract here is not a particular
-      // value but that BOTH paths (range boundaries sampled over NaN
-      // keys included) produce bit-identical output instead of the
-      // escalated path crashing or ranking NaN differently. -0.0 probes
-      // the group-key normalization both paths must share.
+      // touches one goes NaN; an Inf bracket interpolates to Inf. The
+      // range boundaries are sampled over NaN keys too. -0.0 probes the
+      // ordering's -0.0 == 0.0 rule.
       "non-finite" -> (Seq.fill(30)(("A", 2.0, 1.0)) ++ Seq(
         ("A", Double.NaN, 1.0), ("A", Double.PositiveInfinity, 2.0),
         ("A", Double.NegativeInfinity, 3.0), ("A", -0.0, Double.NaN),
         ("B", Double.NaN, Double.NaN)) ++
         (1 to 10).map(i => ("B", i.toDouble, 1.0))))
-    // bit-canonical comparison: tuple == is false for (NaN, NaN) even
-    // when the paths agree; doubleToLongBits folds every NaN to one
-    // pattern and still distinguishes -0.0 from 0.0
-    def bits(l: List[(String, Double, Double, Double)]) = l.map { case (g, a, b, c) =>
-      (g, java.lang.Double.doubleToLongBits(a),
-        java.lang.Double.doubleToLongBits(b), java.lang.Double.doubleToLongBits(c))
-    }
     shapes.foreach { case (name, rowsIn) =>
       val dir = table(rowsIn)
       try {
-        val dflt = Relational.q32Stages(spark, dir, escalateBytes = Long.MaxValue)
-        assert(!dflt.escalated, s"$name: MaxValue threshold must keep the default path")
-        val esc = Relational.q32Stages(spark, dir, escalateBytes = -1L)
-        assert(esc.escalated, s"$name: -1 threshold must force the prefix-sum path")
-        val (e, d) = (run(esc.result), run(dflt.result))
-        assert(bits(e) == bits(d), s"dual-path divergence on shape $name: esc=$e dflt=$d")
+        val got = Q32Oracle.rows(Relational.q32Percentiles(spark, dir))
+        val want = Q32Oracle.percentiles(rowsIn)
+        assert(Q32Oracle.bits(got) == Q32Oracle.bits(want),
+          s"oracle divergence on shape $name: got=$got want=$want")
       } finally graft.TinyInputs.delete(dir)
     }
   }
 
   test("q32 escalated path survives an empty table") {
-    import spark.implicits._
-    val dir = newDir()
-    try {
-      Seq.empty[(String, Double, Double)]
-        .toDF("l_returnflag", "l_extendedprice", "l_quantity")
-        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      val st = Relational.q32Stages(spark, dir, escalateBytes = -1L)
-      assert(st.escalated && st.result.collect().isEmpty)
-    } finally graft.TinyInputs.delete(dir)
+    val dir = table(Seq.empty)
+    try assert(Relational.q32Percentiles(spark, dir).collect().isEmpty)
+    finally graft.TinyInputs.delete(dir)
   }
 
-  test("q32 equals a sort-based brute-force quantile_cont on seeded random tables, both paths") {
-    // Independent oracle beyond the DuckDB SFs and the dual-path gate:
-    // sort each group's values driver-side and interpolate with the
-    // SAME formula (pos = (n−1)·q; lo + (hi−lo)·frac; round(_, 2) =
-    // BigDecimal.valueOf HALF_UP, what Spark's Round does for doubles) —
-    // IEEE ops in the same order are bit-identical across Catalyst
-    // codegen and Scala, so the comparison is exact equality, not a
-    // tolerance. Values are quarter-grid so sums/differences stay
-    // representable; duplicates and 1-row groups arise naturally from
-    // the small value ranges.
-    import spark.implicits._
-    def round2(d: Double): Double =
-      java.math.BigDecimal.valueOf(d)
-        .setScale(2, java.math.RoundingMode.HALF_UP).doubleValue
-    def quantileCont(vs: Array[Double], q: Double): Double = {
-      val pos = (vs.length - 1) * q
-      val lo = vs(math.floor(pos).toInt)
-      val hi = vs(math.ceil(pos).toInt)
-      lo + (hi - lo) * (pos - math.floor(pos))
-    }
+  test("q32 equals a sort-based brute-force quantile_cont on seeded random tables") {
+    // Values are quarter-grid so sums/differences stay representable;
+    // duplicates and 1-row groups arise naturally from the small value
+    // ranges.
     val rnd = new scala.util.Random(0x5eed32)
     (0 until 8).foreach { t =>
       val nGroups = 1 + rnd.nextInt(5)
@@ -196,20 +141,11 @@ class PercentileEdgeSpec extends AnyFunSuite {
         (s"G${rnd.nextInt(nGroups)}",
           (rnd.nextInt(8000) - 4000) / 4.0, (rnd.nextInt(200) + 1) / 4.0)
       }
-      val expected = rows.groupBy(_._1).toList.sortBy(_._1).map { case (g, rs) =>
-        val prices = rs.map(_._2).sorted.toArray
-        val qtys = rs.map(_._3).sorted.toArray
-        (g, round2(quantileCont(prices, 0.5)), round2(quantileCont(prices, 0.95)),
-          round2(quantileCont(qtys, 0.25)))
-      }
-      val dir = newDir()
-      rows.toDF("l_returnflag", "l_extendedprice", "l_quantity")
-        .repartition(3).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      val dir = table(rows)
       try {
-        val dflt = run(Relational.q32Stages(spark, dir, escalateBytes = Long.MaxValue).result)
-        val esc = run(Relational.q32Stages(spark, dir, escalateBytes = -1L).result)
-        assert(dflt == expected, s"table $t default path: got $dflt want $expected")
-        assert(esc == expected, s"table $t escalated path: got $esc want $expected")
+        val got = Q32Oracle.rows(Relational.q32Percentiles(spark, dir))
+        val want = Q32Oracle.percentiles(rows)
+        assert(got == want, s"table $t: got $got want $want")
       } finally graft.TinyInputs.delete(dir)
     }
   }

@@ -72,14 +72,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q32: percentiles plan has no whole-group-buffering aggregate") {
-    // the value-counts + rank-interpolation rewrite must never reintroduce
-    // Spark's Percentile TypedImperativeAggregate (ObjectHashAggregate /
+    // the rank-interpolation rewrite must never reintroduce Spark's
+    // Percentile TypedImperativeAggregate (ObjectHashAggregate /
     // SortAggregate over a per-group value buffer — an OOM at 100 TB).
-    // Since r10 the PRODUCTION plan is the range-partitioned prefix sum
-    // at every size: the bracketing pass runs eagerly on the shared
-    // range-shuffle RDD, so the result plan reads an ExistingRDD of
-    // bracketing rows (≤ 6 per group/measure) and scans parquet exactly
-    // once (the group-universe branch).
+    // The plan is the range-partitioned prefix sum at every size: the
+    // bracketing pass runs eagerly on the shared range-shuffle RDD, so
+    // the result plan reads an ExistingRDD of bracketing rows (≤ 6 per
+    // group/measure) and scans parquet exactly once (the group-universe
+    // branch).
     val df = Relational.q32Percentiles(spark, sf)
     df.collect() // finalize the adaptive plan
     val p = df.queryExecution.executedPlan.toString
@@ -96,41 +96,21 @@ class PlanSpec extends AnyFunSuite {
     // initial plan too, which would double-count the universe's scan)
     assert("Scan parquet".r.findAllIn(p.split("== Initial Plan ==")(0)).size == 1,
       "only the group-universe branch may rescan lineitem\n" + p)
-
-    // the retained DEFAULT shape (the spec suite's cross-implementation)
-    // keeps its round-6 properties: in-plan streaming bracketing pass and
-    // a totals branch that reuses the value-counts exchange
-    val dfD = Relational.q32Stages(spark, sf, escalateBytes = Long.MaxValue).result
-    dfD.collect()
-    val pD = dfD.queryExecution.executedPlan.toString
-    assert(!pD.contains("percentile") && !pD.contains("ObjectHashAggregate"), pD)
-    assert(!pD.contains("Window"), pD)
-    assert(pD.contains("MapPartitions"), "streaming bracketing pass\n" + pD)
-    val scans = "Scan parquet".r.findAllIn(pD).size
-    val reused = ("ReusedQueryStage".r.findAllIn(pD).size
-      + "ReusedExchange".r.findAllIn(pD).size)
-    assert(scans == 1 || reused >= 1,
-      s"totals branch must reuse vc's exchange, not rescan lineitem " +
-        s"(scans=$scans reused=$reused)\n" + pD)
   }
 
   test("q32 escalated: cumulative ranks ride a range exchange, not a per-group sort") {
-    // The prefix-sum escalation exists to kill the single-reducer-per-
-    // group cumsum. Two gates, one structural, one behavioral:
+    // The prefix sum exists to kill a single-reducer-per-group cumsum.
+    // Two gates, one structural, one behavioral:
     //  (a) the cumsum input is built over an `Exchange rangepartitioning`
     //      on (g, tag, v) — contiguous value slices, parallelism = N;
-    //  (b) at least one (g, tag) group's distinct values actually SPAN
-    //      multiple partitions. (b) is what a per-group hash shuffle —
-    //      the degenerate single-reducer shape — can never satisfy, and
-    //      it is robust to plan-string rendering: the totals branch
-    //      legitimately hashes its 6-row aggregate on (g, tag), so a
-    //      blanket "no hashpartitioning(g, tag)" regex over-rejects.
-    val st = Relational.q32Stages(spark, sf, escalateBytes = -1L)
-    assert(st.escalated)
-    val rangedPlan = st.ranged.get.queryExecution.executedPlan.toString
+    //  (b) at least one (g, tag) group's values actually SPAN multiple
+    //      partitions — what a per-group hash shuffle can never satisfy,
+    //      and robust to plan-string rendering.
+    val st = Relational.q32Stages(spark, sf)
+    val rangedPlan = st.ranged.queryExecution.executedPlan.toString
     assert(rangedPlan.contains("Exchange rangepartitioning"),
-      "escalated value-counts must be range-partitioned\n" + rangedPlan)
-    val groupSpread = st.ranged.get.rdd
+      "q32's cumsum input must be range-partitioned\n" + rangedPlan)
+    val groupSpread = st.ranged.rdd
       .mapPartitionsWithIndex { (pid, it) =>
         it.map(r => ((r.getString(0), r.getString(1)), pid))
       }
@@ -139,8 +119,8 @@ class PlanSpec extends AnyFunSuite {
     assert(groupSpread.max >= 2,
       s"no (g, tag) group spans >1 partition — the cumsum is still single-reducer " +
         s"per group (spreads: ${groupSpread.toSeq.sorted.mkString(",")})")
-    // the bracketing pass reads the persisted range-partitioned table,
-    // and the whole escalated plan must also run
+    // the bracketing pass reads the eager bracketing rows, and the whole
+    // plan must also run
     val resultPlan = st.result.queryExecution.executedPlan.toString
     assert(resultPlan.contains("Scan[obj#") || resultPlan.contains("Scan ExistingRDD") ||
       resultPlan.contains("InMemoryTableScan"), resultPlan)

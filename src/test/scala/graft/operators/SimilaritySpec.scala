@@ -141,6 +141,24 @@ class SimilaritySpec extends AnyFunSuite {
       "k-means|| init must be deterministic per input")
   }
 
+  test("distributed codebook build is bit-identical to the local build") {
+    // the Spark-job build must reproduce buildCodebook's cells exactly:
+    // same coarse picks, same fine → cell assignment, same fine-index
+    // order within each cell. localThreshold = 0 forces the job path at
+    // a test-sized k (600 seeded centroids → 25 cells of ~24).
+    val rnd = new scala.util.Random(0xc0deb00c)
+    val fine = Array.fill(600)(Array.fill(16)(rnd.nextGaussian()))
+    val local = Similarity.buildCodebook(fine, 4)
+    val dist = Similarity.buildCodebookDistributed(spark, fine, 4, localThreshold = 0)
+    assert(dist.coarse.length == local.coarse.length &&
+      dist.coarse.indices.forall(i => java.util.Arrays.equals(dist.coarse(i), local.coarse(i))))
+    assert(dist.cells.length == local.cells.length)
+    local.cells.indices.foreach { c =>
+      assert(dist.cells(c).sameElements(local.cells(c)),
+        s"cell $c: distributed ${dist.cells(c).mkString(",")} vs local ${local.cells(c).mkString(",")}")
+    }
+  }
+
   test("q26 bucket width scales with corpus size") {
     assert(Similarity.planesFor(64) == 2)
     assert(Similarity.planesFor(4096) == 6)

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * state, no driver materialization) and drives:
   *
   *  - q32 over 6M- and 60M-row lineitem twins (10×/100× sf0.1; the
-  *    4 MiB escalation threshold is exceeded by both, so the
-  *    range-partitioned prefix-sum path carries them). Exactness is
+  *    range-partitioned prefix sum, q32's only path). Exactness is
   *    checked OUT-OF-BAND by tools/scale_q32_oracle.py (DuckDB
   *    quantile_cont over the same parquet).
   *  - q17 (global 0.7) and q19 (within-source 0.3) over a 2.4M-doc
@@ -211,14 +210,13 @@ object ScaleProbe {
             .parquet(s"$dir/lineitem.parquet")
           println(s"PROBE gen done docs=$nDocs lineitem=$nLi")
         case "q32" =>
-          val stages = graft.operators.Relational.q32Stages(spark, dir)
-          println(s"PROBE q32 escalated=${stages.escalated}")
+          val result = graft.operators.Relational.q32Percentiles(spark, dir)
           val t0 = System.nanoTime()
-          val rows = stages.result.collect()
+          val rows = result.collect()
           val dt = (System.nanoTime() - t0) / 1e9
           println(f"PROBE q32 rows=${rows.length} wall=$dt%.2f s")
           rows.sortBy(r => Option(r.getString(0)).getOrElse("")).foreach(r => println(s"PROBE q32 ROW $r"))
-          stages.result.coalesce(1).write.mode("overwrite").parquet(s"$dir/q32_result.parquet")
+          result.coalesce(1).write.mode("overwrite").parquet(s"$dir/q32_result.parquet")
         case "q17melt" | "q17ppj" | "q17auto" =>
           // beyond-cap fallback audits: caps zeroed so the chosen
           // fallback carries the whole result; exactness asserted the

@@ -11,8 +11,8 @@
 #  - q19 (within-source 0.3): same audit, per-source;
 #  - q39 (cluster resolution): every doc's label compared against a
 #    driver union-find over the collected (q17-audited) pair set;
-#  - q32: escalated percentile path, checked value-exact against a
-#    DuckDB quantile_cont oracle (tools/scale_q32_oracle.py).
+#  - q32: range-partitioned prefix-sum percentiles, checked value-exact
+#    against a DuckDB quantile_cont oracle (tools/scale_q32_oracle.py).
 #
 # The 100x/20M tiers (multi-GB shuffles, -Xmx24g direct-java launches)
 # stay manual — see ROADMAP round 8 and the ScaleProbe scaladoc.
