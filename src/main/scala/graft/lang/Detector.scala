@@ -507,24 +507,6 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
     if (denom <= 0) 0.0 else 1.35 / denom.toDouble
   }
 
-  /** Popularity reorder among near-ties (reference:
-    * src/detector/mod.rs:383-431): keep langs with p ≥ p1 − d, pick the
-    * minimum ordinal (= most popular). `probs` must come from the latest
-    * `probabilities` call.
-    */
-  def reorderPick(probs: ArrayBuffer[Scored], d: Double): Int = {
-    val reorderProb = probs(0).prob - d
-    var lim = probs.indexWhere(_.prob < reorderProb)
-    if (lim == -1) lim = probs.length
-    var best = probs(0).langId
-    var i = 1
-    while (i < lim) {
-      if (probs(i).langId < best) best = probs(i).langId
-      i += 1
-    }
-    best
-  }
-
   def detectTopOneReordered(text: String): Option[Int] = {
     val n = detectInPlace(text)
     if (n == 0) None else Some(reorderPickInPlace(defaultReorderDistance))

@@ -172,13 +172,12 @@ final class ProbTable private (
 }
 
 object ProbTable {
-  val empty: ProbTable = build(Map.empty)
-
-  /** Incremental builder with pre-sized arrays: the streaming model-pack
-    * path (ModelIO.packDistributed) feeds (key, langId-sorted postings)
-    * entries one at a time from a toLocalIterator, so the driver never
-    * holds more than the FINAL table arrays (which are the broadcast
-    * payload itself) plus one entry.
+  /** The one way to build a ProbTable, shared by both packers:
+    * `PackedModel.fromModels` feeds it from its per-size driver maps, and
+    * `ModelIO.packDistributed` streams (key, postings) entries into it
+    * from a `toLocalIterator`, so the driver holds only the FINAL table
+    * arrays (the broadcast payload itself) plus one entry. `nKeys` and
+    * `nPostings` pre-size the arrays and must be exact.
     */
   final class Builder(nKeys: Int, nPostings: Int) {
     private var cap = 16
@@ -219,43 +218,6 @@ object ProbTable {
       new ProbTable(keys, starts, lens, postLangs, postProbs)
     }
   }
-
-  /** Build from ngramHash → sorted postings ((langId, lnProb)). */
-  def build(entries: Map[Long, Array[(Int, Double)]]): ProbTable = {
-    var cap = 16
-    while (cap < entries.size * 2) cap <<= 1
-    val keys = new Array[Long](cap)
-    val starts = new Array[Int](cap)
-    val lens = new Array[Int](cap)
-    val nPost = entries.valuesIterator.map(_.length).sum
-    val postLangs = new Array[Short](nPost)
-    val postProbs = new Array[Float](nPost)
-    val mask = cap - 1
-    var cursor = 0
-    entries.foreach { case (key0, postings) =>
-      val key = if (key0 == 0L) NgramHash.ZeroRemap else key0
-      var h = key
-      h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-      h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-      var i = (h ^ (h >>> 31)).toInt & mask
-      while (keys(i) != 0L) {
-        require(keys(i) != key, s"ngram hash collision on $key")
-        i = (i + 1) & mask
-      }
-      keys(i) = key
-      starts(i) = cursor
-      lens(i) = postings.length
-      val sorted = postings.sortBy(_._1)
-      var j = 0
-      while (j < sorted.length) {
-        postLangs(cursor) = sorted(j)._1.toShort
-        postProbs(cursor) = sorted(j)._2.toFloat
-        cursor += 1
-        j += 1
-      }
-    }
-    new ProbTable(keys, starts, lens, postLangs, postProbs)
-  }
 }
 
 /** The merged runtime model: 5 char-gram tables + a wordgram table +
@@ -268,8 +230,6 @@ final class PackedModel(
     val wordgramFloor: Double,
     val charTables: Array[ProbTable], // index 0..4 = uni..five
     val wordTable: ProbTable,
-    /** langIds that have a trained model (used by fixtures/tests) */
-    val modeledLangs: Array[Int],
     /** schema/version hash checked at load (reference: src/bin_storage.rs:18) */
     val schemaHash: Long,
     /** per-langId sorted hashes of high-frequency words (wordgram ln-prob ≥
@@ -313,71 +273,96 @@ object PackedModel {
     h
   }
 
-  /** Merge per-language models into the runtime model, mirroring
-    * `BinStorage::add` + `finalize` (reference: src/bin_storage.rs:53-111):
-    *  - char floor per lang = ln(1/#unigrams), then normalize by subtracting
-    *    (max floor + 0.05);
-    *  - wordgram floor = min(0.0, min over entries of lnProb·4.0);
-    *  - postings sorted by langId.
+  /** Stopword threshold: a word is a stopword of a language when its
+    * wordgram ln-prob is at least ln(1%).
+    */
+  val StopwordMinLogProb: Double = math.log(0.01)
+
+  /** The `BinStorage::finalize` step both packers end in
+    * (reference: src/bin_storage.rs:100-111):
+    *  - char floor per lang = ln(1/#unigrams), normalized by subtracting
+    *    (max floor + 0.05); a language without unigrams has no model and
+    *    keeps a floor of −∞;
+    *  - wordgram floor = min(0.0, min wordgram lnProb·4.0);
+    *  - stopword sets sorted for `isStopword`'s binary search.
+    *
+    * @param uniCounts      per langId, distinct unigrams in its model
+    * @param minWordLogProb least wordgram ln-prob over all languages
+    *                       (+∞ when no language has wordgrams)
+    * @param stopwords      per langId, hashes of words whose wordgram
+    *                       ln-prob is ≥ StopwordMinLogProb
+    * @param tables         0..4 = uni..five char tables, 5 = wordgrams
+    */
+  def finalizeModel(
+      uniCounts: Array[Long],
+      minWordLogProb: Double,
+      stopwords: Array[Array[Long]],
+      tables: Array[ProbTable]
+  ): PackedModel = {
+    val floors = uniCounts.map(c =>
+      if (c > 0) math.log(1.0 / c.toDouble) else Double.NegativeInfinity)
+    val maxFloor = floors.max + 0.05
+    floors.mapInPlace(_ - maxFloor)
+    stopwords.foreach(java.util.Arrays.sort)
+    new PackedModel(
+      nLangs = uniCounts.length,
+      charFloors = floors,
+      wordgramFloor = math.min(0.0, minWordLogProb * 4.0),
+      charTables = tables.take(5),
+      wordTable = tables(5),
+      schemaHash = registryHash,
+      stopwordHashes = stopwords
+    )
+  }
+
+  /** Merge per-language models into the runtime model on the driver,
+    * mirroring `BinStorage::add` (reference: src/bin_storage.rs:53-98):
+    * every n-gram string is hashed and collision-checked, its postings
+    * sorted by langId into one ProbTable per size, then `finalizeModel`.
     *
     * @param models langId → 6 maps (uni,bi,tri,quadri,five,word), each
     *               ngramString → ln(relative frequency)
     */
   def fromModels(models: Seq[(Int, Array[Map[String, Double]])]): PackedModel = {
     val n = ScriptLang.count
-    val floors = Array.fill(n)(Double.NegativeInfinity)
-    var wordFloor = 0.0
+    val uniCounts = new Array[Long](n)
+    var minWord = Double.PositiveInfinity
+    val stopwords = Array.fill(n)(Array.emptyLongArray)
     // per size: hash → buffer of (lang, prob)
     val acc = Array.fill(6)(mutable.LongMap.empty[mutable.ArrayBuffer[(Int, Double)]])
     val seenStrings = Array.fill(6)(mutable.HashMap.empty[Long, String])
 
     models.foreach { case (langId, sizes) =>
       require(sizes.length == 6, "model must have 6 ngram sizes")
+      uniCounts(langId) = sizes(0).size.toLong
+      val stops = mutable.ArrayBuilder.make[Long]
       var s = 0
       while (s < 6) {
-        val m = sizes(s)
-        if (s == 0) floors(langId) = math.log(1.0 / m.size.toDouble)
-        m.foreach { case (ngram, prob) =>
-          if (s == 5) wordFloor = math.min(wordFloor, prob * 4.0)
+        sizes(s).foreach { case (ngram, prob) =>
           val h = NgramHash.ofString(ngram)
           seenStrings(s).get(h) match {
             case Some(prev) => require(prev == ngram, s"hash collision: '$prev' vs '$ngram'")
             case None => seenStrings(s)(h) = ngram
           }
           acc(s).getOrElseUpdate(h, mutable.ArrayBuffer.empty) += ((langId, prob))
+          if (s == 5) {
+            minWord = math.min(minWord, prob)
+            if (prob >= StopwordMinLogProb) stops += h
+          }
         }
         s += 1
       }
+      stopwords(langId) = stops.result()
     }
 
-    val maxFloor = floors.max + 0.05
-    var i = 0
-    while (i < n) { floors(i) -= maxFloor; i += 1 }
-
-    def toTable(s: Int): ProbTable =
-      ProbTable.build(acc(s).iterator.map { case (k, v) => k -> v.toArray }.toMap)
-
-    // stopwords: words with relative frequency >= 1% in a language's
-    // wordgram model
-    val stopThreshold = math.log(0.01)
-    val stopwords = Array.fill(n)(Array.emptyLongArray)
-    models.foreach { case (langId, sizes) =>
-      val hs = sizes(5).collect {
-        case (w, p) if p >= stopThreshold => NgramHash.ofString(w)
-      }.toArray
-      java.util.Arrays.sort(hs)
-      stopwords(langId) = hs
+    val tables = acc.map { entries =>
+      val b = new ProbTable.Builder(entries.size, entries.valuesIterator.map(_.length).sum)
+      entries.foreachEntry { (key, postings) =>
+        val sorted = postings.sortBy(_._1)
+        b.add(key, sorted.map(_._1).toArray, sorted.map(_._2).toArray)
+      }
+      b.result()
     }
-
-    new PackedModel(
-      nLangs = n,
-      charFloors = floors,
-      wordgramFloor = wordFloor,
-      charTables = Array(toTable(0), toTable(1), toTable(2), toTable(3), toTable(4)),
-      wordTable = toTable(5),
-      modeledLangs = models.map(_._1).sorted.toArray,
-      schemaHash = registryHash,
-      stopwordHashes = stopwords
-    )
+    finalizeModel(uniCounts, minWord, stopwords, tables)
   }
 }

@@ -599,9 +599,6 @@ object ScriptLang {
     else if (cp < 0x110000) suppBlock(cp)((cp & 0xFF) * MaskWords + w)
     else 0L
 
-  /** word 0 of the mask (kept for tests/back-compat call sites). */
-  @inline def maskOf(cp: Int): Long = maskWordOf(cp, 0)
-
   // Row access for hot loops that read ALL MaskWords words of one cp:
   // one bounds-checked array + base pair instead of MaskWords dispatches.
   /** backing storage holding cp's mask row (valid for cp < 0x110000) */
@@ -619,19 +616,4 @@ object ScriptLang {
     */
   def belongs(langId: Int, cp: Int): Boolean =
     ((maskWordOf(cp, langId >> 6) >>> (langId & 63)) & 1L) == 1L
-
-  /** All languages a code point can belong to (for tests/diagnostics). */
-  def langsOfCp(cp: Int): Array[Int] = {
-    val out = Array.newBuilder[Int]
-    var w = 0
-    while (w < MaskWords) {
-      var m = maskWordOf(cp, w)
-      while (m != 0L) {
-        out += (w << 6) + java.lang.Long.numberOfTrailingZeros(m)
-        m &= m - 1
-      }
-      w += 1
-    }
-    out.result()
-  }
 }

@@ -1,7 +1,5 @@
 package graft.lang
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Word splitting + alphabet/script language prefilter.
   *
   * Re-derives the observable contract of the unvendored `alphabet_detector`
@@ -19,21 +17,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object Tokenizer {
 
-  /** A tokenized word: lowercased letter code points. */
-  final case class Word(cps: Array[Int]) {
-    def length: Int = cps.length
-    def utf8Bytes: Int = {
-      var n = 0; var i = 0
-      while (i < cps.length) {
-        val c = cps(i)
-        n += (if (c < 0x80) 1 else if (c < 0x800) 2 else if (c < 0x10000) 3 else 4)
-        i += 1
-      }
-      n
-    }
-    override def toString: String = new String(cps, 0, cps.length)
-  }
-
   private def isWordChar(cp: Int): Boolean = Character.isLetter(cp)
 
   private def isCombining(cp: Int): Boolean = {
@@ -42,30 +25,11 @@ object Tokenizer {
     t == Character.ENCLOSING_MARK
   }
 
-  /** Split a text into lowercased words (reference contract of
-    * `words::from_ch_ind`, train/src/writer.rs:36).
-    */
-  def words(text: String): ArrayBuffer[Word] = {
-    val out = ArrayBuffer.empty[Word]
-    if (text == null) return out // null ≡ empty (detector convention; fuzz-gate find)
-    val buf = new ArrayBuffer[Int](16)
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      if (isWordChar(cp)) buf += Character.toLowerCase(cp)
-      else if (isCombining(cp)) { /* dropped: fold "i̇" → "i" */ }
-      else if (buf.nonEmpty) { out += Word(buf.toArray); buf.clear() }
-      i += Character.charCount(cp)
-    }
-    if (buf.nonEmpty) out += Word(buf.toArray)
-    out
-  }
-
   /** Reusable flat token buffer: all words' code points in one array with
-    * per-word offsets — the allocation-free variant of `words` used by the
-    * detector hot path (one Detector per partition reuses one buffer).
-    * Word i spans `cps(offs(i)) until cps(offs(i+1))`.
+    * per-word offsets. The detector (one per partition) and the trainer
+    * (one per `trainLocal` call or Spark partition) each reuse one buffer,
+    * so tokenizing allocates nothing per word. Word i spans
+    * `cps(offs(i)) until cps(offs(i+1))`.
     */
   final class TokenBuf {
     var cps: Array[Int] = new Array[Int](1024)
@@ -105,15 +69,21 @@ object Tokenizer {
     def wordString(i: Int): String = new String(cps, start(i), len(i))
   }
 
-  /** Tokenize into a reusable buffer — no per-word allocation. */
+  /** The tokenizer: split `text` into lowercased words (reference
+    * contract of `words::from_ch_ind`, train/src/writer.rs:36) in `buf`,
+    * replacing its previous contents. Training and detection both read
+    * their words from here, so their n-grams cannot drift apart. Null is
+    * empty text.
+    */
   def tokenizeInto(text: String, buf: TokenBuf): Unit = {
     buf.clear()
+    if (text == null) return
     var i = 0
     val n = text.length
     while (i < n) {
       val cp = text.codePointAt(i)
       if (isWordChar(cp)) buf.addCp(Character.toLowerCase(cp))
-      else if (isCombining(cp)) { /* dropped */ }
+      else if (isCombining(cp)) { /* dropped: fold "i̇" → "i" */ }
       else buf.endWord()
       i += Character.charCount(cp)
     }
@@ -134,10 +104,15 @@ object Tokenizer {
     var n = 0
   }
 
-  /** Allocation-free prefilter over a tokenized buffer: fills `counts`
-    * (length ScriptLang.count, cleared here) and returns candidates into
-    * `candOut`, returning the candidate count. Same margin semantics as
-    * `prefilter`.
+  /** Language prefilter with a `marginPercent` (reference uses 95) over a
+    * tokenized buffer: keep the languages whose per-char orthography
+    * coverage is ≥ margin% of the best-covered language's coverage.
+    * Candidates are computed over ALL registered languages; the detector
+    * intersects with its configured set afterwards (reference:
+    * src/detector/mod.rs:235-239). Allocation-free: fills `counts` (length
+    * ScriptLang.count, cleared here) and writes the candidate ids,
+    * ascending (= popularity ordinal), into `candOut`, returning their
+    * count.
     */
   def prefilterInto(
       buf: TokenBuf,
@@ -225,56 +200,5 @@ object Tokenizer {
       l += 1
     }
     out
-  }
-
-  /** Result of the fulltext prefilter: the words plus candidate language ids
-    * within the margin, sorted ascending by id (= popularity ordinal).
-    */
-  final case class Prefiltered(words: ArrayBuffer[Word], candidates: Array[Int])
-
-  /** Language prefilter with a `marginPercent` (reference uses 95): keep the
-    * languages whose per-char orthography coverage is ≥ margin% of the
-    * best-covered language's coverage. Candidates are computed over ALL
-    * registered languages; the detector intersects with its configured set
-    * afterwards (reference: src/detector/mod.rs:235-239).
-    */
-  def prefilter(text: String, marginPercent: Int = 95): Prefiltered = {
-    val ws = words(text)
-    if (ws.isEmpty) return Prefiltered(ws, Array.emptyIntArray)
-
-    val counts = new Array[Long](ScriptLang.count)
-    var w = 0
-    while (w < ws.length) {
-      val cpsArr = ws(w).cps
-      var i = 0
-      while (i < cpsArr.length) {
-        // MaskWords bitmask loads per char; iterate only the set bits
-        val cp = cpsArr(i)
-        var v = 0
-        while (v < ScriptLang.MaskWords) {
-          var mask = ScriptLang.maskWordOf(cp, v)
-          while (mask != 0L) {
-            counts((v << 6) + java.lang.Long.numberOfTrailingZeros(mask)) += 1
-            mask &= mask - 1
-          }
-          v += 1
-        }
-        i += 1
-      }
-      w += 1
-    }
-
-    var max = 0L
-    var l = 0
-    while (l < counts.length) { if (counts(l) > max) max = counts(l); l += 1 }
-    if (max == 0L) return Prefiltered(ws, Array.emptyIntArray)
-
-    val out = new ArrayBuffer[Int](8)
-    l = 0
-    while (l < counts.length) {
-      if (counts(l) * 100 >= max * marginPercent) out += l
-      l += 1
-    }
-    Prefiltered(ws, out.toArray)
   }
 }

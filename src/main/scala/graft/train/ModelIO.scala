@@ -1,6 +1,6 @@
 package graft.train
 
-import graft.lang.{PackedModel, ScriptLang}
+import graft.lang.{PackedModel, ProbTable, ScriptLang}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,207 +48,72 @@ object ModelIO {
     * through `toLocalIterator` into pre-sized ProbTable builders. At no
     * point does the driver hold the model ROWS or the ngram STRINGS — its
     * peak footprint is the final primitive arrays (the broadcast payload
-    * itself) plus one in-flight partition. This replaces the round-2
-    * `collect()`-everything pack, which at 188-language scale (GBs of
-    * postings plus a string per ngram) made the driver the chokepoint of
-    * O20/O26/O27 (reference: src/detector/storage.rs:40-135 loads via mmap;
+    * itself) plus one in-flight partition; collecting the rows instead
+    * would make the driver the chokepoint of O20/O26/O27 at 188-language
+    * scale (GBs of postings plus a string per ngram) (reference:
+    * src/detector/storage.rs:40-135 loads via mmap;
     * broadcast-from-aggregated-parquet is the Spark shape of the same
-    * step).
+    * step). The floors and stopword sets come from three small
+    * aggregations and go through the same `PackedModel.finalizeModel` as
+    * the driver-side `fromModels`.
     */
   def packDistributed(spark: SparkSession, rows: DataFrame): PackedModel = {
     import spark.implicits._
-    val hashed = hashedOf(spark, rows)
-    val postings = postingsOf(spark, hashed)
-    val dims = dimsOf(spark, postings)
-
-    def builderFor(s: Int) = {
-      val (k, p) = dims.getOrElse(s, (0, 0))
-      new graft.lang.ProbTable.Builder(k, p)
-    }
-    val builders = Array.tabulate(6)(builderFor) // index: 0=word, 1..5=char
-
-    // stream: one partition in driver memory at a time
-    val it = postings
-      .select($"gsize", $"hash", $"n_distinct", $"posts")
-      .as[(Int, Long, Long, Array[(Int, Double)])]
-      .toLocalIterator()
-    while (it.hasNext) {
-      val (s, h, nDistinct, posts) = it.next()
-      require(nDistinct == 1L, s"ngram hash collision on key $h (size $s)")
-      builders(s).add(h, posts.map(_._1), posts.map(_._2))
-    }
-
-    val m = metaOf(spark, hashed)
-
-    new PackedModel(
-      nLangs = m.nLangs,
-      charFloors = m.charFloors,
-      wordgramFloor = m.wordgramFloor,
-      charTables = Array.tabulate(5)(s => builders(s + 1).result()),
-      wordTable = builders(0).result(),
-      modeledLangs = m.modeledLangs,
-      schemaHash = m.schemaHash,
-      stopwordHashes = m.stopwordHashes
-    )
-  }
-
-  /** (size, hash, lang_id, prob, ngram) rows — the shared front of both
-    * pack paths.
-    */
-  private def hashedOf(spark: SparkSession, rows: DataFrame): DataFrame = {
-    import spark.implicits._
-    rows
+    val hashed = rows
       .as[(String, Int, String, Double)]
       .map { case (lang, size, ngram, prob) =>
-        (size, graft.lang.NgramHash.ofString(ngram), ScriptLang.id(lang), prob, ngram)
+        // finalizeModel's table order: char sizes 1..5, then wordgrams
+        val table = if (size == 0) 5 else size - 1
+        (table, graft.lang.NgramHash.ofString(ngram), ScriptLang.id(lang), prob, ngram)
       }
-      .toDF("gsize", "hash", "lang_id", "prob", "ngram")
-  }
+      .toDF("table", "hash", "lang_id", "prob", "ngram")
 
-  /** Postings per (size, hash), langId-sorted (array_sort on the struct
-    * orders by lang_id first); countDistinct(ngram) ≠ 1 ⇔ hash collision.
-    */
-  private def postingsOf(spark: SparkSession, hashed: DataFrame): DataFrame = {
-    import spark.implicits._
-    hashed
-      .groupBy($"gsize", $"hash")
+    // postings per (table, hash), langId-sorted (array_sort on the struct
+    // orders by lang_id first); countDistinct(ngram) ≠ 1 ⇔ hash collision
+    val postings = hashed
+      .groupBy($"table", $"hash")
       .agg(
         countDistinct($"ngram").as("n_distinct"),
         array_sort(collect_list(struct($"lang_id", $"prob"))).as("posts"))
-  }
 
-  /** Per-size table dimensions for exact pre-allocation (tiny agg). */
-  private def dimsOf(spark: SparkSession, postings: DataFrame): Map[Int, (Int, Int)] = {
-    import spark.implicits._
-    postings
-      .groupBy($"gsize")
+    // per-table dimensions for exact pre-allocation (tiny agg)
+    val dims = postings
+      .groupBy($"table")
       .agg(count(lit(1)).as("n_keys"), sum(size($"posts")).as("n_posts"))
       .as[(Int, Long, Long)].collect()
       .map { case (s, k, p) => s -> ((k.toInt, p.toInt)) }.toMap
-  }
+    val builders = Array.tabulate(6) { t =>
+      val (k, p) = dims.getOrElse(t, (0, 0))
+      new ProbTable.Builder(k, p)
+    }
 
-  /** Everything in the runtime model that is not a ProbTable: per-language
-    * floors, wordgram floor, model-derived stopword sets, modeled-language
-    * list, schema hash. Small (O(registry) + stopwords).
-    */
-  final case class ModelMeta(
-      nLangs: Int,
-      charFloors: Array[Double],
-      wordgramFloor: Double,
-      modeledLangs: Array[Int],
-      schemaHash: Long,
-      stopwordHashes: Array[Array[Long]])
+    // stream: one partition in driver memory at a time
+    val it = postings
+      .select($"table", $"hash", $"n_distinct", $"posts")
+      .as[(Int, Long, Long, Array[(Int, Double)])]
+      .toLocalIterator()
+    while (it.hasNext) {
+      val (t, h, nDistinct, posts) = it.next()
+      require(nDistinct == 1L, s"ngram hash collision on key $h (table $t)")
+      builders(t).add(h, posts.map(_._1), posts.map(_._2))
+    }
 
-  private def metaOf(spark: SparkSession, hashed: DataFrame): ModelMeta = {
-    import spark.implicits._
-    val uniCounts = hashed.filter($"gsize" === 1)
-      .groupBy($"lang_id").agg(count(lit(1)).as("n"))
+    val uniCounts = new Array[Long](ScriptLang.count)
+    hashed.filter($"table" === 0)
+      .groupBy($"lang_id").agg(count(lit(1)))
       .as[(Int, Long)].collect()
-    val n = ScriptLang.count
-    val floors = Array.fill(n)(Double.NegativeInfinity)
-    uniCounts.foreach { case (lid, c) => floors(lid) = math.log(1.0 / c.toDouble) }
-    val maxFloor = floors.max + 0.05
-    var i = 0
-    while (i < n) { floors(i) -= maxFloor; i += 1 }
+      .foreach { case (lid, c) => uniCounts(lid) = c }
 
-    val wfRow = hashed.filter($"gsize" === 0).agg(min($"prob" * 4.0)).head()
-    val wordFloor = if (wfRow.isNullAt(0)) 0.0 else math.min(0.0, wfRow.getDouble(0))
+    val minWordRow = hashed.filter($"table" === 5).agg(min($"prob")).head()
+    val minWord = if (minWordRow.isNullAt(0)) Double.PositiveInfinity else minWordRow.getDouble(0)
 
-    val stopThreshold = math.log(0.01)
-    val stopwords = Array.fill(n)(Array.emptyLongArray)
-    hashed.filter($"gsize" === 0 && $"prob" >= stopThreshold)
-      .groupBy($"lang_id").agg(collect_list($"hash").as("hs"))
+    val stopwords = Array.fill(ScriptLang.count)(Array.emptyLongArray)
+    hashed.filter($"table" === 5 && $"prob" >= PackedModel.StopwordMinLogProb)
+      .groupBy($"lang_id").agg(collect_list($"hash"))
       .as[(Int, Array[Long])].collect()
-      .foreach { case (lid, hs) =>
-        java.util.Arrays.sort(hs)
-        stopwords(lid) = hs
-      }
+      .foreach { case (lid, hs) => stopwords(lid) = hs }
 
-    val modeled = hashed.select($"lang_id").distinct().as[Int].collect().sorted
-    ModelMeta(n, floors, wordFloor, modeled, PackedModel.registryHash, stopwords)
-  }
-
-  /** Per-size-sharded broadcast of a packed model (ROADMAP item 5 /
-    * VERDICT r3 #7): ONE Spark broadcast per ProbTable (index 0 =
-    * wordgram, 1..5 = char n-gram size) plus one for the small meta, so
-    * no single broadcast block carries the whole model — each shard is
-    * bounded by the LARGEST TABLE, not the model sum, which is what the
-    * torrent distribution and the executor's block manager see at real
-    * (multi-GB, 188-language OpenLID-class) model scale. Executors
-    * reassemble a PackedModel VIEW lazily on first use; the view shares
-    * the shard arrays (no copy).
-    */
-  final class ShardedModel(
-      val meta: org.apache.spark.broadcast.Broadcast[ModelMeta],
-      val tables: Array[org.apache.spark.broadcast.Broadcast[graft.lang.ProbTable]])
-      extends Serializable {
-    @transient private lazy val assembled: PackedModel = {
-      val m = meta.value
-      new PackedModel(
-        nLangs = m.nLangs,
-        charFloors = m.charFloors,
-        wordgramFloor = m.wordgramFloor,
-        charTables = Array.tabulate(5)(s => tables(s + 1).value),
-        wordTable = tables(0).value,
-        modeledLangs = m.modeledLangs,
-        schemaHash = m.schemaHash,
-        stopwordHashes = m.stopwordHashes)
-    }
-    /** The assembled runtime model (lazy per JVM; shards fetched on demand). */
-    def model: PackedModel = assembled
-  }
-
-  /** Pack model rows and broadcast them per-size-sharded. The six table
-    * passes run SEQUENTIALLY: each streams its postings through
-    * `toLocalIterator` into a pre-sized builder, broadcasts the finished
-    * table, and releases the builder before the next size starts — the
-    * driver's transient assembly footprint is bounded by the largest
-    * single table (plus one in-flight partition), never the model sum.
-    * The shuffled postings are cached (memory-and-disk) across the six
-    * filtered passes so the groupBy shuffle runs once.
-    */
-  def packShardedBroadcast(spark: SparkSession, rows: DataFrame): ShardedModel = {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val hashed = hashedOf(spark, rows).persist(StorageLevel.MEMORY_AND_DISK)
-    val postings = postingsOf(spark, hashed).persist(StorageLevel.MEMORY_AND_DISK)
-    val dims = dimsOf(spark, postings)
-    val sc = spark.sparkContext
-
-    val tables = new Array[org.apache.spark.broadcast.Broadcast[graft.lang.ProbTable]](6)
-    var s = 0
-    while (s < 6) {
-      val (k, p) = dims.getOrElse(s, (0, 0))
-      val b = new graft.lang.ProbTable.Builder(k, p)
-      val it = postings.filter($"gsize" === s)
-        .select($"hash", $"n_distinct", $"posts")
-        .as[(Long, Long, Array[(Int, Double)])]
-        .toLocalIterator()
-      while (it.hasNext) {
-        val (h, nDistinct, posts) = it.next()
-        require(nDistinct == 1L, s"ngram hash collision on key $h (size $s)")
-        b.add(h, posts.map(_._1), posts.map(_._2))
-      }
-      tables(s) = sc.broadcast(b.result())
-      s += 1
-    }
-
-    val meta = sc.broadcast(metaOf(spark, hashed))
-    postings.unpersist()
-    hashed.unpersist()
-    new ShardedModel(meta, tables)
-  }
-
-  /** Load model rows from Parquet and broadcast per-size-sharded. */
-  def loadShardedBroadcast(spark: SparkSession, path: String): ShardedModel = {
-    import spark.implicits._
-    val df = spark.read.parquet(path)
-    val hashes = df.select($"schema_hash").distinct().as[Long].collect()
-    require(
-      hashes.forall(_ == PackedModel.registryHash),
-      s"model schema hash mismatch: ${hashes.mkString(",")} vs ${PackedModel.registryHash}"
-    )
-    packShardedBroadcast(spark, df.select($"lang", $"size", $"ngram", $"logprob"))
+    PackedModel.finalizeModel(uniCounts, minWord, stopwords, builders.map(_.result()))
   }
 
   /** Pack (lang, size∈{0..5}, ngram, logprob) rows; size 0 = wordgram. */

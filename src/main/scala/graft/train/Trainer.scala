@@ -36,16 +36,24 @@ object Trainer {
   private def isHan(langId: Int): Boolean =
     ScriptLang.all(langId).scripts == Set("HAN")
 
-  /** Filter + normalize one line into training words for a language. */
-  def trainingWords(langId: Int, line: String): Seq[Array[Int]] = {
+  /** Filter + normalize one line into training words for a language.
+    * Tokenizes through `buf` (the caller's reused buffer); the returned
+    * words are copies, so they stay valid after the next call.
+    */
+  def trainingWords(langId: Int, line: String, buf: Tokenizer.TokenBuf): Seq[Array[Int]] = {
     val han = isHan(langId)
-    Tokenizer.words(line).iterator.flatMap { w =>
+    Tokenizer.tokenizeInto(line, buf)
+    val out = mutable.ArrayBuffer.empty[Array[Int]]
+    var w = 0
+    while (w < buf.nWords) {
+      val cps = buf.cps.slice(buf.start(w), buf.end(w))
       if (han) {
-        val kept = w.cps.filter(cp => ScriptLang.scriptOf(cp) == "HAN")
-        if (kept.nonEmpty) Some(kept) else None
-      } else if (w.cps.forall(cp => ScriptLang.belongs(langId, cp))) Some(w.cps)
-      else None
-    }.toSeq
+        val kept = cps.filter(cp => ScriptLang.scriptOf(cp) == "HAN")
+        if (kept.nonEmpty) out += kept
+      } else if (cps.forall(cp => ScriptLang.belongs(langId, cp))) out += cps
+      w += 1
+    }
+    out.toSeq
   }
 
   /** In-memory trainer for fixtures and unit tests: lines → 6 ngram maps
@@ -53,7 +61,8 @@ object Trainer {
     * `create_model_and_write_files` exactly at small scale.
     */
   def trainLocal(langId: Int, lines: IterableOnce[String]): Array[Map[String, Double]] = {
-    val words = lines.iterator.flatMap(l => trainingWords(langId, l)).toVector
+    val buf = new Tokenizer.TokenBuf
+    val words = lines.iterator.flatMap(l => trainingWords(langId, l, buf)).toVector
     val han = isHan(langId)
 
     def windowCounts(n: Int): mutable.HashMap[String, Long] = {
@@ -194,21 +203,24 @@ object Trainer {
       .select($"lang", $"line")
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .as[(String, String)]
-      .flatMap { case (lang, line) =>
-        langIds.get(lang) match {
-          case None => Iterator.empty
-          case Some(id) =>
-            val han = ScriptLang.all(id).scripts == Set("HAN")
-            val maxN = if (han) 2 else 5
-            trainingWords(id, line).iterator.flatMap { cps =>
-              val windows = (1 to maxN).iterator.flatMap { n =>
-                (0 to cps.length - n).iterator.map(i => (lang, n, new String(cps, i, n)))
+      .mapPartitions { rows =>
+        val buf = new Tokenizer.TokenBuf
+        rows.flatMap { case (lang, line) =>
+          langIds.get(lang) match {
+            case None => Iterator.empty
+            case Some(id) =>
+              val han = isHan(id)
+              val maxN = if (han) 2 else 5
+              trainingWords(id, line, buf).iterator.flatMap { cps =>
+                val windows = (1 to maxN).iterator.flatMap { n =>
+                  (0 to cps.length - n).iterator.map(i => (lang, n, new String(cps, i, n)))
+                }
+                val word =
+                  if (han) Iterator.empty
+                  else Iterator.single((lang, 0, new String(cps, 0, cps.length)))
+                windows ++ word
               }
-              val word =
-                if (han) Iterator.empty
-                else Iterator.single((lang, 0, new String(cps, 0, cps.length)))
-              windows ++ word
-            }
+          }
         }
       }
       .toDF("lang", "size", "ngram")

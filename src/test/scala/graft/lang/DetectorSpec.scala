@@ -106,8 +106,9 @@ class DetectorSpec extends AnyFunSuite {
   }
 
   test("tokenizer: combining marks dropped, case folded, punctuation splits") {
-    val ws = Tokenizer.words("indi̇vi̇si̇bi̇li̇ty I'm 3<8%")
-    assert(ws.map(_.toString) == Seq("indivisibility", "i", "m"))
+    val buf = new Tokenizer.TokenBuf
+    Tokenizer.tokenizeInto("indi̇vi̇si̇bi̇li̇ty I'm 3<8%", buf)
+    assert((0 until buf.nWords).map(buf.wordString) == Seq("indivisibility", "i", "m"))
   }
 
   test("determinism: repeated detection yields one answer") {
@@ -135,11 +136,10 @@ class DetectorSpec extends AnyFunSuite {
     // postings whose lang ids straddle 64-bit mask words (63, 64, 129)
     // must each be reachable through anyLangIn; a candidate mask with
     // only unrelated bits set must report false for every slot
-    val entries = Map(
-      NgramHash.ofString("xq") -> Array((63, -1.0), (64, -2.0)),
-      NgramHash.ofString("zw") -> Array((129, -3.0))
-    )
-    val t = ProbTable.build(entries)
+    val b = new ProbTable.Builder(nKeys = 2, nPostings = 3)
+    b.add(NgramHash.ofString("xq"), Array(63, 64), Array(-1.0, -2.0))
+    b.add(NgramHash.ofString("zw"), Array(129), Array(-3.0))
+    val t = b.result()
     assert(t.maskWords == 3) // covers id 129
     def mk(ids: Int*): Array[Long] = {
       val m = new Array[Long](ScriptLang.MaskWords)

@@ -35,14 +35,19 @@ class ScriptLangSpec extends AnyFunSuite {
     // training word under its own language's filter (otherwise the case
     // passes/fails on other languages' models only)
     val modeled = FixtureCorpus.vocab.keySet
+    val buf = new Tokenizer.TokenBuf
+    def words(text: String): Seq[String] = {
+      Tokenizer.tokenizeInto(text, buf)
+      (0 until buf.nWords).map(buf.wordString)
+    }
     GoldenFixtures.cases.filter(c => modeled(c._1)).foreach { case (lang, text, _) =>
       val id = ScriptLang.id(lang)
       val inVocab = FixtureCorpus.vocab(lang).exists { w =>
-        Tokenizer.words(text.toLowerCase).exists(_.toString == w)
+        words(text.toLowerCase).contains(w)
       }
       if (inVocab) {
-        val kept = Tokenizer.words(text).exists(w =>
-          w.cps.forall(cp => ScriptLang.belongs(id, cp)) ||
+        val kept = words(text).exists(w =>
+          w.codePoints().allMatch(cp => ScriptLang.belongs(id, cp)) ||
             ScriptLang.all(id).scripts == Set("HAN"))
         assert(kept, s"$lang golden '$text' is dropped by its own alphabet filter")
       }
@@ -51,13 +56,15 @@ class ScriptLangSpec extends AnyFunSuite {
 
   test("authored vocabularies survive their own alphabet filter (>= 95% per language)") {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    val buf = new Tokenizer.TokenBuf
     FixtureCorpus.vocab.foreach { case (lang, words) =>
       val id = ScriptLang.id(lang)
-      val kept = words.count(w => Trainer.trainingWords(id, w).nonEmpty)
+      val dropped = words.filter(w => Trainer.trainingWords(id, w, buf).isEmpty)
+      val kept = words.size - dropped.size
       val frac = kept.toDouble / words.size
       if (frac < 0.95)
         failures += f"$lang: only $kept/${words.size} ($frac%.2f) words pass the filter: " +
-          words.filter(w => Trainer.trainingWords(id, w).isEmpty).take(5).mkString(",")
+          dropped.take(5).mkString(",")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

@@ -37,9 +37,12 @@ class ModelIOSpec extends AnyFunSuite {
         dLoaded.probabilities(t).toList == dDirect.probabilities(t).toList,
         s"round-trip drift on '$t'")
     }
-    // floors and schema hash survive
+    // both packers end in the same finalizeModel: floors, stopword sets
+    // and schema hash agree
     assert(loaded.schemaHash == direct.schemaHash)
     assert(loaded.wordgramFloor == direct.wordgramFloor)
+    assert(loaded.charFloors.toSeq == direct.charFloors.toSeq)
+    assert(loaded.stopwordHashes.map(_.toSeq).toSeq == direct.stopwordHashes.map(_.toSeq).toSeq)
   }
 
   test("pruned model keeps topK per (lang,size) and still detects") {

@@ -5,10 +5,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Model-scale realism (ROADMAP item 4): fixture models are tiny, so this
-  * spec trains a 10× corpus across every vocabulary language, reports the
-  * broadcast footprint, and walks ModelIO.prune's size/accuracy curve —
+  * spec trains a 10× corpus across every vocabulary language and reports
+  * the broadcast footprint, walks ModelIO.prune's size/accuracy curve —
   * the knob a 188-language deployment turns to fit the executor-side
-  * model budget.
+  * model budget — and packs a Han model whose empty sizes exercise
+  * zero-size table builders in ModelIO.packDistributed. Streaming
+  * packDistributed at 240k entries is ModelIOSpec's job.
   */
 class ModelScaleSpec extends AnyFunSuite {
 
@@ -25,7 +27,8 @@ class ModelScaleSpec extends AnyFunSuite {
 
   test("10x corpus: broadcast footprint stays executor-friendly, detection holds") {
     val mb = bigModel.footprintBytes / 1e6
-    info(f"languages=${bigModel.modeledLangs.length} entries=${bigModel.entryCount} footprint=$mb%.1f MB")
+    val langs = bigModel.charFloors.count(_ != Double.NegativeInfinity)
+    info(f"languages=$langs entries=${bigModel.entryCount} footprint=$mb%.1f MB")
     // vocab-bounded fixtures plateau well under real-model footprints, but
     // the measurement machinery (and its growth vs the 200-line model) is
     // what future larger corpora will reuse
@@ -73,73 +76,16 @@ class ModelScaleSpec extends AnyFunSuite {
     modelDf.unpersist()
   }
 
-  test("per-size sharded broadcast: shards bounded by one table, assembled model equals packDistributed") {
-    import spark.implicits._
-    // synthetic model at load-test scale: 5 languages × 6 sizes × 20k
-    // entries (120k distinct n-grams, 600k postings) generated
-    // distributed — the string/posting volume goes through the same
-    // shuffle + toLocalIterator path a multi-GB OpenLID-class model would
-    val langs = Vector("eng", "deu", "fra", "spa", "rus")
-    val perSize = 20000L
-    val rows = spark.range(0, langs.size * 6 * perSize).map { i =>
-      val li = (i / (6L * perSize)).toInt
-      val rem = i % (6L * perSize)
-      val s = (rem / perSize).toInt // 0 = wordgram, 1..5 = char sizes
-      val j = rem % perSize
-      (langs(li), s, s"sg${s}_$j", -1.0 - (j % 97) * 0.05 - li * 0.01)
-    }.toDF("lang", "size", "ngram", "logprob")
-
-    val sharded = ModelIO.packShardedBroadcast(spark, rows)
-    val direct = ModelIO.packDistributed(spark, rows)
-    val m = sharded.model
-    assert(m.entryCount == direct.entryCount)
-    assert(m.footprintBytes == direct.footprintBytes)
-    assert(m.modeledLangs.sameElements(direct.modeledLangs))
-    assert(m.charFloors.sameElements(direct.charFloors))
-    assert(m.wordgramFloor == direct.wordgramFloor)
-
-    // posting-level equality on a deterministic probe sample
-    for (s <- 0 to 5; j <- 0 until 50) {
-      val key = graft.lang.NgramHash.ofString(s"sg${s}_$j")
-      val (ta, tb) =
-        if (s == 0) (m.wordTable, direct.wordTable)
-        else (m.charTables(s - 1), direct.charTables(s - 1))
-      val ia = ta.find(key)
-      val ib = tb.find(key)
-      assert(ia >= 0 && ib >= 0, s"probe sg${s}_$j missing")
-      val pa = (0 until ta.lens(ia)).map(k =>
-        (ta.postLangs(ta.starts(ia) + k), ta.postProbs(ta.starts(ia) + k)))
-      val pb = (0 until tb.lens(ib)).map(k =>
-        (tb.postLangs(tb.starts(ib) + k), tb.postProbs(tb.starts(ib) + k)))
-      assert(pa == pb, s"postings differ for sg${s}_$j")
-    }
-
-    // shard bound: >= 2 non-empty shards and no single broadcast carries
-    // the whole table payload — the property that keeps broadcast blocks
-    // (and the driver's transient assembly) bounded by ONE table at real
-    // model scale
-    def payload(t: graft.lang.ProbTable): Long =
-      t.keys.length.toLong * 8 + t.postLangs.length.toLong * 2 +
-        t.postProbs.length.toLong * 4
-    val shardSizes = sharded.tables.map(b => payload(b.value))
-    assert(shardSizes.count(_ > 0) == 6)
-    assert(shardSizes.max < shardSizes.sum, s"one shard dominates: ${shardSizes.mkString(",")}")
-
-    // executor-side reassembly: the handle serializes into a task closure
-    // and lazily assembles the view from the shard broadcasts
-    val sh = sharded
-    val execCounts = spark.range(0, 8).repartition(4)
-      .mapPartitions(_ => Iterator.single(sh.model.entryCount)).collect()
-    assert(execCounts.forall(_ == direct.entryCount))
-  }
-
-  test("sharded pack handles empty sizes (Han corpus: no wordgrams, bigram max)") {
+  test("packDistributed handles empty sizes (Han: no wordgrams, bigram max)") {
     import spark.implicits._
     val corpus = FixtureCorpus.corpus(nLinesPerLang = 30, langs = Seq("cmn_Hans"))
       .flatMap { case (l, ls) => ls.map(x => (l, x)) }.toDF("lang", "line")
-    val m = ModelIO.packShardedBroadcast(spark, Trainer.trainSpark(spark, corpus)).model
+    // the zero-key, zero-posting builders of sizes 0 and 3..5 must still
+    // yield empty, probe-able tables
+    val m = ModelIO.packDistributed(spark, Trainer.trainSpark(spark, corpus))
     assert(m.wordTable.size == 0, "Han trains no wordgrams")
     assert(m.charTables(0).size > 0 && m.charTables(1).size > 0)
     assert((2 to 4).forall(m.charTables(_).size == 0), "Han caps at bigrams")
+    assert(m.wordTable.find(graft.lang.NgramHash.ofString("x")) == -1)
   }
 }
