@@ -6,9 +6,11 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Language-ID over document tables: the langram-equivalent detector driven
-  * from a broadcast model inside a typed partition map — the north_star
-  * shape ("language-model tables broadcast rather than joined").
+/** Language-ID over document tables: the langram-equivalent detector over
+  * one broadcast model — the north_star shape ("language-model tables
+  * broadcast rather than joined"). Two surfaces apply it to rows: a typed
+  * partition map (q21, one Detector per partition) and the `detect_lang`
+  * SQL UDF (one Detector per executor thread).
   */
 object LangOps {
 
@@ -47,110 +49,29 @@ object LangOps {
       .toDF("doc_id", "lang_detected", "confidence")
   }
 
-  /** One Detector per executor THREAD (not per row, not per task): a
-    * Detector carries ~10 registry-sized scratch arrays (~20 KB at 346
-    * languages), so the round-3 per-row `new Detector` inside the udf
-    * closure cost ~10× the typed-map hot path in allocation alone. The
-    * pool is a JVM-WIDE map keyed by (applicationId, broadcast id) — both
-    * captured driver-side, both stable across every deserialized copy of
-    * the closure. Two prior
-    * shapes each failed one way: a `@transient lazy` field in the closure
-    * was rebuilt per TASK (ADVICE r4); a WeakHashMap keyed by Broadcast
-    * OBJECT IDENTITY still missed per task, because every task
-    * deserializes its own Broadcast wrapper even though `bc.value` is the
-    * one block-manager-cached model (ADVICE r6: measured 64 constructions
-    * at 64 tasks). `bc.id` is assigned driver-side and survives closure
-    * serialization, so all tasks of all queries over one broadcast share
-    * one ThreadLocal pool — O(threads) constructions for the JVM
-    * lifetime, asserted by LangOpsSpec via Detector.constructed with a
-    * bound per-task construction would fail.
-    *
-    * Retention/aliasing (the reason r5 moved OFF id keys): broadcast ids
-    * restart per SparkContext, so a JVM that hosts several successive
-    * contexts (local mode, test suites, notebook drivers) could both
-    * retain dead pools forever and alias a new context's id onto an old
-    * model's detectors. Only JVMs WITH a context can suffer that — an
-    * executor JVM lives and dies with exactly one application — and those
-    * are exactly the JVMs where a cleanup listener can be registered:
-    * registerSql installs one per context (driver-side) that clears the
-    * pool map on application end. The ThreadLocal initializer captures
-    * the MODEL, not the broadcast wrapper, so per-thread values never pin
-    * a wrapper; after clear(), the unreachable ThreadLocal keys let each
-    * thread's stale Detector be GC'd.
+  /** The calling thread's detect_lang Detector. A Detector carries
+    * registry-sized scratch arrays, so the UDF keeps one per executor
+    * thread rather than building one per row or per task. It is reused
+    * while it was built over `model` (object identity) and rebuilt
+    * otherwise. Within one executor, `bc.value` is the one
+    * block-manager-cached model for every task, so steady state is
+    * O(threads) constructions (LangOpsSpec bounds it). A new broadcast, a
+    * new SparkContext or a re-read evicted block hands in a different
+    * object and costs one rebuild. A detector is only ever used with the
+    * model object it was built over, so broadcast ids, which restart per
+    * SparkContext, can never alias it onto another model.
     */
-  private object DetectorPools {
-    // Keyed by "applicationId#broadcastId", NOT bc.id alone (ADVICE r8):
-    // the synchronous clear on hooking a new context can be raced by a
-    // straggler task thread of an abnormally-stopped predecessor — a
-    // detect_lang task surviving sc.stop() computeIfAbsent-re-inserts its
-    // pool AFTER the clear, and with a bare bc.id key the successor's
-    // reused id would alias it. The applicationId is captured DRIVER-SIDE
-    // in the UDF closure (registerSql), so a dead context's re-insertion
-    // lands under its own appId and can never collide with a successor's
-    // key; such an orphan entry is inert and is removed by the next
-    // context hook's clear.
-    private val pools =
-      new java.util.concurrent.ConcurrentHashMap[String, ThreadLocal[Detector]]()
-    @transient private var hookedCtx: org.apache.spark.SparkContext = _
-    /** One pool-clearing listener per SparkContext (idempotent). The
-      * handler also drops the context reference — otherwise hookedCtx
-      * would pin the STOPPED context (and its object graph) until the
-      * next registerSql in the JVM.
-      *
-      * BELT-AND-BRACES (ADVICE r7): the listener path alone relied on
-      * SparkListenerApplicationEnd draining before a successor context's
-      * first detect_lang call — a context killed with an undrained bus
-      * (abnormal stop) would leave stale pools that a reused bc.id in
-      * the next context ALIASES, handing out detectors built from the
-      * old model. So hooking a NEW context (registerSql runs on the new
-      * context before any UDF call can — Spark allows one live context
-      * per JVM, so a different `sc` proves any predecessor is dead)
-      * also clears synchronously, unconditionally: if the listener
-      * already fired this is a no-op on an empty map, and a fresh JVM's
-      * map is empty anyway. Cleared-then-rebuilt is always safe:
-      * computeIfAbsent rebuilds a pool from the CURRENT broadcast.
-      * Gate: CrossContextPoolSpec injects a poisoned stale pool and
-      * proves this clear is what keeps the successor context off it.
-      */
-    def installCleanup(sc: org.apache.spark.SparkContext): Unit = synchronized {
-      if (hookedCtx ne sc) {
-        pools.clear() // any predecessor's pools are dead; their ids may alias
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            pools.clear()
-            DetectorPools.synchronized { if (hookedCtx eq sc) hookedCtx = null }
-          }
-        })
-        hookedCtx = sc
-      }
-    }
-    def key(appId: String, bcId: Long): String = appId + "#" + bcId
-    def get(appId: String, bc: Broadcast[PackedModel]): Detector =
-      pools.computeIfAbsent(key(appId, bc.id), _ => {
-        val model = bc.value
-        ThreadLocal.withInitial(() => new Detector(model, DetectorConfig.default))
-      }).get()
-    def ids: Set[String] = {
-      val it = pools.keys()
-      val b = Set.newBuilder[String]
-      while (it.hasMoreElements) b += it.nextElement()
-      b.result()
-    }
-    def injectStale(k: String, tl: ThreadLocal[Detector]): Unit =
-      pools.put(k, tl)
-  }
+  private val detectors = new ThreadLocal[Detector]
 
-  /** Test-only observability for the cross-context aliasing gate
-    * (CrossContextPoolSpec): the live pool's broadcast ids, and a
-    * poisoned-entry injector standing in for "a pool the dead context
-    * never cleared" (abnormal stop, listener bus undrained).
-    */
-  private[graft] def detectorPoolIds: Set[String] = DetectorPools.ids
-  private[graft] def detectorPoolKey(appId: String, bcId: Long): String =
-    DetectorPools.key(appId, bcId)
-  private[graft] def injectStalePool(k: String, tl: ThreadLocal[Detector]): Unit =
-    DetectorPools.injectStale(k, tl)
+  private[graft] def detectorFor(model: PackedModel): Detector = {
+    val det = detectors.get()
+    if (det != null && (det.model eq model)) det
+    else {
+      val fresh = new Detector(model, DetectorConfig.default)
+      detectors.set(fresh)
+      fresh
+    }
+  }
 
   /** Register `detect_lang(text)` for SQL access, returning
     * STRUCT<lang STRING, confidence DOUBLE> (SURVEY.md §2.2 UDF surface).
@@ -159,13 +80,9 @@ object LangOps {
     */
   def registerSql(spark: SparkSession): Unit = {
     val bc = broadcastModel(spark)
-    // captured driver-side: every deserialized copy of this closure keys
-    // the pool under THIS application's id (see DetectorPools scaladoc)
-    val appId = spark.sparkContext.applicationId
-    DetectorPools.installCleanup(spark.sparkContext)
     val f = org.apache.spark.sql.functions.udf { (text: String) =>
       if (text == null) ("und", 0.0)
-      else DetectorPools.get(appId, bc).detectWithConfidence(text)
+      else detectorFor(bc.value).detectWithConfidence(text)
     }
     spark.udf.register("detect_lang", f)
   }

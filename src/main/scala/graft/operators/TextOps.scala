@@ -226,13 +226,14 @@ object TextOps {
     * joins that exchange array-laden rows 5–6 s, this shape ~1 s.
     */
   /** Beyond-cap fallback choice for q17 (see `q17MinHashPairsImpl` for the
-    * measured trade). `Auto` estimates BOTH designs' verify-shuffle bytes
-    * from cheap sub-linear aggregations at fallback time and picks the
-    * cheaper (ties → Melt); `Melt`/`Ppjoin` force a design when the caller
-    * knows the corpus shape.
+    * measured trade). `Auto`, the only production choice, estimates BOTH
+    * designs' verify-shuffle bytes from cheap sub-linear aggregations at
+    * fallback time and picks the cheaper (ties → Melt); `Melt`/`Ppjoin`
+    * force a design so specs and probes can check each against brute
+    * force.
     */
-  sealed trait Q17Fallback
-  object Q17Fallback {
+  private[graft] sealed trait Q17Fallback
+  private[graft] object Q17Fallback {
     case object Auto extends Q17Fallback
     case object Melt extends Q17Fallback
     case object Ppjoin extends Q17Fallback
@@ -337,18 +338,22 @@ object TextOps {
   private[graft] val lastQ17AutoEstimates =
     new java.util.concurrent.atomic.AtomicReference[Q17FallbackEstimates](null)
 
+  /** q17: MinHash+LSH near-duplicate pairs with exact Jaccard ≥
+    * `threshold` over 5-gram shingles. Beyond the probe caps it picks the
+    * cheaper of two exact verify designs from estimates taken at fallback
+    * time (`Q17Fallback.Auto`, see `q17MinHashPairsImpl`).
+    */
   def q17MinHashPairs(
-      spark: SparkSession, sfDir: String, threshold: Double = 0.7,
-      fallback: Q17Fallback = Q17Fallback.Auto): DataFrame =
-    q17MinHashPairsImpl(spark, sfDir, threshold, 4 << 20, 16L << 20, fallback)
+      spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame =
+    q17MinHashPairsImpl(spark, sfDir, threshold, 4 << 20, 16L << 20, Q17Fallback.Auto)
 
   /** q17 with injectable probe caps — MinHashSpec forces BOTH distributed
     * fallbacks (caps = 0) to keep each provably equal to the broadcast
     * path and to brute force.
     *
-    * `fallback` picks the beyond-cap design (the PUBLIC q17MinHashPairs
-    * defaults to Auto — see Q17Fallback/Q17FallbackEstimates; this Impl
-    * defaults to Melt so cap-forcing specs pin one design). The round-8
+    * `fallback` picks the beyond-cap design (q17MinHashPairs always passes
+    * Auto — see Q17Fallback/Q17FallbackEstimates; this Impl defaults to
+    * Melt so cap-forcing specs pin one design). The round-8
     * scale probe measured the trade on two 100×-sf0.1-shaped corpora
     * (ROADMAP round 8), and NEITHER design dominates:
     *
@@ -373,8 +378,7 @@ object TextOps {
     * question whose answer is corpus-dependent, so the public API
     * estimates both designs' bytes at fallback time and picks the
     * cheaper (Q17Fallback.Auto; ties and estimate failure → melt, the
-    * operator's own banding semantics), with Melt/Ppjoin as explicit
-    * overrides — not a guess hidden in the plan.
+    * operator's own banding semantics).
     */
   private[graft] def q17MinHashPairsImpl(
       spark: SparkSession, sfDir: String, threshold: Double,

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.lang.{Detector, DetectorConfig, PackedModel, ScriptLang}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The web-scale quality-filter pipeline (BASELINE.json north_star):
@@ -13,13 +13,19 @@ import org.apache.spark.sql.functions._
   * heuristic quality features, and the PII/toxicity scrub) → keep/drop
   * gate.
   *
+  * The batch path (`run`) and the streaming path
+  * (graft.streaming.StreamingFilter) share every per-row decision defined
+  * here: the detector configuration, the host parse, the fused kernel
+  * and the keep/drop gate. Only the dup rule's mechanism differs (window
+  * here, keyed state there).
+  *
   * Scale choices (SURVEY.md §4):
   *  - `html` is never read on this path (column pruning reaches the scan;
   *    asserted in PlanSpec);
   *  - the model is a broadcast variable, not a join;
   *  - ONE wide exchange total, keyed by (xxhash64(host), xxhash64(text)):
-  *    the content hash spreads a Zipf-hot host uniformly (skew defense —
-  *    see also `saltedRepartition`) while co-locating exact duplicates
+  *    the content hash spreads a Zipf-hot host uniformly (the skew
+  *    defense, measured by SkewSpec) while co-locating exact duplicates
   *    for the dedup window; the fused kernel runs downstream shuffle-free;
   *  - the only sort is the dedup window's per-reduce-partition sort on
   *    two longs + (ts, url) — a measured tie against the sort-free
@@ -40,18 +46,51 @@ object FilterPipeline {
     if (start < 0 || end < 0 || end < start) "" else s.substring(start + 3, end)
   }
 
-  final case class Gates(
-      minConfidence: Double = 0.5,
-      maxPerplexity: Double = 1e4,
-      minWords: Int = 20,
-      maxRepetitionRatio: Double = 0.3,
-      /** fraction of probed n-grams that hit the model for the detected
-        * language — the OOV/perplexity-style gate that catches gibberish
-        * whose n-grams are simply absent from every model (absent n-grams
-        * carry no floor penalty, reference: src/detector/mod.rs:110-113).
-        */
-      minCoverage: Double = 0.2
-  )
+  /** Detector configuration of both pipelines: candidates restricted to
+    * the languages the crawl carries.
+    */
+  val detectorConfig: DetectorConfig = DetectorConfig.default.copy(
+    languages = PagesGen.pipelineLangs.map(ScriptLang.id).toSet)
+
+  /** The host a page is deduplicated under: the text after the FIRST
+    * `://` (the whole url when there is none), up to the first `/`; a null
+    * url is the empty url. `hostCol` is the same parse as a Column for the
+    * dedup key; PipelineSpec pins the two equal.
+    */
+  def host(url: String): String = {
+    val u = if (url == null) "" else url
+    val i = u.indexOf("://")
+    val rest = if (i < 0) u else u.substring(i + 3)
+    val j = rest.indexOf('/')
+    if (j < 0) rest else rest.substring(0, j)
+  }
+
+  def hostCol(url: Column): Column = {
+    val u = coalesce(url, lit(""))
+    val i = locate("://", u)
+    substring_index(u.substr(when(i > 0, i + 3).otherwise(1), length(u)), "/", 1)
+  }
+
+  /** The keep/drop gate of both pipelines: `drop_reason` is the first rule
+    * a row fails (null when it passes all) and `keep ⇔ drop_reason IS
+    * NULL`. `isDup` marks a row that lost the host-scoped exact-dup rule.
+    */
+  def gate(docs: DataFrame, isDup: Column): DataFrame =
+    docs
+      .withColumn(
+        "drop_reason",
+        when(isDup, "dup")
+          .when(col("word_count") < 20, "too_short")
+          .when(col("repetition_ratio") > 0.3, "repetition")
+          .when(col("confidence") < 0.5, "low_confidence")
+          // fraction of probed n-grams that hit the model for the detected
+          // language: catches gibberish whose n-grams are absent from every
+          // model (absent n-grams carry no floor penalty, reference:
+          // src/detector/mod.rs:110-113)
+          .when(col("coverage") < 0.2, "low_coverage")
+          .when(col("perplexity") > 1e4, "high_perplexity")
+          .otherwise(lit(null).cast("string")))
+      .withColumn("keep", col("drop_reason").isNull)
 
   val toxicityRe = "\\b(idiot|stupid|moron|scum)\\b"
 
@@ -155,10 +194,29 @@ object FilterPipeline {
       config: DetectorConfig,
       it: Iterator[(String, java.sql.Timestamp, String)]
   ): Iterator[DocResult] = {
+    val doc = partitionKernel(model, config)
+    it.map { case (url, ts, text) => doc(url, ts, text) }
+  }
+
+  /** Per-partition kernel setup: one Detector and word counter, reused by
+    * every document of the partition.
+    */
+  private def partitionKernel(
+      model: PackedModel,
+      config: DetectorConfig
+  ): (String, java.sql.Timestamp, String) => DocResult = {
     val det = new Detector(model, config)
     val wordFreq = new LongIntCounter(512)
-    it.map { case (url, ts, text) => processDoc(model, det, wordFreq, url, ts, text) }
+    (url, ts, text) => processDoc(model, det, wordFreq, url, ts, text)
   }
+
+  /** The row a duplicate carries instead of the kernel's output: it is
+    * dropped unconditionally, so only its identity columns are real.
+    */
+  private def dupDoc(url: String, ts: java.sql.Timestamp, text: String): DocResult =
+    DocResult(if (url == null) "" else url, ts, host(url), "und", 0.0, Double.MaxValue,
+      0.0, 0, 1.0, 0.0, 0.0, 0, 0,
+      graft.lang.NgramHash.ofString(if (text == null) "" else text), "")
 
   private def processDoc(
       model: PackedModel,
@@ -172,10 +230,9 @@ object FilterPipeline {
       // null ≡ empty page: the detector guards null itself, but the
       // line-length loop and scrub below index the string directly
       val text = if (text0 == null) "" else text0
-      // null url ≡ empty url (same convention): the host parse below
-      // indexes it directly, and the STREAMING dedup sorts group rows by
-      // (ts, url) — a null url in DocResult would NPE that comparator on
-      // the first tied timestamp (crawls contain both)
+      // null url ≡ empty url (same convention): the STREAMING dedup sorts
+      // group rows by (ts, url) — a null url in DocResult would NPE that
+      // comparator on the first tied timestamp (crawls contain both)
       val u = if (url == null) "" else url
       val nRanked = det.detectInPlace(text) // allocation-free result arrays
       val toks = det.tokens // valid until the next detection call
@@ -242,24 +299,12 @@ object FilterPipeline {
       // PII + toxicity scrub (north_star regex scrubber)
       val scrubbed = scrub(text)
 
-      val host = u.stripPrefix("https://").stripPrefix("http://").takeWhile(_ != '/')
-
       DocResult(
-        u, ts, host, lang, conf, perplexity, coverage, wc, repRatio, avgLen,
+        u, ts, host(u), lang, conf, perplexity, coverage, wc, repRatio, avgLen,
         stopwordRatio, nLines, maxLine,
         graft.lang.NgramHash.ofString(text), scrubbed)
     }
   }
-
-  /** Skew-defeating repartition on hash(url, salt) — for inputs whose file
-    * layout correlates with host/domain and whose pipeline variant does not
-    * already shuffle on a content key. The default `run` plan needs no
-    * separate salting stage: its single exchange keys on
-    * (host, xxhash64(text)), so a hot host's pages spread uniformly by
-    * content hash.
-    */
-  def saltedRepartition(df: DataFrame, partitions: Int, salt: Int = 0x5eed): DataFrame =
-    df.repartition(partitions, hash(col("url"), lit(salt)))
 
   /** Run the pipeline over a pages DataFrame. Output adds `keep` and
     * `drop_reason`.
@@ -268,8 +313,7 @@ object FilterPipeline {
     * by (warc_ts, url) survives") runs FIRST, on the raw
     * (url, warc_ts, text) rows, keyed by (xxhash64(host), xxhash64(text))
     * — that partitioning is simultaneously the skew defense (a Zipf-hot
-    * host's pages spread uniformly by content hash; see
-    * `saltedRepartition` for the standalone variant) and the dedup
+    * host's pages spread uniformly by content hash) and the dedup
     * co-location. The fused detection kernel runs downstream with no
     * further shuffle, and SKIPS duplicate rows entirely.
     *
@@ -296,21 +340,16 @@ object FilterPipeline {
   def run(
       spark: SparkSession,
       pages: DataFrame,
-      model: Broadcast[PackedModel],
-      gates: Gates = Gates()
+      model: Broadcast[PackedModel]
   ): DataFrame = {
     import spark.implicits._
-
-    val config = DetectorConfig.default.copy(
-      languages = PagesGen.pipelineLangs.map(ScriptLang.id).toSet)
 
     // group keys are 64-bit hashes of (host, text): grouping equality
     // within 64-bit collision bounds; the shuffle and the join probe run
     // on two longs, never on host/text strings
     val keyed = pages
       .select($"url", $"warc_ts", $"text")
-      .withColumn("w_host",
-        xxhash64(substring_index(substring_index($"url", "://", -1), "/", 1)))
+      .withColumn("w_host", xxhash64(hostCol($"url")))
       .withColumn("w_hash", xxhash64($"text"))
 
     // cross-row rule: first (by warc_ts, url) copy per (host, content) wins
@@ -323,43 +362,21 @@ object FilterPipeline {
     val mapped = flagged
       .as[(String, java.sql.Timestamp, String, Boolean)]
       .mapPartitions { it =>
-        val det = new Detector(model.value, config)
-        val wordFreq = new LongIntCounter(512)
+        val doc = partitionKernel(model.value, detectorConfig)
+        // duplicates are dropped unconditionally — don't spend the
+        // detection/quality/scrub kernel on them (at crawl scale dups are
+        // a third of the corpus; their winner carries the processed copy)
         it.map { case (url, ts, text, isDup) =>
-          // duplicates are dropped unconditionally — don't spend the
-          // detection/quality/scrub kernel on them (at crawl scale dups are
-          // a third of the corpus; their winner carries the processed copy)
-          val doc =
-            if (isDup) {
-              // null url ≡ empty url, matching processDoc's convention
-              val u = if (url == null) "" else url
-              val host = u.stripPrefix("https://").stripPrefix("http://")
-                .takeWhile(_ != '/')
-              DocResult(u, ts, host, "und", 0.0, Double.MaxValue, 0.0,
-                0, 1.0, 0.0, 0.0, 0, 0,
-                graft.lang.NgramHash.ofString(if (text == null) "" else text), "")
-            } else processDoc(model.value, det, wordFreq, url, ts, text)
-          (doc, isDup)
+          (if (isDup) dupDoc(url, ts, text) else doc(url, ts, text), isDup)
         }
       }
       .toDF("doc", "is_dup")
       .select($"doc.*", $"is_dup")
 
-    mapped
-      .withColumn(
-        "drop_reason",
-        when($"is_dup", "dup")
-          .when($"word_count" < gates.minWords, "too_short")
-          .when($"repetition_ratio" > gates.maxRepetitionRatio, "repetition")
-          .when($"confidence" < gates.minConfidence, "low_confidence")
-          .when($"coverage" < gates.minCoverage, "low_coverage")
-          .when($"perplexity" > gates.maxPerplexity, "high_perplexity")
-          .otherwise(lit(null).cast("string"))
-      )
-      .withColumn("keep", $"drop_reason".isNull)
-      // is_dup stays in the output: it is per-partition lineage (dup counts
-      // by source partition) and lets the q28 gate-logic oracle recompute
-      // drop_reason/keep from the row itself
+    // is_dup stays in the output: it is per-partition lineage (dup counts
+    // by source partition) and lets the q28 gate-logic oracle recompute
+    // drop_reason/keep from the row itself
+    gate(mapped, $"is_dup")
   }
 
   /** Convenience: pipeline over a freshly generated corpus with the fixture

@@ -155,17 +155,16 @@ object SnapshotStore {
       val result = FilterPipeline.run(spark, slice, model)
       val out = store.dataPath(part)
       result.write.mode("overwrite").parquet(out)
-      // metrics from the written snapshot (read back: single source of truth)
-      val written = spark.read.parquet(out)
-      val (rows, kept) = {
-        val r = written.agg(count(lit(1)), sum(when($"keep", 1L).otherwise(0L))).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-      val drops = written.filter(!$"keep")
+      // metrics from the written snapshot (read back: single source of
+      // truth) in ONE job: keep ⇔ drop_reason IS NULL, so the null group
+      // is the kept count
+      val byReason = spark.read.parquet(out)
         .groupBy($"drop_reason").count()
-        .as[(String, Long)].collect().toMap
+        .as[(String, Long)].collect()
+      val kept = byReason.collectFirst { case (null, n) => n }.getOrElse(0L)
+      val drops = byReason.filter(_._1 != null).toMap
       store.commit(
-        Seq(store.PartitionEntry(part, rows, kept, out, drops)),
+        Seq(store.PartitionEntry(part, byReason.map(_._2).sum, kept, out, drops)),
         Map(
           "job" -> "quality_filter",
           "model_hash" -> graft.lang.PackedModel.registryHash.toString,

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.lang.{DetectorConfig, PackedModel, ScriptLang}
-import graft.pipeline.{FilterPipeline, PagesGen}
+import graft.lang.PackedModel
+import graft.pipeline.FilterPipeline
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,8 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * per-document kernel over `readStream`, with the host-scoped exact-dup
   * rule expressed as keyed state (`flatMapGroupsWithState`) instead of a
   * batch window — first arrival per (host, text_hash) survives; later
-  * arrivals drop. Windowed keep-rate metrics run as a watermarked
-  * aggregation.
+  * arrivals drop. The detector configuration, host parse and keep/drop
+  * gate are FilterPipeline's. Windowed keep-rate metrics run as a
+  * watermarked aggregation.
   */
 object StreamingFilter {
 
@@ -21,14 +22,15 @@ object StreamingFilter {
     */
   final case class SeenState(firstUrl: String, newestMs: Long)
 
+  /** How long past its newest copy a (host, text_hash) entry is kept. */
+  private val DedupHorizonMs = 7L * 86400000L
+
   def docStream(
       spark: SparkSession,
       pagesDir: String,
       model: Broadcast[PackedModel]
   ): Dataset[FilterPipeline.DocResult] = {
     import spark.implicits._
-    val config = DetectorConfig.default.copy(
-      languages = PagesGen.pipelineLangs.map(ScriptLang.id).toSet)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("warc_ts", org.apache.spark.sql.types.TimestampType),
@@ -48,7 +50,8 @@ object StreamingFilter {
       // the batch pipeline keeps such rows (it needs no event time).
       .filter($"warc_ts".isNotNull)
       .as[(String, java.sql.Timestamp, String)]
-      .mapPartitions(it => FilterPipeline.processPartition(model.value, config, it))
+      .mapPartitions(it =>
+        FilterPipeline.processPartition(model.value, FilterPipeline.detectorConfig, it))
   }
 
   /** Stateful first-wins dedup + gates; Append-mode output with the same
@@ -56,20 +59,15 @@ object StreamingFilter {
     * a window function).
     *
     * State is BOUNDED by an event-time timeout: a (host, text_hash) entry
-    * expires `dedupHorizon` past its newest copy's event time (driven by
+    * expires `DedupHorizonMs` past its newest copy's event time (driven by
     * the `warc_ts` watermark) — without it, one state entry per distinct
     * page lives forever and the state store grows without bound at crawl
     * scale. A duplicate arriving later than the horizon is treated as new
     * content (the standard bounded-dedup contract, cf.
     * dropDuplicatesWithinWatermark).
     */
-  def filtered(
-      docs: Dataset[FilterPipeline.DocResult],
-      gates: FilterPipeline.Gates = FilterPipeline.Gates(),
-      dedupHorizonDays: Int = 7
-  ): DataFrame = {
+  def filtered(docs: Dataset[FilterPipeline.DocResult]): DataFrame = {
     import docs.sparkSession.implicits._
-    val horizonMs = dedupHorizonDays.toLong * 86400000L
 
     val deduped = docs
       .withWatermark("warc_ts", "2 days")
@@ -89,7 +87,7 @@ object StreamingFilter {
               // batch — a key receiving data past its horizon must detect
               // its own staleness and start a fresh dedup generation
               val stale = state.getOption.exists(s =>
-                state.getCurrentWatermarkMs() > s.newestMs + horizonMs)
+                state.getCurrentWatermarkMs() > s.newestMs + DedupHorizonMs)
               if (stale) state.remove()
               val newest = math.max(
                 buf.map(_.warc_ts.getTime).max,
@@ -106,7 +104,7 @@ object StreamingFilter {
               // (clamped above the watermark: very-late data would otherwise
               // set an already-passed timeout, which Spark rejects)
               state.setTimeoutTimestamp(
-                math.max(newest + horizonMs, state.getCurrentWatermarkMs() + 1))
+                math.max(newest + DedupHorizonMs, state.getCurrentWatermarkMs() + 1))
               out
             }
           }
@@ -115,19 +113,7 @@ object StreamingFilter {
       .toDF("doc", "dup_rank")
       .select($"doc.*", $"dup_rank")
 
-    deduped
-      .withColumn(
-        "drop_reason",
-        when($"dup_rank" > 1, "dup")
-          .when($"word_count" < gates.minWords, "too_short")
-          .when($"repetition_ratio" > gates.maxRepetitionRatio, "repetition")
-          .when($"confidence" < gates.minConfidence, "low_confidence")
-          .when($"coverage" < gates.minCoverage, "low_coverage")
-          .when($"perplexity" > gates.maxPerplexity, "high_perplexity")
-          .otherwise(lit(null).cast("string"))
-      )
-      .withColumn("keep", $"drop_reason".isNull)
-      .drop("dup_rank")
+    FilterPipeline.gate(deduped, $"dup_rank" > 1).drop("dup_rank")
   }
 
   /** Start the doc-level filter into an in-memory sink (tests/demo). */

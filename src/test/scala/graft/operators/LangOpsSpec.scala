@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.lang.PackedModel
+import graft.train.FixtureCorpus
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,17 +44,16 @@ class LangOpsSpec extends AnyFunSuite {
     import graft.lang.Detector
     LangOps.registerSql(spark)
     val nRows = 4000
-    // 64 partitions × 3 repeat queries = 192 tasks: a per-TASK pool miss
-    // (the r6 regression — each task deserializes its own Broadcast
-    // wrapper, so identity-keyed pools never hit) constructs ≥ 192
-    // detectors here; the id-keyed pool constructs at most one per live
-    // executor thread for the whole block. The old 8-partition/≤16 bound
-    // could not tell those apart (ADVICE r6).
+    // 64 partitions × 3 repeat queries = 192 tasks: a per-TASK miss
+    // (each task deserializes its own Broadcast wrapper) constructs ≥ 192
+    // detectors here; keying the thread-local on the model object, which
+    // is the one block-manager-cached value for every task, constructs
+    // at most one per live executor thread for the whole block.
     spark.range(nRows.toLong)
       .selectExpr("concat('the house of the people number ', id) AS text")
       .repartition(64)
       .createOrReplaceTempView("langops_alloc")
-    // warm once so ThreadLocals for the pool exist on live threads
+    // warm once so live threads already hold a detector
     spark.sql("SELECT count(detect_lang(text)._1) FROM langops_alloc").collect()
     val before = Detector.constructed.get()
     (1 to 3).foreach { _ =>
@@ -63,6 +64,27 @@ class LangOpsSpec extends AnyFunSuite {
     // threads (the suite may share a wider context than local[4]), but
     // stay strictly under one-per-task
     assert(made <= 32, s"UDF constructed $made Detectors across 192 tasks " +
-      "(per-task pool misses?)")
+      "(per-task misses?)")
+  }
+
+  test("detect_lang's thread-local detector follows the model object it was built over") {
+    val a = FixtureCorpus.model
+    // an equal model under a different identity: reuse is by identity,
+    // so B must get its own detector even though its tables match A's
+    val b = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(a)
+      out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[PackedModel]
+    }
+    assert(b ne a)
+    val overA = LangOps.detectorFor(a)
+    assert(overA.model eq a)
+    val overB = LangOps.detectorFor(b)
+    assert(overB ne overA, "a different model object must get a new detector")
+    assert(overB.model eq b)
+    assert(LangOps.detectorFor(b) eq overB, "the same model object must reuse its detector")
   }
 }

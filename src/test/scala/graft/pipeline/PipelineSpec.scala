@@ -60,6 +60,40 @@ class PipelineSpec extends AnyFunSuite {
     assert(nullRow(0).getString(1) == "und" && nullRow(0).getInt(2) == 0)
   }
 
+  test("host parse: the dedup key and DocResult.host agree on every url shape") {
+    import spark.implicits._
+    val bc = LangOps.broadcastModel(spark)
+    val expected = Seq(
+      "https://a.example/r?u=http://b.example/x" -> "a.example", // embedded ://
+      "HTTPS://a.example/x" -> "a.example",                      // uppercase scheme
+      "ftp://files.example/pub" -> "files.example",
+      "no-scheme-host/path" -> "no-scheme-host",
+      "https://a.example" -> "a.example",
+      "" -> "",
+      (null: String) -> "")
+    val keyHosts = expected.map(_._1).toDF("url")
+      .select(FilterPipeline.hostCol($"url")).as[String].collect().toSeq
+    assert(keyHosts == expected.map(_._2))
+    // two copies of each page: the later one is the dup placeholder row,
+    // the earlier one comes out of the fused kernel
+    val pages = expected.zipWithIndex.flatMap { case ((url, _), i) =>
+      Seq(0, 1).map(d => PagesGen.Page(url,
+        java.sql.Timestamp.valueOf(s"2025-06-0${1 + d} 00:00:00"),
+        Array.emptyByteArray, s"page $i of the host table", "eng"))
+    }
+    val out = FilterPipeline.run(spark, spark.createDataset(pages).toDF(), bc)
+      .select($"url", $"host", FilterPipeline.hostCol($"url").as("key_host"), $"is_dup")
+      .as[(String, String, String, Boolean)].collect()
+    assert(out.length == pages.length)
+    // a null url comes out as the empty url
+    val want = expected.map { case (u, h) => (if (u == null) "" else u) -> h }.toMap
+    out.foreach { case (url, host, keyHost, _) =>
+      assert(host == want(url), s"DocResult.host of '$url'")
+      assert(keyHost == host, s"key host of '$url'")
+    }
+    assert(out.count(_._4) == expected.length, "each page's second copy is its same-host dup")
+  }
+
   test("scrubbed text matches the reference scrub exactly") {
     val joined = result.select(col("url"), col("scrubbed_text"))
       .join(labels.filter(col("ref_defect") =!= "dup_copy")

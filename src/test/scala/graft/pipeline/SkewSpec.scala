@@ -1,12 +1,14 @@
 package graft.pipeline
 
+import graft.operators.LangOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Host/domain skew handling (north_rule): partitioning crawl pages by host
-  * concentrates the Zipf-hot hosts into few tasks; the salted repartition
-  * (and the pipeline's (host, content-hash) exchange) spread them evenly.
+  * concentrates the Zipf-hot hosts into few tasks; the pipeline's one
+  * exchange, keyed by (host, content hash) -- the host key salted by the
+  * content hash -- spreads them evenly.
   */
 class SkewSpec extends AnyFunSuite {
   private lazy val spark = SparkSession.builder()
@@ -16,22 +18,34 @@ class SkewSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("salted repartition flattens Zipf host skew; host partitioning does not") {
-    val pages = PagesGen.pagesDf(spark, 4000)
-      .withColumn("host", substring_index(substring_index(col("url"), "://", -1), "/", 1))
+    // as RunPipeline configures it: 16 shuffle partitions, AQE coalescing
+    // off (coalescing would fold the exchange's partitions by size)
+    val conf = Seq(
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val pages = PagesGen.pagesDf(spark, 4000)
 
-    def partitionSizes(df: org.apache.spark.sql.DataFrame): Array[Long] =
-      df.withColumn("pid", spark_partition_id())
-        .groupBy("pid").count()
-        .collect().map(_.getLong(1))
+      def partitionSizes(df: org.apache.spark.sql.DataFrame): Array[Long] =
+        df.withColumn("pid", spark_partition_id())
+          .groupBy("pid").count()
+          .collect().map(_.getLong(1))
 
-    val byHost = partitionSizes(pages.repartition(16, col("host")))
-    val salted = partitionSizes(FilterPipeline.saltedRepartition(pages, 16))
+      val byHost = partitionSizes(pages.repartition(16, FilterPipeline.hostCol(col("url"))))
+      val exchanged = partitionSizes(
+        FilterPipeline.run(spark, pages, LangOps.broadcastModel(spark)))
 
-    val mean = 4000.0 / 16
-    val hostMax = byHost.max / mean
-    val saltedMax = salted.max / mean
-    info(s"max/mean partition load: by-host=$hostMax salted=$saltedMax")
-    assert(hostMax > 2.0, s"fixture not skewed enough (by-host max/mean $hostMax)")
-    assert(saltedMax < 1.5, s"salted repartition still skewed (max/mean $saltedMax)")
+      val mean = 4000.0 / 16
+      val hostMax = byHost.max / mean
+      val runMax = exchanged.max / mean
+      info(s"max/mean partition load: by-host=$hostMax run=$runMax")
+      assert(hostMax > 2.0, s"fixture not skewed enough (by-host max/mean $hostMax)")
+      assert(runMax < 1.5, s"run's exchange still skewed (max/mean $runMax)")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

@@ -15,10 +15,24 @@ class StreamingSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("streaming filter matches the batch pipeline keep decisions") {
+    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
     val pagesDir = s"$tmp/pages"
     val n = 800
-    PagesGen.pagesDf(spark, n).write.parquet(pagesDir)
+    val generated = PagesGen.pagesDf(spark, n)
+    // two pages with one kept page's text on different hosts, both linking
+    // the same embedded `://` target: neither is the other's same-host
+    // duplicate, in batch or in streaming. The latest event time keeps
+    // them from arriving late in whichever micro-batch reads them.
+    val (text, lang) = generated
+      .join(PagesGen.labelsDf(spark, n).filter($"ref_keep"), "url")
+      .orderBy($"url").select($"text", $"lang").as[(String, String)].head()
+    val lastTs = generated.agg(max($"warc_ts")).as[java.sql.Timestamp].head()
+    val sharedText = Seq(
+      "https://a.example/r?u=http://t.example/x",
+      "https://b.example/r?u=http://t.example/x")
+    val extra = sharedText.map(u => PagesGen.Page(u, lastTs, PagesGen.wrapHtml(u, text), text, lang))
+    generated.unionByName(spark.createDataset(extra).toDF()).write.parquet(pagesDir)
     val bc = LangOps.broadcastModel(spark)
 
     val q = StreamingFilter.start(spark, pagesDir, bc, "stream_out", s"$tmp/ckpt")
@@ -26,7 +40,7 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
 
     val streamed = spark.table("stream_out").select(col("url"), col("keep").as("s_keep"))
-    assert(streamed.count() == n.toLong)
+    assert(streamed.count() == n + 2L)
 
     val batch = graft.pipeline.FilterPipeline
       .run(spark, spark.read.parquet(pagesDir), bc)
@@ -36,6 +50,10 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("s_keep") =!= col("b_keep"))
       .count()
     assert(diff == 0L, s"$diff keep-decision mismatches between streaming and batch")
+    val sharedKept = streamed.join(batch, "url")
+      .filter(col("url").isin(sharedText: _*) && col("s_keep") && col("b_keep"))
+      .count()
+    assert(sharedKept == 2L, "both same-text pages on different hosts must be kept")
   }
 
   test("dedup state expires on the event-time horizon (bounded state store)") {
