@@ -28,8 +28,6 @@ final case class DetectorConfig(
     copy(shortSizes = DetectorConfig.mergedSizes(Array.emptyIntArray, sizes))
   def longNgramsAdd(sizes: Int*): DetectorConfig =
     copy(longSizes = DetectorConfig.mergedSizes(longSizes, sizes))
-  def shortNgramsAdd(sizes: Int*): DetectorConfig =
-    copy(shortSizes = DetectorConfig.mergedSizes(shortSizes, sizes))
 }
 
 object DetectorConfig {
@@ -116,13 +114,6 @@ private[lang] final class LongSeenSet(initialCap: Int) {
   }
 }
 
-/** The langram-equivalent detector core: a pure, allocation-light Scala
-  * function suitable for use inside a Spark typed map over documents.
-  * Semantics mirror reference: src/detector/mod.rs:230-452 exactly
-  * (prefilter → candidate intersect → length-adaptive n-gram sizes →
-  * per-size dedup probe with floor penalties → mean log-prob → sort →
-  * raw / or-none / reordered / relative APIs).
-  */
 /** One ranked result: language ordinal + (log or relative) probability. */
 final case class Scored(langId: Int, prob: Double)
 
@@ -135,6 +126,13 @@ object Detector {
   val constructed = new java.util.concurrent.atomic.AtomicLong(0)
 }
 
+/** The langram-equivalent detector core: a pure, allocation-light Scala
+  * function suitable for use inside a Spark typed map over documents.
+  * Semantics mirror reference: src/detector/mod.rs:230-452 exactly
+  * (prefilter → candidate intersect → length-adaptive n-gram sizes →
+  * per-size dedup probe with floor penalties → mean log-prob → sort →
+  * raw / or-none / reordered / relative APIs).
+  */
 final class Detector(val model: PackedModel, val config: DetectorConfig) extends Serializable {
   Detector.constructed.incrementAndGet()
   private val nLangs = model.nLangs
@@ -394,8 +392,6 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
   /** top-1 of the reference result order (valid when resultCount > 0) */
   def topLang: Int = t1Lang
   def topProb: Double = t1Prob
-  /** second-ranked log prob (−∞ when resultCount < 2) */
-  def secondProb: Double = t2Prob
 
   /** Popularity reorder pick over the in-place result (reference:
     * src/detector/mod.rs:383-431): among langs with p ≥ p1 − d, minimum

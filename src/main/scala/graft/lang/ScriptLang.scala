@@ -495,14 +495,6 @@ object ScriptLang {
   def id(code: String): Int = byCode(code).id
   def code(id: Int): String = all(id).code
 
-  /** langs sharing at least one script with the given script name */
-  private val byScript: Map[String, Array[Int]] =
-    all.flatMap(l => l.scripts.map(_ -> l.id))
-      .groupBy(_._1).map { case (s, v) => s -> v.map(_._2).sorted.toArray }
-
-  def langsOfScript(script: String): Array[Int] =
-    byScript.getOrElse(script, Array.emptyIntArray)
-
   /** Unicode script name of a code point (JDK data). */
   def scriptOf(cp: Int): String =
     Character.UnicodeScript.of(cp).name

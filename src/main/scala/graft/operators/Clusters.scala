@@ -32,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   *    whole component as one group;
   *  - per-iteration state is a per-call-owned RDD pin (MEMORY_AND_DISK),
   *    previous iteration released as soon as the next is materialized —
-  *    the q19 pin discipline (TextOps.lastQ19Cache scaladoc).
+  *    the q19 pin discipline (PinSlot scaladoc).
   */
 object Clusters {
 
@@ -105,22 +105,13 @@ object Clusters {
         docs.columns.toSeq.tail.map(col) ++ derived(cid): _*)
   }
 
-  /** Last q39 star-forest pin — released by the NEXT call's swap (the
-    * lazy result plan reads it after this call returns) or eagerly via
-    * [[releaseQ39Cache]]. Same per-call-owned plain-RDD discipline as
-    * TextOps.lastQ19Cache (see that scaladoc for why a Dataset cache is
-    * the wrong tool): a post-release recompute re-runs the iteration
-    * chain storage-free — correct, just unpinned.
+  /** q39's converged star-forest pin (see [[PinSlot]]): a post-release
+    * recompute re-runs the iteration chain storage-free — correct, just
+    * unpinned.
     */
-  private val lastQ39Cache =
-    new java.util.concurrent.atomic.AtomicReference[RDD[_]](null)
+  private val q39Pin = new PinSlot
 
-  private[graft] def releaseQ39Cache(): Unit = {
-    val prev = lastQ39Cache.getAndSet(null)
-    if (prev != null) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+  private[graft] def releaseQ39Cache(): Unit = q39Pin.release()
 
   /** Upper bound on alternation rounds before declaring non-convergence.
     * The paper's bound is O(log² n) — low single digits in practice
@@ -132,6 +123,17 @@ object Clusters {
   /** Alternation rounds of the last connectedComponents call (test/probe
     * observability, the lastQ17AutoEstimates pattern). */
   private[graft] val lastRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
+
+  /** Target edge count per round-shuffle partition: the alternation's
+    * per-round shuffles are sized from the LIVE edge count, not the
+    * session's shuffle-partition constant (guide §2 scale-adaptive
+    * partitioning). A task comfortably handles 64k (Long, Long) edges;
+    * a 25-edge sf0.1 pair graph previously paid ~15 fixed-32-task
+    * shuffle stages of pure scheduler overhead per call (measured
+    * ~1.3 s of q39's 2.6 s), while at real dup rates the ratio drives
+    * the count straight back to the session constant.
+    */
+  private[graft] final val EdgesPerRoundPartition = 1L << 16
 
   /** Connected components over an undirected edge list (columns u, v:
     * castable to long): returns (node, label) for every node incident to
@@ -146,17 +148,6 @@ object Clusters {
     * the components of the INPUT graph; ClustersSpec gates this against
     * a driver union-find on seeded hostile shapes.
     */
-  /** Target edge count per round-shuffle partition: the alternation's
-    * per-round shuffles are sized from the LIVE edge count, not the
-    * session's shuffle-partition constant (guide §2 scale-adaptive
-    * partitioning). A task comfortably handles 64k (Long, Long) edges;
-    * a 25-edge sf0.1 pair graph previously paid ~15 fixed-32-task
-    * shuffle stages of pure scheduler overhead per call (measured
-    * ~1.3 s of q39's 2.6 s), while at real dup rates the ratio drives
-    * the count straight back to the session constant.
-    */
-  private[graft] final val EdgesPerRoundPartition = 1L << 16
-
   def connectedComponents(spark: SparkSession, edgesDf: DataFrame): DataFrame = {
     val nParts = spark.sessionState.conf.numShufflePartitions
 
@@ -212,21 +203,13 @@ object Clusters {
       lastRounds.set(rounds)
     } catch {
       case t: Throwable =>
-        Seq(curr, ls, next).foreach { r =>
-          if (r != null) {
-            try r.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
+        Seq(curr, ls, next).foreach(PinSlot.unpersistQuietly)
         throw t
     }
 
-    // handoff: the converged star pin backs the lazy result plan; swap it
-    // into the registry so the next q39 call (or an eager release)
-    // retires it — never more than one live pin for this operator
-    val prev = lastQ39Cache.getAndSet(curr)
-    if (prev != null && (prev ne curr)) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // handoff: the converged star pin backs the lazy result plan; the
+    // next q39 call's swap (or an eager release) retires it
+    q39Pin.swap(curr)
 
     val pinned = curr
     // the centers distinct is bounded by the (converged) edge count, so it

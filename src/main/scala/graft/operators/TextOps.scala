@@ -115,11 +115,15 @@ object TextOps {
 
   // --- hashing kernels ----------------------------------------------------
 
-  /** Character 3-gram shingle hashes of a text (codepoint-level, includes
-    * spaces — standard near-dup shingling).
+  /** Sorted distinct hashes of a text's character `ShingleSize`-gram
+    * shingles (codepoint-level, includes spaces — standard near-dup
+    * shingling). Null text ≡ empty text: zero shingles — crawls contain
+    * null rows and one used to NPE a whole banding pass.
     */
-  def shingleHashes(text: String, n: Int = 3): Array[Long] = {
+  def shingleHashes(text: String): Array[Long] = {
+    if (text == null) return Array.emptyLongArray
     val cps = text.codePoints().toArray
+    val n = ShingleSize
     if (cps.length < n) return Array.emptyLongArray
     val out = new Array[Long](cps.length - n + 1)
     var i = 0
@@ -183,6 +187,23 @@ object TextOps {
     sig
   }
 
+  /** The `Bands` LSH band keys of a shingle set's MinHash signature, one
+    * per band: the band index is folded into the hash seed, so one mixed
+    * 64-bit key replaces the (band, hash) pair — a cross-band key
+    * collision can only MERGE buckets, which adds candidates an exact
+    * verify discards (never loses a pair). Shared by batch q17 and
+    * StreamingNearDup, so both band identically.
+    */
+  def bandKeys(shingles: Array[Long]): Array[Long] = {
+    val sig = minHashSignature(shingles)
+    Array.tabulate(Bands) { b =>
+      var h = 0x9e3779b97f4a7c15L ^ b
+      var r = 0
+      while (r < RowsPerBand) { h = mix(h ^ sig(b * RowsPerBand + r)); r += 1 }
+      h
+    }
+  }
+
   def exactJaccard(a: Array[Long], b: Array[Long]): Double = {
     // both sorted distinct
     var i = 0; var j = 0; var inter = 0
@@ -195,36 +216,6 @@ object TextOps {
     if (union == 0) 0.0 else inter.toDouble / union
   }
 
-  /** MinHash + LSH near-duplicate pairs.
-    *
-    * Plan (one pass over the corpus, no corpus-sized cache):
-    *  1. text → shingles → 128-perm signature → 32 band-bucket rows per
-    *     document (typed mapPartitions; shingle sets are never
-    *     materialized into a column). The scan is repartitioned first —
-    *     the parquet split count would otherwise cap the kernel's
-    *     parallelism (q19 learned this in round 3).
-    *  2. band-table SELF-JOIN on the bucket key → candidate pairs, with
-    *     the EXACT length filter (J ≥ t ⇒ min(szA,szB) ≥ t·max) applied
-    *     from shingle counts carried on the band rows (measured at
-    *     sf0.1: 293k → 196k candidate rows).
-    *  3. bounded candidate probe (q19's df-probe pattern): pair list and
-    *     candidate shingle sets pulled once, under hard caps, then
-    *     verified map-side from a broadcast — ZERO shuffle of shingle
-    *     arrays. Past the caps the lazy distributed verify runs instead.
-    *
-    * Scale: the only corpus-sized movement is (bucket, doc_id, sz) rows —
-    * 32 per document, never the text. Banding is calibrated (see
-    * MinHashPerms) so the output equals the exact brute-force
-    * J ≥ threshold pair set — the DuckDB oracle.
-    *
-    * Shape history, all measured at sf0.1 (5k docs / ~200k candidate
-    * pairs — the pair set is ~40× larger than the corpus, which is what
-    * makes broadcast-verify the right plan): round-3 band self-join +
-    * two-sided shingle rejoin 2.5 s; round-4 corpus-wide shingle cache +
-    * boxed groupByKey 3.4–3.8 s (the cache materialization cost more
-    * than it saved — the r4 regression); round-5 alternatives: verify
-    * joins that exchange array-laden rows 5–6 s, this shape ~1 s.
-    */
   /** Beyond-cap fallback choice for q17 (see `q17MinHashPairsImpl` for the
     * measured trade). `Auto`, the only production choice, estimates BOTH
     * designs' verify-shuffle bytes from cheap sub-linear aggregations at
@@ -264,25 +255,14 @@ object TextOps {
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, text) =>
-          // null text ≡ empty text (zero shingles) — crawls contain null
-          // rows and one used to NPE the whole banding pass
-          val sh = if (text == null) Array.emptyLongArray
-                   else shingleHashes(text, ShingleSize)
+          val sh = shingleHashes(text)
           // zero-shingle docs can never reach J ≥ t > 0 (Jaccard with an
           // empty set is 0), but their all-MaxValue signatures would put
           // EVERY empty doc in the same 32 buckets — a mass-empty crawl
           // would pair them quadratically just to discard each pair at
           // verify. Skip banding them entirely; output unchanged.
           if (sh.isEmpty && threshold > 0) Iterator.empty
-          else {
-            val sig = minHashSignature(sh)
-            (0 until Bands).iterator.map { b =>
-              var h = 0x9e3779b97f4a7c15L ^ b
-              var r = 0
-              while (r < RowsPerBand) { h = mix(h ^ sig(b * RowsPerBand + r)); r += 1 }
-              (h, id, sh.length)
-            }
-          }
+          else bandKeys(sh).iterator.map(h => (h, id, sh.length))
         }
       }
       .toDF("bucket", "doc_id", "sz")
@@ -338,10 +318,40 @@ object TextOps {
   private[graft] val lastQ17AutoEstimates =
     new java.util.concurrent.atomic.AtomicReference[Q17FallbackEstimates](null)
 
-  /** q17: MinHash+LSH near-duplicate pairs with exact Jaccard ≥
-    * `threshold` over 5-gram shingles. Beyond the probe caps it picks the
-    * cheaper of two exact verify designs from estimates taken at fallback
-    * time (`Q17Fallback.Auto`, see `q17MinHashPairsImpl`).
+  /** q17: MinHash + LSH near-duplicate pairs with exact Jaccard ≥
+    * `threshold` over 5-gram shingles.
+    *
+    * Plan (one pass over the corpus, no corpus-sized cache):
+    *  1. text → shingles → 128-perm signature → 32 band-bucket rows per
+    *     document (typed mapPartitions; shingle sets are never
+    *     materialized into a column). The scan is repartitioned first —
+    *     the parquet split count would otherwise cap the kernel's
+    *     parallelism (q19 learned this in round 3).
+    *  2. band-table SELF-JOIN on the bucket key → candidate pairs, with
+    *     the EXACT length filter (J ≥ t ⇒ min(szA,szB) ≥ t·max) applied
+    *     from shingle counts carried on the band rows (measured at
+    *     sf0.1: 293k → 196k candidate rows).
+    *  3. bounded candidate probe (q19's df-probe pattern): pair list and
+    *     candidate shingle sets pulled once, under hard caps, then
+    *     verified map-side from a broadcast — ZERO shuffle of shingle
+    *     arrays. Past the caps the lazy distributed verify runs instead.
+    *
+    * Scale: the only corpus-sized movement is (bucket, doc_id, sz) rows —
+    * 32 per document, never the text. Banding is calibrated (see
+    * MinHashPerms) so the output equals the exact brute-force
+    * J ≥ threshold pair set — the DuckDB oracle.
+    *
+    * Shape history, all measured at sf0.1 (5k docs / ~200k candidate
+    * pairs — the pair set is ~40× larger than the corpus, which is what
+    * makes broadcast-verify the right plan): round-3 band self-join +
+    * two-sided shingle rejoin 2.5 s; round-4 corpus-wide shingle cache +
+    * boxed groupByKey 3.4–3.8 s (the cache materialization cost more
+    * than it saved — the r4 regression); round-5 alternatives: verify
+    * joins that exchange array-laden rows 5–6 s, this shape ~1 s.
+    *
+    * Beyond the probe caps it picks the cheaper of two exact verify
+    * designs from estimates taken at fallback time (`Q17Fallback.Auto`,
+    * see `q17MinHashPairsImpl`).
     */
   def q17MinHashPairs(
       spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame =
@@ -395,12 +405,9 @@ object TextOps {
       .select($"doc_id", $"text")
       .repartition(spark.sessionState.conf.numShufflePartitions, $"doc_id")
 
-    // Band bucket keys: the band index is folded into the hash seed, so
-    // one mixed 64-bit key replaces the (band, hash) pair — a cross-band
-    // key collision can only MERGE buckets, which adds candidates that
-    // the exact verify below discards (never loses a pair). sz rides
-    // along for the length filter. (Kernel extracted to q17BandRows so
-    // the Auto fallback estimator observes the same bucket populations.)
+    // Band bucket rows (bandKeys); sz rides along for the length filter.
+    // (Kernel extracted to q17BandRows so the Auto fallback estimator
+    // observes the same bucket populations.)
     val bandRows = q17BandRows(spark, docs, threshold)
 
     // Candidate pairs from a band-table SELF-JOIN on the bucket key; the
@@ -483,12 +490,9 @@ object TextOps {
           while (it.hasNext && !over) {
             val (id, text) = it.next()
             if (ids.contains(id)) {
-              // null guard kept consistent with the banding/melt/q19-local
-              // paths: banding excludes null-text docs only when
-              // threshold > 0, so a caller-supplied threshold ≤ 0 can put
-              // a null-text doc in the candidate set
-              val sh = if (text == null) Array.emptyLongArray
-                       else shingleHashes(text, ShingleSize)
+              // banding excludes null-text docs only when threshold > 0,
+              // so a caller-supplied threshold ≤ 0 can put one here
+              val sh = shingleHashes(text)
               longs += sh.length
               if (longs > perPartLongs) over = true else buf += ((id, sh))
             }
@@ -563,9 +567,7 @@ object TextOps {
         val candIds = candDf
           .select(explode(array($"doc_a", $"doc_b")).as("doc_id")).distinct()
         val candShingles = docs.join(candIds, "doc_id").as[(Long, String)]
-          .map { case (id, text) =>
-            (id, if (text == null) Array.emptyLongArray else shingleHashes(text, ShingleSize))
-          }
+          .map { case (id, text) => (id, shingleHashes(text)) }
           .toDF("doc_id", "shingles")
         val sides = candDf.select(
           $"doc_a", $"doc_b", explode(array($"doc_a", $"doc_b")).as("doc_id"))
@@ -686,7 +688,7 @@ object TextOps {
       result: DataFrame, usedLocalPlan: Boolean, usedApproxDfOrder: () => Boolean,
       approxOrderTailDfBound: () => Long,
       // release THIS call's shingle pin iff it is still the handoff-current
-      // one (CAS against lastQ19Cache — a concurrent call's swap already
+      // one (q19Pin.releaseIfCurrent — a concurrent call's swap already
       // released it). For callers that consume only intermediate stages
       // (the q17 Auto fallback estimator) and never execute `result`.
       releaseOwnPin: () => Unit)
@@ -802,29 +804,10 @@ object TextOps {
   final val HotGramDf = 4096L
   final val HotGramBlock = 4096L
 
-  /** Last q19 shingle cache — released by the NEXT q19 call (the lazy
-    * result plan needs it alive after q19Stages returns). Holds a PLAIN
-    * RDD, not a cached Dataset: a Dataset cache is keyed by canonicalized
-    * plan, shared across concurrent same-input calls, and releasing it
-    * while a sibling's retained InMemoryTableScan can still execute
-    * strands an unreachable rebuilt copy (CachedRDDBuilder re-persists
-    * after clearCache; the CacheManager entry is gone, so no later
-    * unpersist finds it — caught by ConcurrentHandoffSpec). An RDD
-    * persist is per-call-owned and its unpersist terminal: a post-release
-    * recompute runs storage-free instead of re-registering.
-    */
-  private val lastQ19Cache =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
+  /** q19's distributed-plan shingle pin (see [[PinSlot]]). */
+  private val q19Pin = new PinSlot
 
-  /** Release the swapped-in shingle cache eagerly (tests; a sequential
-    * caller normally leaves it to the next q19 call's swap).
-    */
-  private[graft] def releaseQ19Cache(): Unit = {
-    val prev = lastQ19Cache.getAndSet(null)
-    if (prev != null) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+  private[graft] def releaseQ19Cache(): Unit = q19Pin.release()
 
   private[graft] def q19Stages(spark: SparkSession, sfDir: String, threshold: Double): JaccardStages =
     q19StagesFromDocs(
@@ -891,8 +874,7 @@ object TextOps {
               val group = new ArrayBuffer[(String, Long, Array[Long])](256)
               while (rows.hasNext && rows.head._1 == src) {
                 val (s, id, text) = rows.next()
-                group += ((s, id,
-                  if (text == null) Array.emptyLongArray else shingleHashes(text, ShingleSize)))
+                group += ((s, id, shingleHashes(text)))
               }
               localPPJoin(group.iterator, threshold)
             }
@@ -922,30 +904,21 @@ object TextOps {
     // measured this query at 4× its quiet cost). At warehouse scale the
     // same reuse is a checkpointed intermediate table; the storage level
     // spills to disk so the cache never OOMs a task. The pin is a PLAIN
-    // RDD behind a LogicalRDD barrier (see lastQ19Cache): per-call-owned,
+    // RDD behind a LogicalRDD barrier (see PinSlot): per-call-owned,
     // terminally releasable, safe against a concurrent sibling's swap.
-    val ownPin =
-      new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
+    @volatile var ownPin: org.apache.spark.rdd.RDD[_] = null
     lazy val docs = {
       val r = docsIn
         .repartition(spark.sessionState.conf.numShufflePartitions, $"doc_id")
         .as[(String, Long, String)]
-        .map { case (src, id, text) =>
-          (src, id, if (text == null) Array.emptyLongArray else shingleHashes(text, ShingleSize))
-        }
+        .map { case (src, id, text) => (src, id, shingleHashes(text)) }
         .rdd
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ownPin.set(r)
+      ownPin = r
       // One cache may outlive this call (the returned plan is lazy), but
       // never more than one: each call releases the previous call's cache
       // (ADVICE r4 — Verify dumping all queries used to accumulate them).
-      val prev = lastQ19Cache.getAndSet(r)
-      // best-effort: prev may belong to a STOPPED context (test teardown,
-      // driver restart) whose block manager refuses the call — the new
-      // context owes nothing to those blocks
-      if (prev != null && (prev ne r)) {
-        try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-      }
+      q19Pin.swap(r)
       spark.createDataset(r).toDF("source", "doc_id", "shingles")
     }
 
@@ -1165,12 +1138,7 @@ object TextOps {
       if (smallGroups) localResult else distResult, usedLocalPlan = smallGroups,
       usedApproxDfOrder = () => approxOrderUsed,
       approxOrderTailDfBound = () => approxTailDfBound,
-      releaseOwnPin = () => {
-        val r = ownPin.get
-        if (r != null && lastQ19Cache.compareAndSet(r, null)) {
-          try r.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-        }
-      })
+      releaseOwnPin = () => q19Pin.releaseIfCurrent(ownPin))
   }
 
   /** Document fingerprint, winnowing flavor: whole-content hash + the

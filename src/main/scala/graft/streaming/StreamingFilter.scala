@@ -23,7 +23,7 @@ object StreamingFilter {
   final case class SeenState(firstUrl: String, newestMs: Long)
 
   /** How long past its newest copy a (host, text_hash) entry is kept. */
-  private val DedupHorizonMs = 7L * 86400000L
+  private[streaming] final val DedupHorizonMs = 7L * 86400000L
 
   def docStream(
       spark: SparkSession,

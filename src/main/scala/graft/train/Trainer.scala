@@ -118,24 +118,6 @@ object Trainer {
     out
   }
 
-  /** Distributed trainer, EXACT-FRACTION form: corpus DataFrame
-    * (lang STRING, line STRING) → (lang STRING, size INT, ngram STRING,
-    * freq LONG, denom LONG) where the model probability is freq/denom.
-    * This is precisely the reference's serialization semantic (O23,
-    * train/src/fraction.rs:10-27): model FILES store exact fractions and
-    * `ln` is applied at load (train/src/file_model.rs:111-115) — and it
-    * makes the trainer value-checkable against an independent engine with
-    * INTEGER equality (the q29 DuckDB oracle), no transcendental-function
-    * ulp concerns.
-    *
-    * Scale design: the flatMap explodes (lang,size,ngram) occurrences but
-    * `groupBy.count` map-side-combines before the shuffle, so the shuffle
-    * carries only distinct n-grams per partition. The n/(n−1) relative
-    * frequency is a self-join of the counts table with itself on
-    * (lang, prefix) and (lang, suffix) — two shuffle hash joins that AQE
-    * can re-plan. Replaces the reference's hand-rolled 8-thread,
-    * memory-throttled scheduler (train/src/bin/train_files.rs:44-63).
-    */
   /** OpenLID-style corpus layout reader (reference: train/README.md:6-10 —
     * one line-corpus file per language): `dir/<lang>.txt` or sharded
     * `dir/<lang>/part*.txt` → (lang STRING, line STRING) rows. The
@@ -163,26 +145,29 @@ object Trainer {
         col("value").as("line"))
   }
 
-  /** Last trainer gram-count pin — released by the NEXT trainer call
-    * (the lazy result plan needs it alive after trainSparkFractions
-    * returns); same per-call-owned plain-RDD discipline as
-    * TextOps.lastQ19Cache, and for the same reasons (terminal
-    * unpersist, no cross-call CacheManager sharing).
-    */
-  private val lastTrainerCache =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[_]](null)
+  /** The trainer's gram-count pin (see [[graft.operators.PinSlot]]). */
+  private val trainerPin = new graft.operators.PinSlot
 
-  /** Eager release of the swapped-in gram-count pin (tests, dump-all
-    * settles); a sequential caller normally leaves it to the next
-    * trainer call's swap.
-    */
-  private[graft] def releaseTrainerCache(): Unit = {
-    val prev = lastTrainerCache.getAndSet(null)
-    if (prev != null) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
+  private[graft] def releaseTrainerCache(): Unit = trainerPin.release()
 
+  /** Distributed trainer, EXACT-FRACTION form: corpus DataFrame
+    * (lang STRING, line STRING) → (lang STRING, size INT, ngram STRING,
+    * freq LONG, denom LONG) where the model probability is freq/denom.
+    * This is precisely the reference's serialization semantic (O23,
+    * train/src/fraction.rs:10-27): model FILES store exact fractions and
+    * `ln` is applied at load (train/src/file_model.rs:111-115) — and it
+    * makes the trainer value-checkable against an independent engine with
+    * INTEGER equality (the q29 DuckDB oracle), no transcendental-function
+    * ulp concerns.
+    *
+    * Scale design: the flatMap explodes (lang,size,ngram) occurrences but
+    * `groupBy.count` map-side-combines before the shuffle, so the shuffle
+    * carries only distinct n-grams per partition. The n/(n−1) relative
+    * frequency is a self-join of the counts table with itself on
+    * (lang, prefix) and (lang, suffix) — two shuffle hash joins that AQE
+    * can re-plan. Replaces the reference's hand-rolled 8-thread,
+    * memory-throttled scheduler (train/src/bin/train_files.rs:44-63).
+    */
   def trainSparkFractions(
       spark: SparkSession,
       corpus: DataFrame,
@@ -233,17 +218,13 @@ object Trainer {
     // caught HERE: `counts.cache()` was keyed by canonicalized plan in
     // the CacheManager with no owner to release it — every registry
     // dump-all leaked one corpus-sized cache, and concurrent same-corpus
-    // trainer runs would share-then-strand it). Handoff registry below:
-    // the lazy result plan needs the pin alive after this returns, so
-    // the NEXT trainer call (or an explicit releaseTrainerCache) frees
-    // it — at most one trainer pin lives per JVM.
+    // trainer runs would share-then-strand it). The lazy result plan needs
+    // the pin alive after this returns, so the NEXT trainer call's swap
+    // (or an explicit releaseTrainerCache) frees it.
     val countsRdd = grams.groupBy($"lang", $"size", $"ngram").count()
       .as[(String, Int, String, Long)].rdd
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prev = lastTrainerCache.getAndSet(countsRdd)
-    if (prev != null && (prev ne countsRdd)) {
-      try prev.unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
-    }
+    trainerPin.swap(countsRdd)
     val counts = spark.createDataset(countsRdd).toDF("lang", "size", "ngram", "count")
 
     // totals per (lang,size) for size 1 and 0 denominators

@@ -94,8 +94,8 @@ class FuzzSpec extends AnyFunSuite {
 
   test("shingleHashes: no crash, deterministic, strictly ascending, bounded length") {
     inputs.zipWithIndex.foreach { case (s, i) =>
-      val a = TextOps.shingleHashes(s, TextOps.ShingleSize)
-      val b = TextOps.shingleHashes(s, TextOps.ShingleSize)
+      val a = TextOps.shingleHashes(s)
+      val b = TextOps.shingleHashes(s)
       assert(java.util.Arrays.equals(a, b), s"sample $i not deterministic")
       val nCps = s.codePointCount(0, s.length)
       assert(a.length <= math.max(0, nCps - TextOps.ShingleSize + 1),
@@ -120,7 +120,7 @@ class FuzzSpec extends AnyFunSuite {
 
   test("minhash signature: no crash, deterministic, full width") {
     inputs.zipWithIndex.foreach { case (s, i) =>
-      val sh = TextOps.shingleHashes(s, TextOps.ShingleSize)
+      val sh = TextOps.shingleHashes(s)
       val a = TextOps.minHashSignature(sh)
       val b = TextOps.minHashSignature(sh)
       assert(a.length == TextOps.MinHashPerms, s"sample $i: width ${a.length}")

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.control.NonFatal
 
 /** Chaos gate for the RDD-pinned intermediates (VERDICT r7 #3): the
-  * recompute-after-eviction claims in TextOps.lastQ19Cache and
+  * recompute-after-eviction claims in PinSlot (the q19 pin) and
   * Relational's escalated-path vcRdd block were prose until this spec.
   * Two chaos flavors run against each pin MID-QUERY from a second
   * thread:
@@ -93,7 +93,7 @@ class BlockEvictionSpec extends AnyFunSuite {
 
   private def bruteJaccard(docs: Seq[(String, Long, String)], t: Double): Set[(Long, Long, Double)] = {
     val arr = docs.map { case (_, id, txt) =>
-      (id, TextOps.shingleHashes(txt, TextOps.ShingleSize))
+      (id, TextOps.shingleHashes(txt))
     }
     (for {
       i <- arr.indices.iterator

@@ -121,7 +121,7 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
 
   private def bruteJaccard(docs: Seq[(String, Long, String)], t: Double): Set[(Long, Long, Double)] = {
     val arr = docs.map { case (_, id, txt) =>
-      (id, TextOps.shingleHashes(txt, TextOps.ShingleSize))
+      (id, TextOps.shingleHashes(txt))
     }
     (for {
       i <- arr.indices.iterator
@@ -189,7 +189,7 @@ class ConcurrentHandoffSpec extends AnyFunSuite {
       .toAbsolutePath.toString
     buf.toSeq.toDF("doc_id", "text").repartition(2)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val arr = buf.toSeq.map { case (i, t) => (i, TextOps.shingleHashes(t, TextOps.ShingleSize)) }
+    val arr = buf.toSeq.map { case (i, t) => (i, TextOps.shingleHashes(t)) }
     val want = (for {
       i <- arr.indices.iterator
       j <- (i + 1) until arr.length

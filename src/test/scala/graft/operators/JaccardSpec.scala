@@ -54,7 +54,7 @@ class JaccardSpec extends AnyFunSuite {
 
     // brute force over the same shingles
     val docsArr = docsIn.as[(String, Long, String)].collect()
-      .map { case (_, id, t) => (id, TextOps.shingleHashes(t, TextOps.ShingleSize)) }
+      .map { case (_, id, t) => (id, TextOps.shingleHashes(t)) }
     val brute = (for {
       i <- docsArr.indices.iterator
       j <- (i + 1) until docsArr.length
@@ -160,7 +160,7 @@ class JaccardSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
 
     val docsArr = docsIn.as[(String, Long, String)].collect()
-      .map { case (_, id, t) => (id, TextOps.shingleHashes(t, TextOps.ShingleSize)) }
+      .map { case (_, id, t) => (id, TextOps.shingleHashes(t)) }
     val brute = (for {
       i <- docsArr.indices.iterator
       j <- (i + 1) until docsArr.length
@@ -250,7 +250,7 @@ class JaccardSpec extends AnyFunSuite {
 
     val bySrc = buf.groupBy(_._1)
     val want = bySrc.values.flatMap { ds =>
-      val arr = ds.map { case (_, i, t) => (i, TextOps.shingleHashes(t, TextOps.ShingleSize)) }.toArray
+      val arr = ds.map { case (_, i, t) => (i, TextOps.shingleHashes(t)) }.toArray
       for {
         i <- arr.indices
         j <- (i + 1) until arr.length

@@ -27,7 +27,7 @@ class MinHashSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
       .select($"doc_id", $"text").as[(Long, String)]
       .collect()
-      .map { case (id, t) => (id, TextOps.shingleHashes(t, TextOps.ShingleSize)) }
+      .map { case (id, t) => (id, TextOps.shingleHashes(t)) }
     (for {
       i <- docs.indices.iterator
       j <- (i + 1) until docs.length
@@ -114,7 +114,7 @@ class MinHashSpec extends AnyFunSuite {
     buf.toSeq.toDF("doc_id", "text").repartition(3)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     try {
-      val docsArr = buf.toSeq.map { case (i, t) => (i, TextOps.shingleHashes(t, TextOps.ShingleSize)) }
+      val docsArr = buf.toSeq.map { case (i, t) => (i, TextOps.shingleHashes(t)) }
       val want = (for {
         i <- docsArr.indices.iterator
         j <- (i + 1) until docsArr.length

@@ -48,6 +48,21 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.9, s"LSH recall@1 $recall below floor")
   }
 
+  test("q26 output pin: SHA-256 of the sorted rows at sf0.01") {
+    // The DuckDB oracle gates q26 only through recall flags and cos, so a
+    // silent drift in the shared LSH bucket kernel could still pass it;
+    // this pins every emitted row. Rows render as comma-joined fields
+    // (null as "null"), sorted, newline-joined.
+    val rows = Similarity.q26LshAnn(spark, sf).collect()
+      .map(r => r.toSeq.map(v => String.valueOf(v)).mkString(","))
+      .sorted
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+    info(s"q26 digest $d over ${rows.length} rows")
+    assert(d == "8869e556e0e85f9743d3d8dee5a9f23adda46b506d3611cc594b929f8c31a3f3")
+  }
+
   test("q30 IVF ANN: recall@1 >= 0.9 of exact top-1 for the probed queries") {
     import spark.implicits._
     val ann = Similarity.q30IvfAnn(spark, sf)
@@ -62,20 +77,15 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivfSizing: codebook cap binds past 2^44 rows, bumping nProbe boundedly") {
-    // small n: rule of thumb untouched, nProbe passes through
-    assert(Similarity.ivfSizing(500L, 0, 6, 4 << 20) == (23, 6))
-    // explicit k under the cap: passes through
-    assert(Similarity.ivfSizing(0L, 100, 6, 4 << 20) == (100, 6))
-    // explicit k OVER the cap: clamped (the cap is a memory envelope,
-    // not a default) and nProbe bumped by √ratio
-    assert(Similarity.ivfSizing(0L, 16 << 20, 6, 4 << 20) == (4 << 20, 12))
-    // auto sizing past 2^44 rows: √n = 2^23 > cap 2^22 → k clamps to the
-    // cap; deficit ratio 2 → nProbe ⌈6·√2⌉ = 9
-    assert(Similarity.ivfSizing(1L << 46, 0, 6, 4 << 20) == (4 << 20, 9))
+    // small n: rule of thumb untouched, nProbe (6) passes through
+    assert(Similarity.ivfSizing(500L, 4 << 20) == (23, 6))
+    // past 2^44 rows: √n = 2^23 > cap 2^22 → k clamps to the cap;
+    // deficit ratio 2 → nProbe ⌈6·√2⌉ = 9
+    assert(Similarity.ivfSizing(1L << 46, 4 << 20) == (4 << 20, 9))
     // extreme deficit: the bump saturates at 4× nProbe, never a scan
-    assert(Similarity.ivfSizing(1L << 62, 0, 6, 4 << 20) == (4 << 20, 24))
+    assert(Similarity.ivfSizing(1L << 62, 4 << 20) == (4 << 20, 24))
     // tiny cap with tiny k: the bump can never exceed k lists
-    assert(Similarity.ivfSizing(1L << 40, 0, 6, 4) == (4, 4))
+    assert(Similarity.ivfSizing(1L << 40, 4) == (4, 4))
   }
 
   test("q30 IVF ANN under a forced tiny codebook cap: recall holds") {
@@ -134,8 +144,10 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
-    val a = Similarity.kmeansParInit(spark, emb, 24, rounds = 2, wCells = 4)
-    val b = Similarity.kmeansParInit(spark, emb, 24, rounds = 2, wCells = 4)
+    // round 0's center: the min-vec_id row, as q30's sizing pass takes it
+    val seed0 = emb.rdd.takeOrdered(1)(Ordering.by(_._1)).head
+    val a = Similarity.kmeansParInit(spark, emb, 24, wCells = 4, seed0 = seed0)
+    val b = Similarity.kmeansParInit(spark, emb, 24, wCells = 4, seed0 = seed0)
     assert(a.length == 24 && b.length == 24)
     assert(a.indices.forall(i => java.util.Arrays.equals(a(i), b(i))),
       "k-means|| init must be deterministic per input")

@@ -435,24 +435,8 @@ object ScaleProbe {
           // the exact ppjoin's raw prefix co-occurrence pairs
           import spark.implicits._
           import graft.operators.TextOps
-          val docs = spark.read.parquet(s"$dir/documents.parquet")
-            .select($"doc_id", $"text").as[(Long, String)]
-          val bandRows = docs.mapPartitions { it =>
-            it.flatMap { case (id, text) =>
-              val sh = if (text == null) Array.emptyLongArray
-                       else TextOps.shingleHashes(text, TextOps.ShingleSize)
-              if (sh.isEmpty) Iterator.empty
-              else {
-                val sig = TextOps.minHashSignature(sh)
-                (0 until TextOps.Bands).iterator.map { b =>
-                  var h = 0x9e3779b97f4a7c15L ^ b
-                  var r = 0
-                  while (r < TextOps.RowsPerBand) { h = TextOps.mix(h ^ sig(b * TextOps.RowsPerBand + r)); r += 1 }
-                  (h, id, sh.length)
-                }
-              }
-            }
-          }.toDF("bucket", "doc_id", "sz")
+          val bandRows = TextOps.q17BandRows(
+            spark, spark.read.parquet(s"$dir/documents.parquet"), 0.7)
           val t0 = System.nanoTime()
           val bandCands = bandRows.select($"bucket", $"doc_id".as("doc_a"), $"sz".as("sz_a"))
             .join(bandRows.select($"bucket", $"doc_id".as("doc_b"), $"sz".as("sz_b"))

@@ -177,8 +177,7 @@ class StreamingFuzzSpec extends AnyFunSuite {
         val t = hostileText(r)
         val tstamp = hostileTsIn(r, lo, hi)
         if (tstamp == null || t == null ||
-            graft.operators.TextOps.shingleHashes(
-              if (t == null) "" else t, graft.operators.TextOps.ShingleSize).isEmpty)
+            graft.operators.TextOps.shingleHashes(t).isEmpty)
           poison += id
         (id, tstamp, t)
       }
