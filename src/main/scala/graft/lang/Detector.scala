@@ -49,71 +49,6 @@ object DetectorConfig {
   )
 }
 
-/** Minimal primitive open-addressing Long set for per-size n-gram dedup
-  * (reference dedups each size's n-grams across the whole text via a
-  * seen-set: src/ngrams.rs:34-43).
-  */
-private[lang] final class LongSeenSet(initialCap: Int) {
-  private var cap = Integer.highestOneBit(math.max(16, initialCap) * 2)
-  private var keys = new Array[Long](cap)
-  // epoch-tagged slots: clear() bumps the epoch instead of zeroing the
-  // array (clearing a grown table once per n-gram size per document was
-  // costing more than the probes on short texts)
-  private var epochs = new Array[Int](cap)
-  private var epoch = 1
-  private var n = 0
-
-  @inline private def slotOf(key: Long, m: Int): Int = {
-    var h = key
-    h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-    h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-    (h ^ (h >>> 31)).toInt & m
-  }
-
-  /** returns true if newly added */
-  def add(key: Long): Boolean = {
-    var i = slotOf(key, cap - 1)
-    while (epochs(i) == epoch) {
-      if (keys(i) == key) return false
-      i = (i + 1) & (cap - 1)
-    }
-    keys(i) = key
-    epochs(i) = epoch
-    n += 1
-    if (n * 2 > cap) grow()
-    true
-  }
-
-  def clear(): Unit = {
-    n = 0
-    if (epoch == Int.MaxValue) {
-      java.util.Arrays.fill(epochs, 0)
-      epoch = 1
-    } else epoch += 1
-  }
-
-  private def grow(): Unit = {
-    val oldK = keys
-    val oldE = epochs
-    cap <<= 1
-    keys = new Array[Long](cap)
-    epochs = new Array[Int](cap)
-    n = 0
-    var i = 0
-    while (i < oldK.length) {
-      if (oldE(i) == epoch) {
-        val k = oldK(i)
-        var j = slotOf(k, cap - 1)
-        while (epochs(j) == epoch) j = (j + 1) & (cap - 1)
-        keys(j) = k
-        epochs(j) = epoch
-        n += 1
-      }
-      i += 1
-    }
-  }
-}
-
 /** One ranked result: language ordinal + (log or relative) probability. */
 final case class Scored(langId: Int, prob: Double)
 
@@ -152,21 +87,24 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
   // candidate set as a bitmask, ANDed against ProbTable's per-slot
   // language masks (see probeNgram)
   private val candMask = new Array[Long]((nLangs + 63) >> 6)
-  // one seen-set per char-gram size: the windowing pass walks each start
+  // one seen-set per char-gram size (a LongCounter: an n-gram is new
+  // when its count becomes 1): the windowing pass walks each start
   // position ONCE, extending one rolling FNV prefix and emitting every
   // enabled size — per-size dedup is preserved by giving each size its
   // own set (same distinct-ngram sets as the reference's per-size pass,
   // src/ngrams.rs:34-43)
-  private val seens = Array.fill(5)(new LongSeenSet(256))
+  private val seens = Array.fill(5)(new LongCounter(256))
 
-  /** Diagnostics from the LAST probabilities call (valid until the next
-    * call): distinct n-grams probed and per-language hit counts (used by the
-    * pipeline's model-coverage gate), and the token buffer (reused across
-    * calls; read it before the next detection).
+  /** Diagnostics of the LAST detection, whichever entry point ran it, valid
+    * until the next one: `lastProbedCount` is the number of distinct
+    * n-grams probed, `lastHitCount(l)` how many of them hit language `l`
+    * (the pipeline's model-coverage gate), and `tokens` the token buffer.
+    * A call that probed nothing (empty text, no candidate, or the
+    * single-candidate shortcut) reports 0 for both counts.
     */
   private var probedCount = 0
   def lastProbedCount: Int = probedCount
-  def lastHitCount(langId: Int): Int = cnts(langId)
+  def lastHitCount(langId: Int): Int = if (probedCount == 0) 0 else cnts(langId)
   private val tokBuf = new Tokenizer.TokenBuf
   private val prefCounts = new Array[Long](ScriptLang.count)
   private val candBuf = new Array[Int](ScriptLang.count)
@@ -187,9 +125,9 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
     out
   }
 
-  /** Allocation-free detection: fills the reused result arrays and returns
-    * the ranked count; read via resultLang/resultProb (valid until the
-    * next call). The pipeline kernel's entry point.
+  /** Allocation-free detection: fills the reused result arrays (valid
+    * until the next call) and returns the ranked count. The pipeline
+    * kernel's entry point; every other entry point calls it.
     */
   def detectInPlace(text: String): Int = {
     probedCount = 0 // reset up-front: early-return paths must not leak stale diagnostics
@@ -283,7 +221,7 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
           h = NgramHash.step(h, cps(start + len))
           if ((sizeBits & (1 << len)) != 0) { // size index == len (window len-1+1)
             val key = if (h == 0L) NgramHash.ZeroRemap else h
-            if (seens(len).add(key)) {
+            if (seens(len).increment(key) == 1) {
               probedCount += 1
               if (probeNgram(model.charTables(len), key)) charHitNgrams += 1
             }
@@ -355,7 +293,7 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
     * ordinal asc tiebreak — src/detector/mod.rs:310,455-464). Off the hot
     * path: top-one and confidence consumers work on the unsorted arrays.
     */
-  def sortResults(): Unit = {
+  private def sortResults(): Unit = {
     if (resSorted) return
     var i = 1
     while (i < resN) {
@@ -376,8 +314,8 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
 
   /** In-place result of the LAST detection: language ids / log probs in
     * reused arrays (valid until the next call). UNSORTED unless
-    * sortResults() has been called; the (prob desc, ordinal asc) top
-    * entry is always available via topLang/topProb.
+    * sortResults() has been called; the (prob desc, ordinal asc) top-2
+    * are tracked in t1Lang/t1Prob/t2Prob.
     */
   private val resLangs = new Array[Int](ScriptLang.count)
   private val resProbs = new Array[Double](ScriptLang.count)
@@ -386,11 +324,9 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
   private var t1Prob = Double.NaN
   private var t1Lang = -1
   private var t2Prob = Double.NegativeInfinity
-  def resultCount: Int = resN
-  def resultLang(i: Int): Int = resLangs(i)
-  def resultProb(i: Int): Double = resProbs(i)
-  /** top-1 of the reference result order (valid when resultCount > 0) */
-  def topLang: Int = t1Lang
+  /** top-1 log prob of the reference result order (valid when the last
+    * detection ranked any language)
+    */
   def topProb: Double = t1Prob
 
   /** Popularity reorder pick over the in-place result (reference:
@@ -446,39 +382,63 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
     true
   }
 
-  /** Softmax with the reference's special cases
-    * (src/detector/mod.rs:467-510): top==0.0 → keep only the zeros, uniform;
-    * top==−∞ → uniform; exp-sum==0 → singleton 1.0.
+  /** The softmax distribution of the reference (src/detector/mod.rs:467-510),
+    * in `probabilities` order, with its special cases: top == 0.0 keeps
+    * only the zero entries, uniformly; top == −∞ keeps every entry,
+    * uniformly; an exp-sum of 0 leaves the top entry alone at 1.0;
+    * otherwise every entry gets exp(p) / Σ exp.
     */
-  def probabilitiesRelative(text: String): ArrayBuffer[Scored] =
-    relativize(probabilities(text))
-
-  private def relativize(probs: ArrayBuffer[Scored]): ArrayBuffer[Scored] = {
-    if (probs.isEmpty) return probs
-    val first = probs(0).prob
-    var kept = probs
-    if (first == 0.0) {
-      val zeros = kept.indexWhere(_.prob != 0.0) match {
-        case -1 => kept.length
-        case i  => i
-      }
-      kept = kept.take(zeros)
+  def probabilitiesRelative(text: String): ArrayBuffer[Scored] = {
+    detectInPlace(text)
+    sortResults()
+    val norm = softmaxNorm()
+    val out = new ArrayBuffer[Scored](resN)
+    var i = 0
+    while (i < resN) {
+      if (inSoftmax(i, norm)) out += Scored(resLangs(i), relative(i, norm))
+      i += 1
     }
-    if (first == 0.0 || first == Double.NegativeInfinity) {
-      val u = 1.0 / kept.length
-      return kept.map(s => Scored(s.langId, u))
-    }
-    var denom = 0.0
-    val exped = kept.map { s =>
-      val e = math.exp(s.prob)
-      denom += e
-      Scored(s.langId, e)
-    }
-    if (denom == 0.0) {
-      return ArrayBuffer(Scored(exped(0).langId, 1.0))
-    }
-    exped.map(s => Scored(s.langId, s.prob / denom))
+    out
   }
+
+  /** Softmax relative probability of `lang` over the LAST detection: its
+    * `probabilitiesRelative` entry, 0.0 when it has none. Allocation-free;
+    * detectWithConfidence and the pipeline kernel call it.
+    */
+  def confidenceOfInPlace(lang: Int): Double = {
+    val norm = softmaxNorm()
+    var i = 0
+    while (i < resN && resLangs(i) != lang) i += 1
+    if (i == resN || !inSoftmax(i, norm)) 0.0 else relative(i, norm)
+  }
+
+  // The one softmax over the in-place result: `softmaxNorm` is the count
+  // of uniform entries (top == 0.0 or −∞) or the exp-sum, `inSoftmax(i)`
+  // says whether entry i keeps a probability, `relative(i)` is that
+  // probability. Order-free except for the exp-sum's summation order.
+  private def softmaxNorm(): Double =
+    if (t1Prob == 0.0) {
+      var zeros = 0
+      var i = 0
+      while (i < resN) { if (resProbs(i) == 0.0) zeros += 1; i += 1 }
+      zeros
+    } else if (t1Prob == Double.NegativeInfinity) resN
+    else {
+      var denom = 0.0
+      var i = 0
+      while (i < resN) { denom += math.exp(resProbs(i)); i += 1 }
+      denom
+    }
+
+  private def inSoftmax(i: Int, norm: Double): Boolean =
+    if (t1Prob == 0.0) resProbs(i) == 0.0
+    else if (norm == 0.0) resLangs(i) == t1Lang
+    else true
+
+  private def relative(i: Int, norm: Double): Double =
+    if (t1Prob == 0.0 || t1Prob == Double.NegativeInfinity) 1.0 / norm
+    else if (norm == 0.0) 1.0
+    else math.exp(resProbs(i)) / norm
 
   /** Top-1 with min-distance gate (reference: src/detector/mod.rs:351-374).
     * Allocation-free: works off the tracked top-2 of the in-place result.
@@ -511,45 +471,6 @@ final class Detector(val model: PackedModel, val config: DetectorConfig) extends
   def detectTopOneRaw(text: String): Option[Int] = {
     val n = detectInPlace(text)
     if (n == 0) None else Some(reorderPickInPlace(0.0))
-  }
-
-  /** Softmax relative probability of `lang` over the LAST detectInPlace
-    * result — `relativize` without the buffer allocation, same special
-    * cases (src/detector/mod.rs:467-510). Shared by detectWithConfidence
-    * and the pipeline kernel so the edge cases cannot drift apart.
-    */
-  def confidenceOfInPlace(lang: Int): Double = {
-    if (resN == 0) return 0.0
-    val first = t1Prob
-    if (first == 0.0) {
-      // only the zero-prob langs survive relativization, uniformly
-      // (order-free: count all zero-prob entries in the unsorted result)
-      var zeros = 0
-      var pickIsZero = false
-      var i = 0
-      while (i < resN) {
-        if (resProbs(i) == 0.0) {
-          if (resLangs(i) == lang) pickIsZero = true
-          zeros += 1
-        }
-        i += 1
-      }
-      if (pickIsZero) 1.0 / zeros else 0.0
-    } else if (first == Double.NegativeInfinity) {
-      1.0 / resN
-    } else {
-      var denom = 0.0
-      var p = first
-      var i = 0
-      while (i < resN) {
-        val pi = resProbs(i)
-        denom += math.exp(pi)
-        if (resLangs(i) == lang) p = pi
-        i += 1
-      }
-      if (denom == 0.0) { if (lang == t1Lang) 1.0 else 0.0 }
-      else math.exp(p) / denom
-    }
   }
 
   /** (langCode, top-1 relative confidence) convenience for pipeline columns.

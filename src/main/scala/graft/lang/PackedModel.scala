@@ -42,6 +42,18 @@ object NgramHash {
     }
     if (h == 0L) ZeroRemap else h
   }
+
+  /** Stafford's mix13 64-bit finalizer: spreads FNV keys over table slots
+    * (ProbTable, LongCounter) and seeds every hash-derived choice of the
+    * similarity operators (MinHash permutations, band keys, q19 prefix
+    * keys, q26 hyperplanes, k-means|| picks), so it must stay bit-stable.
+    */
+  @inline def mix(x0: Long): Long = {
+    var x = x0
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
 }
 
 /** One n-gram-size lookup table: open-addressing Long→postings-slice map.
@@ -122,7 +134,7 @@ final class ProbTable private (
     false
   }
 
-  /** Home-slot bitmap: bit `slot(key)` is set for every stored key. A
+  /** Home-slot bitmap: bit `slotOf(key)` is set for every stored key. A
     * clear bit PROVES absence (a stored key always sets its own home
     * slot, wherever displacement lands it), so the dominant case on real
     * text — n-grams absent from every model — resolves with one load in
@@ -138,7 +150,7 @@ final class ProbTable private (
     var i = 0
     while (i < keys.length) {
       if (keys(i) != 0L) {
-        val s = slot(keys(i))
+        val s = ProbTable.slotOf(keys(i), mask)
         b(s >> 6) |= (1L << (s & 63))
       }
       i += 1
@@ -146,17 +158,9 @@ final class ProbTable private (
     b
   }
 
-  @inline private def slot(key: Long): Int = {
-    // Stafford mix13 finalizer spreads FNV output over table slots
-    var h = key
-    h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-    h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-    (h ^ (h >>> 31)).toInt & mask
-  }
-
   /** index of key's slot or -1 */
   @inline def find(key: Long): Int = {
-    val s = slot(key)
+    val s = ProbTable.slotOf(key, mask)
     if (((homeBits(s >> 6) >>> (s & 63)) & 1L) == 0L) return -1
     var i = s
     var k = keys(i)
@@ -172,6 +176,9 @@ final class ProbTable private (
 }
 
 object ProbTable {
+  /** Home slot of `key` in a table of `mask + 1` slots. */
+  @inline private def slotOf(key: Long, mask: Int): Int = NgramHash.mix(key).toInt & mask
+
   /** The one way to build a ProbTable, shared by both packers:
     * `PackedModel.fromModels` feeds it from its per-size driver maps, and
     * `ModelIO.packDistributed` streams (key, postings) entries into it
@@ -193,10 +200,7 @@ object ProbTable {
     /** postings must already be sorted by langId. */
     def add(key0: Long, langs: Array[Int], probs: Array[Double]): Unit = {
       val key = if (key0 == 0L) NgramHash.ZeroRemap else key0
-      var h = key
-      h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-      h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-      var i = (h ^ (h >>> 31)).toInt & mask
+      var i = slotOf(key, mask)
       while (keys(i) != 0L) {
         require(keys(i) != key, s"duplicate ngram key $key")
         i = (i + 1) & mask

@@ -81,8 +81,7 @@ object LangOps {
   def registerSql(spark: SparkSession): Unit = {
     val bc = broadcastModel(spark)
     val f = org.apache.spark.sql.functions.udf { (text: String) =>
-      if (text == null) ("und", 0.0)
-      else detectorFor(bc.value).detectWithConfidence(text)
+      detectorFor(bc.value).detectWithConfidence(text)
     }
     spark.udf.register("detect_lang", f)
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.lang.NgramHash
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -85,11 +86,8 @@ object Similarity {
     * side — versioned like the n-gram hash.
     */
   private def planeComponent(plane: Int, dim: Int): Double = {
-    var x = (plane.toLong << 32) ^ dim.toLong ^ 0x6a09e667f3bcc909L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x = x ^ (x >>> 31)
-    (x.toDouble / Long.MaxValue.toDouble)
+    val x = NgramHash.mix((plane.toLong << 32) ^ dim.toLong ^ 0x6a09e667f3bcc909L)
+    x.toDouble / Long.MaxValue.toDouble
   }
 
   /** Bucket-signature width scales with corpus size: planes =
@@ -430,7 +428,7 @@ object Similarity {
       seed0: (Long, Array[Double])): Array[Array[Double]] = {
     import spark.implicits._
     def uniform(id: Long, r: Int): Double =
-      ((graft.operators.TextOps.mix(id ^ (InitSeed + r * 0x632be59bd9b4e019L)) >>> 11).toDouble
+      ((NgramHash.mix(id ^ (InitSeed + r * 0x632be59bd9b4e019L)) >>> 11).toDouble
         / (1L << 53).toDouble)
 
     val cands = ArrayBuffer(seed0)

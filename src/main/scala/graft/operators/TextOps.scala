@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.lang.NgramHash
+import graft.lang.NgramHash.mix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
@@ -140,13 +141,6 @@ object TextOps {
       r += 1
     }
     java.util.Arrays.copyOf(out, w)
-  }
-
-  @inline private[graft] def mix(x0: Long): Long = {
-    var x = x0
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
   }
 
   /** LSH calibration (measured on the synthetic corpus, BENCH.md): 5-char

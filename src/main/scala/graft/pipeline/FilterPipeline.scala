@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.lang.{Detector, DetectorConfig, PackedModel, ScriptLang}
+import graft.lang.{Detector, DetectorConfig, LongCounter, PackedModel, ScriptLang}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -135,55 +135,6 @@ object FilterPipeline {
       stopword_ratio: Double, n_lines: Int, max_line_len: Int,
       text_hash: Long, scrubbed_text: String)
 
-  /** Primitive open-addressing Long→count map, reused across a partition —
-    * word-frequency without boxing. Epoch-tagged slots: clear() bumps the
-    * epoch instead of zeroing the (possibly grown) table per document.
-    */
-  private final class LongIntCounter(initialCap: Int) {
-    private var cap = Integer.highestOneBit(math.max(16, initialCap) * 2)
-    private var keys = new Array[Long](cap)
-    private var vals = new Array[Int](cap)
-    private var epochs = new Array[Int](cap)
-    private var epoch = 1
-    private var n = 0
-    def clear(): Unit = {
-      n = 0
-      if (epoch == Int.MaxValue) { java.util.Arrays.fill(epochs, 0); epoch = 1 }
-      else epoch += 1
-    }
-    def increment(key: Long): Int = {
-      var h = key
-      h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-      h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-      var i = (h ^ (h >>> 31)).toInt & (cap - 1)
-      while (epochs(i) == epoch && keys(i) != key) i = (i + 1) & (cap - 1)
-      if (epochs(i) != epoch) {
-        keys(i) = key; vals(i) = 0; epochs(i) = epoch; n += 1
-        if (n * 2 > cap) { grow(); return increment(key) }
-      }
-      vals(i) += 1
-      vals(i)
-    }
-    private def grow(): Unit = {
-      val ok = keys; val ov = vals; val oe = epochs
-      cap <<= 1
-      keys = new Array[Long](cap); vals = new Array[Int](cap); epochs = new Array[Int](cap)
-      n = 0
-      var i = 0
-      while (i < ok.length) {
-        if (oe(i) == epoch) {
-          var h = ok(i)
-          h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-          h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-          var j = (h ^ (h >>> 31)).toInt & (cap - 1)
-          while (epochs(j) == epoch) j = (j + 1) & (cap - 1)
-          keys(j) = ok(i); vals(j) = ov(i); epochs(j) = epoch; n += 1
-        }
-        i += 1
-      }
-    }
-  }
-
   /** The fused per-document kernel: ONE pass computes language + confidence
     * + perplexity proxy (exp(−mean log-prob) of the top candidate —
     * the langram score IS an n-gram LM) + quality features + scrub.
@@ -206,7 +157,7 @@ object FilterPipeline {
       config: DetectorConfig
   ): (String, java.sql.Timestamp, String) => DocResult = {
     val det = new Detector(model, config)
-    val wordFreq = new LongIntCounter(512)
+    val wordFreq = new LongCounter(512)
     (url, ts, text) => processDoc(model, det, wordFreq, url, ts, text)
   }
 
@@ -221,7 +172,7 @@ object FilterPipeline {
   private def processDoc(
       model: PackedModel,
       det: Detector,
-      wordFreq: LongIntCounter,
+      wordFreq: LongCounter,
       url: String,
       ts: java.sql.Timestamp,
       text0: String
@@ -244,7 +195,7 @@ object FilterPipeline {
       if (nRanked > 0) {
         val best = det.reorderPickInPlace(det.defaultReorderDistance)
         lang = ScriptLang.code(best)
-        // softmax relative prob (Detector owns the relativize edge cases)
+        // softmax relative prob (Detector owns the softmax special cases)
         conf = det.confidenceOfInPlace(best)
         val first = det.topProb // results are unsorted; topProb is rank-1
         perplexity =

@@ -17,13 +17,53 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingFilter {
 
-  /** Per-(host,text_hash) dedup state: first emitted copy + newest copy's
-    * event time (staleness bound for the horizon check).
+  /** Per-(host,text_hash) dedup state: the newest copy's event time
+    * (staleness bound for the horizon check).
     */
-  final case class SeenState(firstUrl: String, newestMs: Long)
+  final case class SeenState(newestMs: Long)
 
   /** How long past its newest copy a (host, text_hash) entry is kept. */
   private[streaming] final val DedupHorizonMs = 7L * 86400000L
+
+  /** The first-arrival-within-horizon step of both streaming operators, for
+    * one key's micro-batch: a row arriving within `DedupHorizonMs` of the
+    * key's newest arrival belongs to the current generation, whose first
+    * arrival wins (the "item batch" rule of Clock-Sketch, PAPERS.md).
+    *
+    * `arrival` orders the rows: event time in ms, then a tie-break. `emit`
+    * gets the batch's rows in that order, the generation's state before
+    * this batch (None: the first row opens a new generation) and the
+    * newest event time, and returns the state to keep and the rows to
+    * emit. The entry expires `DedupHorizonMs` past its newest arrival
+    * (event-time timeout, watermark-driven).
+    */
+  private[streaming] def firstWithinHorizon[R, T: Ordering, S, O](
+      rows: Iterator[R],
+      state: GroupState[S],
+      arrival: R => (Long, T),
+      newestMs: S => Long
+  )(emit: (Seq[R], Option[S], Long) => (S, Iterator[O])): Iterator[O] = {
+    if (state.hasTimedOut) {
+      // idle key: the watermark passed newest + horizon with no data
+      state.remove()
+      return Iterator.empty
+    }
+    val buf = rows.toSeq.sortBy(arrival)
+    if (buf.isEmpty) return Iterator.empty
+    val watermark = state.getCurrentWatermarkMs()
+    // EventTimeTimeout only fires for keys with NO data in the batch — a
+    // key receiving data past its horizon must detect its own staleness
+    // and start a fresh generation
+    val current = state.getOption.filter(s => watermark <= newestMs(s) + DedupHorizonMs)
+    val newest = math.max(buf.iterator.map(arrival(_)._1).max,
+      current.fold(Long.MinValue)(newestMs))
+    val (next, out) = emit(buf, current, newest)
+    state.update(next)
+    // clamped above the watermark: very-late data would otherwise set an
+    // already-passed timeout, which Spark rejects
+    state.setTimeoutTimestamp(math.max(newest + DedupHorizonMs, watermark + 1))
+    out
+  }
 
   def docStream(
       spark: SparkSession,
@@ -56,15 +96,14 @@ object StreamingFilter {
 
   /** Stateful first-wins dedup + gates; Append-mode output with the same
     * columns as the batch pipeline (dup detection via GroupState instead of
-    * a window function).
+    * a window function): the first copy of a `firstWithinHorizon`
+    * generation gets dup rank 1, every other copy 2.
     *
-    * State is BOUNDED by an event-time timeout: a (host, text_hash) entry
-    * expires `DedupHorizonMs` past its newest copy's event time (driven by
-    * the `warc_ts` watermark) — without it, one state entry per distinct
-    * page lives forever and the state store grows without bound at crawl
-    * scale. A duplicate arriving later than the horizon is treated as new
-    * content (the standard bounded-dedup contract, cf.
-    * dropDuplicatesWithinWatermark).
+    * State is BOUNDED by the event-time timeout of `firstWithinHorizon` —
+    * without it, one state entry per distinct page lives forever and the
+    * state store grows without bound at crawl scale. A duplicate arriving
+    * later than the horizon is treated as new content (the standard
+    * bounded-dedup contract, cf. dropDuplicatesWithinWatermark).
     */
   def filtered(docs: Dataset[FilterPipeline.DocResult]): DataFrame = {
     import docs.sparkSession.implicits._
@@ -74,41 +113,15 @@ object StreamingFilter {
       .groupByKey(d => (d.host, d.text_hash))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (_: (String, Long), rows: Iterator[FilterPipeline.DocResult],
-         state: GroupState[SeenState]) => {
-          if (state.hasTimedOut) {
-            // idle key: the watermark passed newest + horizon with no data
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = rows.toSeq.sortBy(d => (d.warc_ts.getTime, d.url))
-            if (buf.isEmpty) Iterator.empty
-            else {
-              // EventTimeTimeout only fires for keys with NO data in the
-              // batch — a key receiving data past its horizon must detect
-              // its own staleness and start a fresh dedup generation
-              val stale = state.getOption.exists(s =>
-                state.getCurrentWatermarkMs() > s.newestMs + DedupHorizonMs)
-              if (stale) state.remove()
-              val newest = math.max(
-                buf.map(_.warc_ts.getTime).max,
-                state.getOption.map(_.newestMs).getOrElse(Long.MinValue))
-              val out =
-                if (state.exists) {
-                  state.update(state.get.copy(newestMs = newest))
-                  buf.iterator.map(d => (d, 2))
-                } else {
-                  state.update(SeenState(buf.head.url, newest))
-                  Iterator.single((buf.head, 1)) ++ buf.tail.iterator.map(d => (d, 2))
-                }
-              // keep the entry alive until horizon past the newest copy
-              // (clamped above the watermark: very-late data would otherwise
-              // set an already-passed timeout, which Spark rejects)
-              state.setTimeoutTimestamp(
-                math.max(newest + DedupHorizonMs, state.getCurrentWatermarkMs() + 1))
-              out
+         state: GroupState[SeenState]) =>
+          firstWithinHorizon(rows, state,
+              (d: FilterPipeline.DocResult) => (d.warc_ts.getTime, d.url),
+              (s: SeenState) => s.newestMs) { (buf, current, newest) =>
+            val ranks = buf.iterator.zipWithIndex.map { case (d, i) =>
+              (d, if (i == 0 && current.isEmpty) 1 else 2)
             }
+            (SeenState(newest), ranks)
           }
-        }
       )
       .toDF("doc", "dup_rank")
       .select($"doc.*", $"dup_rank")

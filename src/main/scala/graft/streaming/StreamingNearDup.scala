@@ -19,11 +19,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (q17) or consumed as-is where banding precision suffices.
   *
   * State: one entry per occupied (band, band_hash) bucket — owner doc_id +
-  * newest event time, 24 bytes — bounded by an event-time timeout exactly
-  * like StreamingFilter's dedup state, on the same horizon: a bucket
-  * expires `StreamingFilter.DedupHorizonMs` (7 days) past its newest hit
-  * (watermark-driven), so the store size follows the distinct-bucket rate
-  * of the horizon window, not the full history.
+  * newest event time, 24 bytes — kept by the same first-wins horizon step
+  * as StreamingFilter's dedup state (`StreamingFilter.firstWithinHorizon`):
+  * a bucket expires `StreamingFilter.DedupHorizonMs` (7 days) past its
+  * newest hit (watermark-driven), so the store size follows the
+  * distinct-bucket rate of the horizon window, not the full history.
   */
 object StreamingNearDup {
 
@@ -46,7 +46,6 @@ object StreamingNearDup {
     */
   def candidates(docs: Dataset[(Long, java.sql.Timestamp, String)]): Dataset[Candidate] = {
     import docs.sparkSession.implicits._
-    val horizonMs = StreamingFilter.DedupHorizonMs
 
     // banding first (typed map), THEN the watermark on the band rows' ts —
     // the stateful operator needs the watermark on a surviving column
@@ -71,40 +70,18 @@ object StreamingNearDup {
     bands
       .groupByKey(r => (r.band, r.hash))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: (Int, Long), rows: Iterator[BandRow], state: GroupState[BucketState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = rows.toSeq.sortBy(r => (r.ts.getTime, r.docId))
-            if (buf.isEmpty) Iterator.empty
-            else {
-              // EventTimeTimeout fires only for keys with no data in the
-              // batch; a key receiving data past its horizon starts a
-              // fresh ownership generation (cf. StreamingFilter.filtered)
-              val stale = state.getOption.exists(s =>
-                state.getCurrentWatermarkMs() > s.newestMs + horizonMs)
-              if (stale) state.remove()
-              val newest = math.max(
-                buf.map(_.ts.getTime).max,
-                state.getOption.map(_.newestMs).getOrElse(Long.MinValue))
-              val out: Iterator[Candidate] = state.getOption match {
-                case Some(s) =>
-                  state.update(s.copy(newestMs = newest))
-                  buf.iterator
-                    .filter(_.docId != s.ownerId)
-                    .map(r => Candidate(r.docId, s.ownerId, r.ts))
-                case None =>
-                  val owner = buf.head
-                  state.update(BucketState(owner.docId, newest))
-                  buf.tail.iterator.map(r => Candidate(r.docId, owner.docId, r.ts))
-              }
-              state.setTimeoutTimestamp(
-                math.max(newest + horizonMs, state.getCurrentWatermarkMs() + 1))
-              out
+        (_: (Int, Long), rows: Iterator[BandRow], state: GroupState[BucketState]) =>
+          StreamingFilter.firstWithinHorizon(rows, state,
+              (r: BandRow) => (r.ts.getTime, r.docId),
+              (s: BucketState) => s.newestMs) { (buf, current, newest) =>
+            // the generation's first document owns the bucket; every other
+            // arrival is a candidate of the owner
+            val (owner, hits) = current match {
+              case Some(s) => (s.ownerId, buf.iterator.filter(_.docId != s.ownerId))
+              case None    => (buf.head.docId, buf.tail.iterator)
             }
+            (BucketState(owner, newest), hits.map(r => Candidate(r.docId, owner, r.ts)))
           }
-        }
       )
       // cross-band dedup WITHIN each micro-batch, stateless: the hash
       // repartition co-locates a batch's duplicate (doc, owner) rows and

@@ -105,6 +105,18 @@ class DetectorSpec extends AnyFunSuite {
     assert(probsOnce.map(s => (s.langId, s.prob)) == probsTwice.map(s => (s.langId, s.prob)))
   }
 
+  test("hit counts are 0 after a call that probed nothing") {
+    val d = detectorEnDe
+    d.detectInPlace("Alter")
+    assert(d.lastHitCount(de) > 0)
+    d.detectInPlace("groß") // single candidate: answered without probing
+    assert(d.lastProbedCount == 0)
+    assert(d.lastHitCount(de) == 0)
+    d.detectInPlace("Alter")
+    d.detectInPlace("")
+    assert(d.lastHitCount(de) == 0 && d.lastHitCount(en) == 0)
+  }
+
   test("tokenizer: combining marks dropped, case folded, punctuation splits") {
     val buf = new Tokenizer.TokenBuf
     Tokenizer.tokenizeInto("indi̇vi̇si̇bi̇li̇ty I'm 3<8%", buf)
