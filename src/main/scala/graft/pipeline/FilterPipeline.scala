@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *  - `html` is never read on this path (column pruning reaches the scan;
   *    asserted in PlanSpec);
   *  - the model is a broadcast variable, not a join;
-  *  - ONE wide exchange total, keyed by (xxhash64(host), xxhash64(text)):
+  *  - ONE wide exchange total, keyed by (xxhash64(host), xxhash64(text)),
+  *    after the day column when a run is scoped to days:
   *    the content hash spreads a Zipf-hot host uniformly (the skew
   *    defense, measured by SkewSpec) while co-locating exact duplicates
   *    for the dedup window; the fused kernel runs downstream shuffle-free;
@@ -71,26 +72,37 @@ object FilterPipeline {
     substring_index(u.substr(when(i > 0, i + 3).otherwise(1), length(u)), "/", 1)
   }
 
+  /** The gate's rules in the order it applies them: a drop reason and
+    * the condition under which a row fails it.
+    */
+  private def dropRules(isDup: Column): Seq[(String, Column)] = Seq(
+    "dup" -> isDup,
+    "too_short" -> (col("word_count") < 20),
+    "repetition" -> (col("repetition_ratio") > 0.3),
+    "low_confidence" -> (col("confidence") < 0.5),
+    // fraction of probed n-grams that hit the model for the detected
+    // language: catches gibberish whose n-grams are absent from every
+    // model (absent n-grams carry no floor penalty, reference:
+    // src/detector/mod.rs:110-113)
+    "low_coverage" -> (col("coverage") < 0.2),
+    "high_perplexity" -> (col("perplexity") > 1e4))
+
+  /** Every `drop_reason` the gate can emit, in rule order. The snapshot
+    * manifests count rows per entry of this list.
+    */
+  val dropReasons: Seq[String] = dropRules(lit(false)).map(_._1)
+
   /** The keep/drop gate of both pipelines: `drop_reason` is the first rule
     * a row fails (null when it passes all) and `keep ⇔ drop_reason IS
     * NULL`. `isDup` marks a row that lost the host-scoped exact-dup rule.
     */
-  def gate(docs: DataFrame, isDup: Column): DataFrame =
+  def gate(docs: DataFrame, isDup: Column): DataFrame = {
+    val (first, firstCond) :: rest = dropRules(isDup).toList: @unchecked
+    val reason = rest.foldLeft(when(firstCond, first)) { case (c, (r, cond)) => c.when(cond, r) }
     docs
-      .withColumn(
-        "drop_reason",
-        when(isDup, "dup")
-          .when(col("word_count") < 20, "too_short")
-          .when(col("repetition_ratio") > 0.3, "repetition")
-          .when(col("confidence") < 0.5, "low_confidence")
-          // fraction of probed n-grams that hit the model for the detected
-          // language: catches gibberish whose n-grams are absent from every
-          // model (absent n-grams carry no floor penalty, reference:
-          // src/detector/mod.rs:110-113)
-          .when(col("coverage") < 0.2, "low_coverage")
-          .when(col("perplexity") > 1e4, "high_perplexity")
-          .otherwise(lit(null).cast("string")))
+      .withColumn("drop_reason", reason.otherwise(lit(null).cast("string")))
       .withColumn("keep", col("drop_reason").isNull)
+  }
 
   val toxicityRe = "\\b(idiot|stupid|moron|scum)\\b"
 
@@ -159,6 +171,18 @@ object FilterPipeline {
     val det = new Detector(model, config)
     val wordFreq = new LongCounter(512)
     (url, ts, text) => processDoc(model, det, wordFreq, url, ts, text)
+  }
+
+  /** `partitionKernel` for rows flagged by the dup rule: duplicates are
+    * dropped unconditionally, so they skip the detection/quality/scrub
+    * kernel (at crawl scale dups are a third of the corpus; their winner
+    * carries the processed copy).
+    */
+  private def flaggedKernel(
+      model: PackedModel
+  ): (String, java.sql.Timestamp, String, Boolean) => DocResult = {
+    val doc = partitionKernel(model, detectorConfig)
+    (url, ts, text, isDup) => if (isDup) dupDoc(url, ts, text) else doc(url, ts, text)
   }
 
   /** The row a duplicate carries instead of the kernel's output: it is
@@ -268,6 +292,15 @@ object FilterPipeline {
     * co-location. The fused detection kernel runs downstream with no
     * further shuffle, and SKIPS duplicate rows entirely.
     *
+    * `scope` names a column that splits the dup rule: a copy is a
+    * duplicate only of an earlier copy with the same scope value. The
+    * window and its exchange are then keyed by (scope, host, content
+    * hash), and the scope column is carried to the output as a string, so
+    * one run over several day partitions deduplicates each day exactly as
+    * a run over that day alone would (SnapshotStore.runResumable batches
+    * days this way). With no scope the rule spans the whole input, and the
+    * plan has no scope column at all.
+    *
     * Plan-shape notes from measured alternatives (BENCH.md):
     *  - row_number window vs min-aggregate + shuffled-hash join: the
     *    aggregate variant was built and measured — `min(struct(ts, url))`
@@ -291,38 +324,47 @@ object FilterPipeline {
   def run(
       spark: SparkSession,
       pages: DataFrame,
-      model: Broadcast[PackedModel]
+      model: Broadcast[PackedModel],
+      scope: Option[String] = None
   ): DataFrame = {
     import spark.implicits._
 
+    val scopeCols = scope.toSeq.map(s => col(s).cast("string").as(s))
     // group keys are 64-bit hashes of (host, text): grouping equality
     // within 64-bit collision bounds; the shuffle and the join probe run
     // on two longs, never on host/text strings
     val keyed = pages
-      .select($"url", $"warc_ts", $"text")
+      .select(Seq($"url", $"warc_ts", $"text") ++ scopeCols: _*)
       .withColumn("w_host", xxhash64(hostCol($"url")))
       .withColumn("w_hash", xxhash64($"text"))
 
-    // cross-row rule: first (by warc_ts, url) copy per (host, content) wins
+    // cross-row rule: first (by warc_ts, url) copy per (scope, host,
+    // content) wins
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"w_host", $"w_hash").orderBy($"warc_ts", $"url")
+      .partitionBy(scope.toSeq.map(col) ++ Seq($"w_host", $"w_hash"): _*)
+      .orderBy($"warc_ts", $"url")
     val flagged = keyed
       .withColumn("is_dup", row_number().over(w) > 1)
-      .select($"url", $"warc_ts", $"text", $"is_dup")
+      .select(Seq($"url", $"warc_ts", $"text", $"is_dup") ++ scope.toSeq.map(col): _*)
 
-    val mapped = flagged
-      .as[(String, java.sql.Timestamp, String, Boolean)]
-      .mapPartitions { it =>
-        val doc = partitionKernel(model.value, detectorConfig)
-        // duplicates are dropped unconditionally — don't spend the
-        // detection/quality/scrub kernel on them (at crawl scale dups are
-        // a third of the corpus; their winner carries the processed copy)
-        it.map { case (url, ts, text, isDup) =>
-          (if (isDup) dupDoc(url, ts, text) else doc(url, ts, text), isDup)
-        }
-      }
-      .toDF("doc", "is_dup")
-      .select($"doc.*", $"is_dup")
+    val mapped = scope match {
+      case None =>
+        flagged.as[(String, java.sql.Timestamp, String, Boolean)]
+          .mapPartitions { it =>
+            val doc = flaggedKernel(model.value)
+            it.map { case (url, ts, text, isDup) => (doc(url, ts, text, isDup), isDup) }
+          }
+          .toDF("doc", "is_dup")
+          .select($"doc.*", $"is_dup")
+      case Some(s) =>
+        flagged.as[(String, java.sql.Timestamp, String, Boolean, String)]
+          .mapPartitions { it =>
+            val doc = flaggedKernel(model.value)
+            it.map { case (url, ts, text, isDup, k) => (doc(url, ts, text, isDup), isDup, k) }
+          }
+          .toDF("doc", "is_dup", s)
+          .select($"doc.*", $"is_dup", col(s))
+    }
 
     // is_dup stays in the output: it is per-partition lineage (dup counts
     // by source partition) and lets the q28 gate-logic oracle recompute

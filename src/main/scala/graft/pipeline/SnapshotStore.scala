@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -56,9 +57,12 @@ final class SnapshotStore(root: String) {
     }
   }
 
+  /** The entries of the current snapshot, in commit order. */
+  def committedEntries(): Seq[PartitionEntry] =
+    currentManifest().map(readEntries).getOrElse(Seq.empty)
+
   /** Input partitions already committed in the current snapshot. */
-  def committedPartitions(): Set[String] =
-    currentManifest().map(readEntries(_).map(_.partition).toSet).getOrElse(Set.empty)
+  def committedPartitions(): Set[String] = committedEntries().map(_.partition).toSet
 
   private val manifestNameRe = """manifest-(\d+)\.json""".r
 
@@ -112,17 +116,58 @@ final class SnapshotStore(root: String) {
 
 object SnapshotStore {
 
+  /** Pending days in date order, cut into batches: a batch takes days
+    * while `bytesOf` its days fits one scan wave, and holds at least one
+    * day.
+    */
+  private def batches(days: Seq[String], bytesOf: Seq[String] => Long, wave: Long): Seq[Seq[String]] =
+    days.foldLeft(Vector.empty[Vector[String]]) {
+      case (done :+ cur, day) if bytesOf(cur :+ day) <= wave => done :+ (cur :+ day)
+      case (done, day) => done :+ Vector(day)
+    }
+
+  /** The input bytes of each day of a `p_date=` table, from its file
+    * index: listing the files runs no Spark job.
+    */
+  private def dayBytes(index: HadoopFsRelation): Map[String, Long] = {
+    val i = index.partitionSchema.fieldIndex("p_date")
+    index.location.listFiles(Nil, Nil)
+      .map(d => d.values.getUTF8String(i).toString -> d.files.map(_.getLen).sum)
+      .groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
   /** Run the filter pipeline over a day-partitioned pages table with
-    * resume: input partitions already in the current manifest are skipped;
-    * each processed partition's output is written under `data/p_date=…`
-    * and committed IMMEDIATELY (one atomic manifest move per partition,
-    * carrying forward all prior entries) — a crash mid-run loses at most
-    * the in-flight partition's lineage; everything committed before it
-    * resumes for free. The round-2 shape committed once at the END of the
-    * run, so a crash at partition k of n redid all k−1 finished
-    * partitions.
+    * resume: days already in the current manifest are skipped, and each
+    * processed day is committed on its own (one atomic manifest move per
+    * day, carrying forward all prior entries).
     *
-    * Returns the list of partitions processed in THIS run.
+    * Pending days run in batches, each ONE scan and ONE write:
+    *  - a batch takes pending days in date order while their input bytes
+    *    fit one scan wave, `defaultParallelism ×
+    *    spark.sql.files.maxPartitionBytes`, and holds at least one day. A
+    *    few small days then scan in parallel in one job; a day that fills
+    *    a wave runs alone;
+    *  - `FilterPipeline.run` is scoped by `p_date`, so each day of a batch
+    *    is deduplicated exactly as it would be alone;
+    *  - the batch is written with `partitionBy("p_date")` into `data/` and
+    *    dynamic partition overwrite, which replaces only the batch's days:
+    *    committed days are never touched, and a day left behind by a crash
+    *    is replaced on resume;
+    *  - each day's manifest counts (rows, kept, rows per drop reason) are
+    *    observed while the batch is written, not read back. After the
+    *    write the days are committed in date order, with
+    *    `onPartitionCommitted` after each commit.
+    *
+    * A crash therefore loses at most the uncommitted days of the in-flight
+    * batch, and a resume redoes exactly those days.
+    *
+    * A physical `p_date=` table lists its days and their bytes from the
+    * file index. Any other table stands in for Iceberg's hidden
+    * partitioning (`days(warc_ts)`): its p_date is derived from `warc_ts`,
+    * one `distinct` job lists the days, and every batch scans the whole
+    * table.
+    *
+    * Returns the days processed in THIS run.
     */
   def runResumable(
       spark: SparkSession,
@@ -139,41 +184,58 @@ object SnapshotStore {
     val store = new SnapshotStore(outRoot)
     val done = store.committedPartitions()
 
-    val raw = spark.read.parquet(pagesPath)
-    // hidden-partitioning stand-in: accept either a physical p_date= layout
-    // or a raw table (partition derived from warc_ts, like Iceberg's
-    // days(warc_ts) transform)
-    val pages =
-      if (raw.columns.contains("p_date")) raw
-      else raw.withColumn("p_date", date_format($"warc_ts", "yyyy-MM-dd"))
-    val allParts = pages.select($"p_date").distinct().as[String].collect().sorted
-    val todo = allParts.filterNot(done)
+    // the columns the pipeline reads, declared: inferring the schema from
+    // the files would cost a Spark job. A `p_date=` directory value reads
+    // as the declared string, not as an inferred date.
+    val raw = spark.read.schema("url STRING, warc_ts TIMESTAMP, text STRING, p_date STRING")
+      .parquet(pagesPath)
+    val index = raw.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case fs: HadoopFsRelation => fs }.get
+    val (pages, allDays, bytesOf) =
+      if (index.partitionSchema.fieldNames.contains("p_date")) {
+        val bytes = dayBytes(index)
+        (raw, bytes.keys.toSeq, (days: Seq[String]) => days.map(bytes).sum)
+      } else {
+        val derived = raw.withColumn("p_date", date_format($"warc_ts", "yyyy-MM-dd"))
+        (derived, derived.select($"p_date").distinct().as[String].collect().toSeq,
+          (_: Seq[String]) => index.location.sizeInBytes)
+      }
+    val todo = allDays.sorted.filterNot(done)
     if (todo.isEmpty) return Seq.empty
 
-    todo.zipWithIndex.foreach { case (part, idx) =>
-      val slice = pages.filter($"p_date" === part)
-      val result = FilterPipeline.run(spark, slice, model)
-      val out = store.dataPath(part)
-      result.write.mode("overwrite").parquet(out)
-      // metrics from the written snapshot (read back: single source of
-      // truth) in ONE job: keep ⇔ drop_reason IS NULL, so the null group
-      // is the kept count
-      val byReason = spark.read.parquet(out)
-        .groupBy($"drop_reason").count()
-        .as[(String, Long)].collect()
-      val kept = byReason.collectFirst { case (null, n) => n }.getOrElse(0L)
-      val drops = byReason.filter(_._1 != null).toMap
-      store.commit(
-        Seq(store.PartitionEntry(part, byReason.map(_._2).sum, kept, out, drops)),
-        Map(
-          "job" -> "quality_filter",
-          "model_hash" -> graft.lang.PackedModel.registryHash.toString,
-          "partitions_in_run" -> todo.length.toString,
-          "partition_in_run" -> (idx + 1).toString
+    val wave = spark.sparkContext.defaultParallelism.toLong *
+      spark.sessionState.conf.filesMaxPartitionBytes
+    var committed = 0
+    batches(todo, bytesOf, wave).foreach { batch =>
+      val day = $"p_date"
+      val result = FilterPipeline.run(spark, pages.filter(day.isin(batch: _*)), model, Some("p_date"))
+      // per day: rows, kept, and rows per drop reason
+      val counts = batch.flatMap { d =>
+        val inDay = day === d
+        Seq(count(when(inDay, 1)).as(s"$d rows"), count(when(inDay && $"keep", 1)).as(s"$d kept")) ++
+          FilterPipeline.dropReasons.map(r => count(when(inDay && $"drop_reason" === r, 1)).as(s"$d $r"))
+      }
+      val observed = Observation()
+      result.observe(observed, counts.head, counts.tail: _*)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("p_date").parquet(store.dataDir.toString)
+      val metrics = observed.get
+      def n(name: String): Long = metrics(name).asInstanceOf[Long]
+      batch.foreach { d =>
+        val drops = FilterPipeline.dropReasons.map(r => r -> n(s"$d $r")).filter(_._2 > 0).toMap
+        committed += 1
+        store.commit(
+          Seq(store.PartitionEntry(d, n(s"$d rows"), n(s"$d kept"), store.dataPath(d), drops)),
+          Map(
+            "job" -> "quality_filter",
+            "model_hash" -> graft.lang.PackedModel.registryHash.toString,
+            "partitions_in_run" -> todo.length.toString,
+            "partition_in_run" -> committed.toString
+          )
         )
-      )
-      onPartitionCommitted(part)
+        onPartitionCommitted(d)
+      }
     }
-    todo.toSeq
+    todo
   }
 }

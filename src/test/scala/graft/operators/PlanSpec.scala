@@ -66,6 +66,19 @@ class PlanSpec extends AnyFunSuite {
     assert(nExchanges == 1, s"expected exactly 1 exchange, got $nExchanges")
   }
 
+  test("day-scoped pipeline: one exchange, keyed on (p_date, host, content hash)") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-days").toString
+    graft.pipeline.PagesGen.writePartitioned(spark, 200, s"$tmp/pages")
+    val bc = LangOps.broadcastModel(spark)
+    val out = graft.pipeline.FilterPipeline.run(
+      spark, spark.read.parquet(s"$tmp/pages"), bc, Some("p_date"))
+    val p = plan(out)
+    val exchanges = "Exchange hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(exchanges.size == 1, p)
+    assert(exchanges.head.matches("p_date#\\d+, w_host#\\d+L, w_hash#\\d+L, \\d+"), p)
+    assert(out.columns.contains("p_date"))
+  }
+
   test("q20: ANN corpus side joins against a broadcast query set") {
     val p = plan(Similarity.q20AnnBruteForce(spark, sf))
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)

@@ -188,6 +188,77 @@ class PipelineSpec extends AnyFunSuite {
     assert(store.committedPartitions() == allParts.toSet)
   }
 
+  /** (url, keep, drop_reason, scrubbed_text) of every row under `data/`. */
+  private def outputRows(outRoot: String): Seq[(String, Boolean, String, String)] = {
+    import spark.implicits._
+    spark.read.parquet(s"$outRoot/data")
+      .select($"url", $"keep", $"drop_reason", $"scrubbed_text")
+      .as[(String, Boolean, String, String)].collect().toSeq.sortBy(_._1)
+  }
+
+  /** Every file under the given day directories of `data/`, with its size
+    * and modification time.
+    */
+  private def dayFiles(outRoot: String, days: Set[String]): Set[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    days.flatMap { d =>
+      val dir = java.nio.file.Paths.get(outRoot, "data", s"p_date=$d")
+      val s = java.nio.file.Files.list(dir)
+      try s.iterator().asScala.map { f =>
+        (f.toString, java.nio.file.Files.size(f), java.nio.file.Files.getLastModifiedTime(f).toMillis)
+      }.toSet
+      finally s.close()
+    }
+  }
+
+  test("manifests equal a recount of the written data; dedup is scoped to a day") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-snap-recount").toString
+    val pagesPath = s"$tmp/pages"
+    val outRoot = s"$tmp/out"
+    PagesGen.writePartitioned(spark, 600, pagesPath)
+    // one kept text on copy.example: its original on the first day, a
+    // same-day copy an hour later, and a copy two days later
+    val (fixture, labels) = PagesGen.generate(600)
+    val text = fixture.zip(labels).collectFirst { case (p, l) if l.ref_defect == "clean" => p.text }.get
+    val copies = Seq(
+      "https://copy.example/original" -> "2025-06-01 10:00:00",
+      "https://copy.example/same-day" -> "2025-06-01 11:00:00",
+      "https://copy.example/later-day" -> "2025-06-03 10:00:00")
+    spark.createDataset(copies.map { case (url, ts) =>
+      PagesGen.Page(url, java.sql.Timestamp.valueOf(ts), PagesGen.wrapHtml(url, text), text, "eng")
+    }).withColumn("p_date", date_format($"warc_ts", "yyyy-MM-dd"))
+      .write.mode("append").partitionBy("p_date").parquet(pagesPath)
+
+    val bc = LangOps.broadcastModel(spark)
+    val processed = SnapshotStore.runResumable(spark, pagesPath, outRoot, bc)
+    assert(processed == Seq("2025-06-01", "2025-06-02", "2025-06-03"))
+
+    val manifest = ManifestRecount.manifest(outRoot)
+    assert(manifest == ManifestRecount.recount(spark, outRoot))
+    assert(manifest.values.map(_._1).sum == 603L)
+
+    val out = spark.read.parquet(s"$outRoot/data")
+      .filter($"url".startsWith("https://copy.example/"))
+      .select($"url", $"keep", $"drop_reason").as[(String, Boolean, String)].collect()
+      .map(r => r._1.stripPrefix("https://copy.example/") -> (r._2, r._3)).toMap
+    assert(out("original") == ((true, null)))
+    assert(out("same-day") == ((false, "dup")))
+    assert(out("later-day") == ((true, null)), "dedup is per day: a later day's first copy is kept")
+  }
+
+  test("a raw table (p_date derived from warc_ts) commits the same days and rows as a p_date= table") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-snap-raw").toString
+    PagesGen.writePartitioned(spark, 600, s"$tmp/pages")
+    PagesGen.pagesDf(spark, 600).write.parquet(s"$tmp/raw")
+    val bc = LangOps.broadcastModel(spark)
+    val fromDays = SnapshotStore.runResumable(spark, s"$tmp/pages", s"$tmp/out", bc)
+    val fromRaw = SnapshotStore.runResumable(spark, s"$tmp/raw", s"$tmp/out_raw", bc)
+    assert(fromRaw == fromDays && fromRaw.length == 3)
+    assert(ManifestRecount.manifest(s"$tmp/out_raw") == ManifestRecount.manifest(s"$tmp/out"))
+    assert(outputRows(s"$tmp/out_raw") == outputRows(s"$tmp/out"))
+  }
+
   test("crash after k of n partition commits loses at most the in-flight work") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-snap-crash").toString
     val pagesPath = s"$tmp/pages"
@@ -208,12 +279,22 @@ class PipelineSpec extends AnyFunSuite {
 
     // the two finished partitions ARE committed (per-partition manifests)
     val store = new SnapshotStore(outRoot)
-    assert(store.committedPartitions().size == 2)
+    val before = store.committedPartitions()
+    assert(before.size == 2)
+    val committedFiles = dayFiles(outRoot, before)
 
     // resume reprocesses ONLY the one partition the crash preempted
     val resumed = SnapshotStore.runResumable(spark, pagesPath, outRoot, bc)
     assert(resumed.length == 1, s"expected 1 reprocessed partition, got $resumed")
     assert(store.committedPartitions().size == 3)
     assert(spark.read.parquet(s"$outRoot/data").count() == 600L)
+
+    // the resume replaced only the uncommitted day: the committed days'
+    // files are the ones the crashed run wrote, and the output is row for
+    // row that of an uninterrupted run
+    assert(dayFiles(outRoot, before) == committedFiles)
+    SnapshotStore.runResumable(spark, pagesPath, s"$tmp/uninterrupted", bc)
+    assert(outputRows(outRoot) == outputRows(s"$tmp/uninterrupted"))
+    assert(ManifestRecount.manifest(outRoot) == ManifestRecount.recount(spark, outRoot))
   }
 }
