@@ -14,17 +14,20 @@ import org.apache.spark.sql.functions._
   * gate.
   *
   * The batch path (`run`) and the streaming path
-  * (graft.streaming.StreamingFilter) share every per-row decision defined
-  * here: the detector configuration, the host parse, the fused kernel
-  * and the keep/drop gate. Only the dup rule's mechanism differs (window
-  * here, keyed state there).
+  * (graft.streaming.StreamingFilter) share every part of the rule defined
+  * here: the detector configuration, the content key, and the post-dedup
+  * step (fused kernel or duplicate placeholder, then the keep/drop gate).
+  * Both deduplicate the narrow (url, warc_ts, text) rows before the
+  * kernel. Only how the first copy is found differs (a window here, keyed
+  * state there), so the two emit the same columns and, on one micro-batch,
+  * the same rows (StreamingParitySpec).
   *
   * Scale choices (SURVEY.md §4):
   *  - `html` is never read on this path (column pruning reaches the scan;
   *    asserted in PlanSpec);
   *  - the model is a broadcast variable, not a join;
-  *  - ONE wide exchange total, keyed by (xxhash64(host), xxhash64(text)),
-  *    after the day column when a run is scoped to days:
+  *  - ONE wide exchange total, keyed by `contentKey`, after the day
+  *    column when a run is scoped to days:
   *    the content hash spreads a Zipf-hot host uniformly (the skew
   *    defense, measured by SkewSpec) while co-locating exact duplicates
   *    for the dedup window; the fused kernel runs downstream shuffle-free;
@@ -72,11 +75,21 @@ object FilterPipeline {
     substring_index(u.substr(when(i > 0, i + 3).otherwise(1), length(u)), "/", 1)
   }
 
+  /** The content key of the host-scoped exact-dup rule, as two long
+    * columns: (xxhash64(host), xxhash64(text)). Batch's dedup window and
+    * exchange and streaming's state key are both this key, so grouping
+    * equality holds within 64-bit collision bounds and every shuffle runs
+    * on two longs, never on host/text strings. A null text hashes to the
+    * seed, so it is a different key from "".
+    */
+  def contentKey(url: Column, text: Column): (Column, Column) =
+    (xxhash64(hostCol(url)), xxhash64(text))
+
   /** The gate's rules in the order it applies them: a drop reason and
     * the condition under which a row fails it.
     */
-  private def dropRules(isDup: Column): Seq[(String, Column)] = Seq(
-    "dup" -> isDup,
+  private def dropRules: Seq[(String, Column)] = Seq(
+    "dup" -> col("is_dup"),
     "too_short" -> (col("word_count") < 20),
     "repetition" -> (col("repetition_ratio") > 0.3),
     "low_confidence" -> (col("confidence") < 0.5),
@@ -90,14 +103,14 @@ object FilterPipeline {
   /** Every `drop_reason` the gate can emit, in rule order. The snapshot
     * manifests count rows per entry of this list.
     */
-  val dropReasons: Seq[String] = dropRules(lit(false)).map(_._1)
+  val dropReasons: Seq[String] = dropRules.map(_._1)
 
-  /** The keep/drop gate of both pipelines: `drop_reason` is the first rule
-    * a row fails (null when it passes all) and `keep ⇔ drop_reason IS
-    * NULL`. `isDup` marks a row that lost the host-scoped exact-dup rule.
+  /** The keep/drop gate: `drop_reason` is the first rule a row fails (null
+    * when it passes all) and `keep ⇔ drop_reason IS NULL`. `is_dup` marks a
+    * row that lost the host-scoped exact-dup rule.
     */
-  def gate(docs: DataFrame, isDup: Column): DataFrame = {
-    val (first, firstCond) :: rest = dropRules(isDup).toList: @unchecked
+  private def gate(docs: DataFrame): DataFrame = {
+    val (first, firstCond) :: rest = dropRules.toList: @unchecked
     val reason = rest.foldLeft(when(firstCond, first)) { case (c, (r, cond)) => c.when(cond, r) }
     docs
       .withColumn("drop_reason", reason.otherwise(lit(null).cast("string")))
@@ -173,16 +186,36 @@ object FilterPipeline {
     (url, ts, text) => processDoc(model, det, wordFreq, url, ts, text)
   }
 
-  /** `partitionKernel` for rows flagged by the dup rule: duplicates are
-    * dropped unconditionally, so they skip the detection/quality/scrub
-    * kernel (at crawl scale dups are a third of the corpus; their winner
-    * carries the processed copy).
+  /** The post-dedup step of both pipelines. Input rows carry (url,
+    * warc_ts, text, is_dup) and, with a `scope`, that string column. A row
+    * that won the dup rule runs the fused kernel; a duplicate is dropped
+    * unconditionally, so it skips the detection/quality/scrub kernel and
+    * carries `dupDoc` instead (its winner carries the processed copy). The
+    * output is DocResult's columns, `is_dup` and the scope column, gated.
+    *
+    * `is_dup` stays in the output: it is per-partition lineage (dup counts
+    * by source partition) and lets the q28 gate-logic oracle recompute
+    * drop_reason/keep from the row itself.
     */
-  private def flaggedKernel(
-      model: PackedModel
-  ): (String, java.sql.Timestamp, String, Boolean) => DocResult = {
-    val doc = partitionKernel(model, detectorConfig)
-    (url, ts, text, isDup) => if (isDup) dupDoc(url, ts, text) else doc(url, ts, text)
+  def kernelOrDup(
+      flagged: DataFrame,
+      model: Broadcast[PackedModel],
+      scope: Option[String] = None
+  ): DataFrame = {
+    import flagged.sparkSession.implicits._
+    val k = scope.getOrElse("scope")
+    val mapped = flagged
+      .select($"url", $"warc_ts", $"text", $"is_dup", scope.fold(lit(null).cast("string"))(col))
+      .as[(String, java.sql.Timestamp, String, Boolean, String)]
+      .mapPartitions { it =>
+        val doc = partitionKernel(model.value, detectorConfig)
+        it.map { case (url, ts, text, isDup, s) =>
+          (if (isDup) dupDoc(url, ts, text) else doc(url, ts, text), isDup, s)
+        }
+      }
+      .toDF("doc", "is_dup", k)
+      .select(Seq($"doc.*", $"is_dup") ++ scope.map(col): _*)
+    gate(mapped)
   }
 
   /** The row a duplicate carries instead of the kernel's output: it is
@@ -205,9 +238,8 @@ object FilterPipeline {
       // null ≡ empty page: the detector guards null itself, but the
       // line-length loop and scrub below index the string directly
       val text = if (text0 == null) "" else text0
-      // null url ≡ empty url (same convention): the STREAMING dedup sorts
-      // group rows by (ts, url) — a null url in DocResult would NPE that
-      // comparator on the first tied timestamp (crawls contain both)
+      // null url ≡ empty url (same convention as dupDoc and the streaming
+      // ingestion)
       val u = if (url == null) "" else url
       val nRanked = det.detectInPlace(text) // allocation-free result arrays
       val toks = det.tokens // valid until the next detection call
@@ -286,11 +318,11 @@ object FilterPipeline {
     *
     * ONE scan, ONE exchange: the host-scoped exact-dup rule ("first copy
     * by (warc_ts, url) survives") runs FIRST, on the raw
-    * (url, warc_ts, text) rows, keyed by (xxhash64(host), xxhash64(text))
-    * — that partitioning is simultaneously the skew defense (a Zipf-hot
-    * host's pages spread uniformly by content hash) and the dedup
-    * co-location. The fused detection kernel runs downstream with no
-    * further shuffle, and SKIPS duplicate rows entirely.
+    * (url, warc_ts, text) rows, keyed by `contentKey` — that partitioning
+    * is simultaneously the skew defense (a Zipf-hot host's pages spread
+    * uniformly by content hash) and the dedup co-location. `kernelOrDup`
+    * runs downstream with no further shuffle, and SKIPS duplicate rows'
+    * kernel entirely.
     *
     * `scope` names a column that splits the dup rule: a copy is a
     * duplicate only of an earlier copy with the same scope value. The
@@ -329,47 +361,18 @@ object FilterPipeline {
   ): DataFrame = {
     import spark.implicits._
 
-    val scopeCols = scope.toSeq.map(s => col(s).cast("string").as(s))
-    // group keys are 64-bit hashes of (host, text): grouping equality
-    // within 64-bit collision bounds; the shuffle and the join probe run
-    // on two longs, never on host/text strings
+    val (keyHost, keyText) = contentKey($"url", $"text")
     val keyed = pages
-      .select(Seq($"url", $"warc_ts", $"text") ++ scopeCols: _*)
-      .withColumn("w_host", xxhash64(hostCol($"url")))
-      .withColumn("w_hash", xxhash64($"text"))
+      .select(Seq($"url", $"warc_ts", $"text") ++ scope.toSeq.map(s => col(s).cast("string").as(s)): _*)
+      .withColumn("w_host", keyHost)
+      .withColumn("w_hash", keyText)
 
-    // cross-row rule: first (by warc_ts, url) copy per (scope, host,
-    // content) wins
+    // cross-row rule: first (by warc_ts, url) copy per (scope, content key)
+    // wins
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(scope.toSeq.map(col) ++ Seq($"w_host", $"w_hash"): _*)
       .orderBy($"warc_ts", $"url")
-    val flagged = keyed
-      .withColumn("is_dup", row_number().over(w) > 1)
-      .select(Seq($"url", $"warc_ts", $"text", $"is_dup") ++ scope.toSeq.map(col): _*)
-
-    val mapped = scope match {
-      case None =>
-        flagged.as[(String, java.sql.Timestamp, String, Boolean)]
-          .mapPartitions { it =>
-            val doc = flaggedKernel(model.value)
-            it.map { case (url, ts, text, isDup) => (doc(url, ts, text, isDup), isDup) }
-          }
-          .toDF("doc", "is_dup")
-          .select($"doc.*", $"is_dup")
-      case Some(s) =>
-        flagged.as[(String, java.sql.Timestamp, String, Boolean, String)]
-          .mapPartitions { it =>
-            val doc = flaggedKernel(model.value)
-            it.map { case (url, ts, text, isDup, k) => (doc(url, ts, text, isDup), isDup, k) }
-          }
-          .toDF("doc", "is_dup", s)
-          .select($"doc.*", $"is_dup", col(s))
-    }
-
-    // is_dup stays in the output: it is per-partition lineage (dup counts
-    // by source partition) and lets the q28 gate-logic oracle recompute
-    // drop_reason/keep from the row itself
-    gate(mapped, $"is_dup")
+    kernelOrDup(keyed.withColumn("is_dup", row_number().over(w) > 1), model, scope)
   }
 
   /** Convenience: pipeline over a freshly generated corpus with the fixture

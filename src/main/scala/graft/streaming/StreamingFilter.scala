@@ -3,26 +3,27 @@ package graft.streaming
 import graft.lang.PackedModel
 import graft.pipeline.FilterPipeline
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-/** Structured Streaming variant of the quality filter: the same fused
-  * per-document kernel over `readStream`, with the host-scoped exact-dup
-  * rule expressed as keyed state (`flatMapGroupsWithState`) instead of a
-  * batch window — first arrival per (host, text_hash) survives; later
-  * arrivals drop. The detector configuration, host parse and keep/drop
-  * gate are FilterPipeline's. Windowed keep-rate metrics run as a
-  * watermarked aggregation.
+/** Structured Streaming variant of the quality filter: the host-scoped
+  * exact-dup rule expressed as keyed state (`flatMapGroupsWithState`)
+  * instead of a batch window — first arrival per `FilterPipeline.contentKey`
+  * survives; later arrivals drop. Like the batch pipeline it deduplicates
+  * the narrow (url, warc_ts, text) rows first, then runs FilterPipeline's
+  * post-dedup step (kernel or duplicate placeholder, then the gate), so
+  * its rows have exactly batch's columns. Windowed language metrics run
+  * as a watermarked aggregation.
   */
 object StreamingFilter {
 
-  /** Per-(host,text_hash) dedup state: the newest copy's event time
+  /** Per-content-key dedup state: the newest copy's event time
     * (staleness bound for the horizon check).
     */
   final case class SeenState(newestMs: Long)
 
-  /** How long past its newest copy a (host, text_hash) entry is kept. */
+  /** How long past its newest copy a content key's entry is kept. */
   private[streaming] final val DedupHorizonMs = 7L * 86400000L
 
   /** The first-arrival-within-horizon step of both streaming operators, for
@@ -65,39 +66,32 @@ object StreamingFilter {
     out
   }
 
-  def docStream(
-      spark: SparkSession,
-      pagesDir: String,
-      model: Broadcast[PackedModel]
-  ): Dataset[FilterPipeline.DocResult] = {
-    import spark.implicits._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("warc_ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("html", org.apache.spark.sql.types.BinaryType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType)
-    ))
+  private type Narrow = (String, java.sql.Timestamp, String)
+
+  /** The crawl's narrow (url, warc_ts, text) rows as a stream. A null url
+    * becomes the empty url here, as the kernel and `dupDoc` map it, so
+    * `firstWithinHorizon`'s (ts, url) order never compares a null.
+    */
+  private def pageStream(spark: SparkSession, pagesDir: String): DataFrame =
     spark.readStream
-      .schema(schema)
+      .schema("url STRING, warc_ts TIMESTAMP, text STRING")
       .option("maxFilesPerTrigger", "8")
       .parquet(pagesDir)
-      .select($"url", $"warc_ts", $"text")
       // a crawl row with no event time cannot participate in watermarked
       // semantics: the dedup state's staleness/expiry arithmetic is all
       // warc_ts-driven (getTime on every group row). Dropped HERE, the one
       // ingestion choke point, rather than NPE-ing the state function —
       // the batch pipeline keeps such rows (it needs no event time).
-      .filter($"warc_ts".isNotNull)
-      .as[(String, java.sql.Timestamp, String)]
-      .mapPartitions(it =>
-        FilterPipeline.processPartition(model.value, FilterPipeline.detectorConfig, it))
-  }
+      .filter(col("warc_ts").isNotNull)
+      .select(coalesce(col("url"), lit("")).as("url"), col("warc_ts"), col("text"))
 
-  /** Stateful first-wins dedup + gates; Append-mode output with the same
-    * columns as the batch pipeline (dup detection via GroupState instead of
-    * a window function): the first copy of a `firstWithinHorizon`
-    * generation gets dup rank 1, every other copy 2.
+  /** Stateful first-wins dedup, then the post-dedup step; Append-mode
+    * output with the same columns as the batch pipeline (dup detection via
+    * GroupState instead of a window function): the first copy of a
+    * `firstWithinHorizon` generation is kept, every other copy is a dup.
+    * Arrival order is batch's (warc_ts, url), with warc_ts to the
+    * microsecond. Only the narrow rows and the two-long key cross the
+    * exchange into the state operator.
     *
     * State is BOUNDED by the event-time timeout of `firstWithinHorizon` —
     * without it, one state entry per distinct page lives forever and the
@@ -105,28 +99,26 @@ object StreamingFilter {
     * later than the horizon is treated as new content (the standard
     * bounded-dedup contract, cf. dropDuplicatesWithinWatermark).
     */
-  def filtered(docs: Dataset[FilterPipeline.DocResult]): DataFrame = {
-    import docs.sparkSession.implicits._
-
-    val deduped = docs
+  def filtered(spark: SparkSession, pagesDir: String, model: Broadcast[PackedModel]): DataFrame = {
+    import spark.implicits._
+    val (keyHost, keyText) = FilterPipeline.contentKey($"url", $"text")
+    val flagged = pageStream(spark, pagesDir)
       .withWatermark("warc_ts", "2 days")
-      .groupByKey(d => (d.host, d.text_hash))
+      .groupBy(keyHost, keyText)
+      .as[(Long, Long), Narrow]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: (String, Long), rows: Iterator[FilterPipeline.DocResult],
-         state: GroupState[SeenState]) =>
+        (_: (Long, Long), rows: Iterator[Narrow], state: GroupState[SeenState]) =>
           firstWithinHorizon(rows, state,
-              (d: FilterPipeline.DocResult) => (d.warc_ts.getTime, d.url),
+              (r: Narrow) => (r._2.getTime, (r._2.getNanos, r._1)),
               (s: SeenState) => s.newestMs) { (buf, current, newest) =>
-            val ranks = buf.iterator.zipWithIndex.map { case (d, i) =>
-              (d, if (i == 0 && current.isEmpty) 1 else 2)
+            val flags = buf.iterator.zipWithIndex.map { case ((url, ts, text), i) =>
+              (url, ts, text, i > 0 || current.isDefined)
             }
-            (SeenState(newest), ranks)
+            (SeenState(newest), flags)
           }
       )
-      .toDF("doc", "dup_rank")
-      .select($"doc.*", $"dup_rank")
-
-    FilterPipeline.gate(deduped, $"dup_rank" > 1).drop("dup_rank")
+      .toDF("url", "warc_ts", "text", "is_dup")
+    FilterPipeline.kernelOrDup(flagged, model)
   }
 
   /** Start the doc-level filter into an in-memory sink (tests/demo). */
@@ -137,7 +129,7 @@ object StreamingFilter {
       queryName: String,
       checkpoint: String
   ): StreamingQuery =
-    filtered(docStream(spark, pagesDir, model)).writeStream
+    filtered(spark, pagesDir, model).writeStream
       .outputMode("append")
       .format("memory")
       .queryName(queryName)
@@ -145,7 +137,16 @@ object StreamingFilter {
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
 
-  /** Watermarked per-day language/keep metrics stream. */
+  /** Watermarked per-day language metrics stream. It counts every row the
+    * kernel sees, duplicates included, by running `processPartition` on
+    * the narrow rows rather than reading `filtered`'s output: there a
+    * duplicate carries `dupDoc`'s lang `und`, so the language mix would
+    * count every copy after the first as undetermined. Spark 4.1 also
+    * refuses an Append-mode window aggregation over `filtered`: without a
+    * fresh watermark it has none, and with one its global-watermark check
+    * rejects a stateful operator fed by `flatMapGroupsWithState` (possible
+    * late rows) unless `statefulOperator.checkCorrectness` is disabled.
+    */
   def startMetrics(
       spark: SparkSession,
       pagesDir: String,
@@ -153,8 +154,11 @@ object StreamingFilter {
       queryName: String,
       checkpoint: String
   ): StreamingQuery = {
-    val docs = docStream(spark, pagesDir, model).toDF()
-    val agg = docs
+    import spark.implicits._
+    val agg = pageStream(spark, pagesDir)
+      .as[Narrow]
+      .mapPartitions(it =>
+        FilterPipeline.processPartition(model.value, FilterPipeline.detectorConfig, it))
       .withWatermark("warc_ts", "2 days")
       .groupBy(window(col("warc_ts"), "1 day"), col("lang"))
       .agg(

@@ -56,7 +56,7 @@ object StreamingNearDup {
         // all-MaxValue signatures would herd every empty doc into the
         // same buckets; a null used to NPE and kill the streaming
         // query — a poison-message hazard). A null EVENT TIME drops the
-        // row for the same reason as StreamingFilter.docStream: bucket
+        // row for the same reason as StreamingFilter.pageStream: bucket
         // ownership/expiry is ts-driven (getTime on every band row).
         if (ts == null) Iterator.empty
         else {

@@ -22,7 +22,7 @@ import scala.util.Random
   *    batch kernels learned this in r6; the streaming state functions
   *    additionally do event-time arithmetic on every group row, so null
   *    timestamps are their own hazard class — dropped at the ingestion
-  *    choke points, see StreamingFilter.docStream / StreamingNearDup);
+  *    choke points, see StreamingFilter.filtered / StreamingNearDup);
   *  - determinism: two identical two-phase runs (same seed, same batch
   *    boundaries, fresh checkpoints) emit the same multiset;
   *  - planted signal survives the hostility: an exact-dup pair still
@@ -35,8 +35,8 @@ import scala.util.Random
   * deliberately planted negative-epoch rows, whose deterministic drop
   * is part of the hostile contract.
   */
-class StreamingFuzzSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
+class StreamingFuzzSpec extends AnyFunSuite with BothStateStores {
+  protected lazy val spark = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.sql.session.timeZone", "UTC")
@@ -113,7 +113,7 @@ class StreamingFuzzSpec extends AnyFunSuite {
         .write.mode("append").parquet(pagesDir) //   identical across runs
 
     def startQuery() =
-      StreamingFilter.filtered(StreamingFilter.docStream(spark, pagesDir, bc))
+      StreamingFilter.filtered(spark, pagesDir, bc)
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", s"$tmp/ckpt")
@@ -147,7 +147,7 @@ class StreamingFuzzSpec extends AnyFunSuite {
     out.groupBy(identity).map { case (k, v) => (k, v.length) }
   }
 
-  test("streaming filter survives two hostile micro-batches with a restart, deterministically") {
+  streamingTest("streaming filter survives two hostile micro-batches with a restart, deterministically") {
     val a = runFilter(0xfeed5eedL, "a")
     val b = runFilter(0xfeed5eedL, "b")
     assert(a == b, {
@@ -221,7 +221,7 @@ class StreamingFuzzSpec extends AnyFunSuite {
     edges
   }
 
-  test("streaming near-dup survives two hostile micro-batches with a restart, deterministically") {
+  streamingTest("streaming near-dup survives two hostile micro-batches with a restart, deterministically") {
     val a = runNearDup(0xdecafL, "a")
     val b = runNearDup(0xdecafL, "b")
     assert(a == b, s"two identical hostile runs diverged: ${(a diff b) ++ (b diff a)}")

@@ -10,15 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * CLUSTER (connected through bucket owners — first-wins ownership means a
   * pair can be connected via a shared owner rather than by a direct edge).
   */
-class StreamingNearDupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
+class StreamingNearDupSpec extends AnyFunSuite with BothStateStores {
+  protected lazy val spark = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("streaming candidates cluster every batch q17 pair; state rows stay per-bucket") {
+  streamingTest("streaming candidates cluster every batch q17 pair; state rows stay per-bucket") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-neardup").toString
     val sf = "/root/testdata/sf0.001"
@@ -80,7 +80,7 @@ class StreamingNearDupSpec extends AnyFunSuite {
     }
   }
 
-  test("bucket-ownership state survives a checkpoint restart") {
+  streamingTest("bucket-ownership state survives a checkpoint restart") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-neardup-r").toString
     val docsDir = s"$tmp/docs"

@@ -6,15 +6,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamingSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
+class StreamingSpec extends AnyFunSuite with BothStateStores {
+  protected lazy val spark = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("streaming filter matches the batch pipeline keep decisions") {
+  streamingTest("streaming filter matches the batch pipeline keep decisions") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
     val pagesDir = s"$tmp/pages"
@@ -56,7 +56,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(sharedKept == 2L, "both same-text pages on different hosts must be kept")
   }
 
-  test("dedup state expires on the event-time horizon (bounded state store)") {
+  streamingTest("dedup state expires on the event-time horizon (bounded state store)") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-t").toString
     val pagesDir = s"$tmp/pages"
@@ -92,7 +92,7 @@ class StreamingSpec extends AnyFunSuite {
       s"expired (host, hash) state must not mark later copies dup: $out")
   }
 
-  test("checkpoint-restart: a restarted query resumes without reprocessing") {
+  streamingTest("checkpoint-restart: a restarted query resumes without reprocessing") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-r").toString
     val pagesDir = s"$tmp/pages"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pagesDir))
@@ -100,7 +100,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val outDir = s"$tmp/out"
     def startQuery() =
-      StreamingFilter.filtered(StreamingFilter.docStream(spark, pagesDir, bc))
+      StreamingFilter.filtered(spark, pagesDir, bc)
         .writeStream
         .outputMode("append")
         .format("parquet") // file sink: supports checkpoint recovery
@@ -136,7 +136,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(urls == 350L, s"duplicate reprocessing detected: $urls distinct of $resumed")
   }
 
-  test("watermarked metrics stream aggregates per day and language") {
+  streamingTest("watermarked metrics stream aggregates per day and language") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-m").toString
     val pagesDir = s"$tmp/pages"
     PagesGen.pagesDf(spark, 400).write.parquet(pagesDir)
