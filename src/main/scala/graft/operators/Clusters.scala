@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,8 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * algorithm is the alternating large-star / small-star connected
   * components of Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
   * "Connected Components in MapReduce and Beyond" (ACM SoCC 2014):
-  * O(log² n) rounds, each round two key-partitioned shuffles bounded by
-  * the CURRENT edge count (which never grows), no driver-side graph
+  * O(log² n) rounds, each round four shuffles bounded by the CURRENT
+  * edge count (which never grows): one sorted pass per star step,
+  * small-star's distinct and the star check. No driver-side graph
   * state — the 100 TB shape, unlike label propagation whose round count
   * is the graph diameter (adversarial near-dup chains make that O(n)).
   *
@@ -26,10 +27,10 @@ import org.apache.spark.storage.StorageLevel
   *  - the shuffled payload is (Long, Long) edges only, never text;
   *  - edge count starts at |q17 pairs| (dup-pair bounded, NOT corpus
   *    bounded) and only shrinks toward one edge per clustered doc;
-  *  - high-degree hubs (a million-copy boilerplate page) are exactly
-  *    what large-star handles: each round re-points a hub's larger
-  *    neighbors at the hub's min, so no reducer ever re-materializes a
-  *    whole component as one group;
+  *  - a high-degree hub (a million-copy boilerplate page) costs sort
+  *    time, not task memory: both star steps stream each node's
+  *    adjacency out of Spark's spilling external sorter ([[starStep]]),
+  *    so no task ever holds one node's neighbours in memory;
   *  - per-iteration state is a per-call-owned RDD pin (MEMORY_AND_DISK),
   *    previous iteration released as soon as the next is materialized —
   *    the q19 pin discipline (PinSlot scaladoc).
@@ -163,10 +164,7 @@ object Clusters {
 
     var curr = raw.persist(StorageLevel.MEMORY_AND_DISK)
     var rounds = 0
-    // per-round handles tracked outside the loop so the catch can release
-    // a mid-round pin (ADVICE r9: a throw between the ls persist and the
-    // next-swap stranded ls/next until ContextCleaner GC)
-    var ls: RDD[(Long, Long)] = null
+    // tracked outside the loop so the catch can release a mid-round pin
     var next: RDD[(Long, Long)] = null
     var roundParts = nParts
     try {
@@ -184,17 +182,12 @@ object Clusters {
         rounds += 1
         require(rounds <= MaxRounds,
           s"connectedComponents: no convergence after $MaxRounds alternation rounds")
-        ls = largeStar(curr, part).persist(StorageLevel.MEMORY_AND_DISK)
-        next = smallStar(ls, part).persist(StorageLevel.MEMORY_AND_DISK)
+        next = smallStar(largeStar(curr, part), part).persist(StorageLevel.MEMORY_AND_DISK)
         // ONE driver job per alternation round (the q30 job-folding
         // lesson): the count-based star check both decides convergence
         // AND materializes next's pin (its flatMap consumes every
-        // partition) — the intermediate large-star pin is released only
-        // after the check has run (small-star reads it twice inside that
-        // single job)
+        // partition)
         converged = isStarForest(next, part)
-        ls.unpersist(false)
-        ls = null
         val prev = curr
         curr = next
         next = null
@@ -203,7 +196,7 @@ object Clusters {
       lastRounds.set(rounds)
     } catch {
       case t: Throwable =>
-        Seq(curr, ls, next).foreach(PinSlot.unpersistQuietly)
+        Seq(curr, next).foreach(PinSlot.unpersistQuietly)
         throw t
     }
 
@@ -223,40 +216,46 @@ object Clusters {
     * minimum of its closed neighborhood. One edge emitted per input
     * undirected edge (from its smaller endpoint's group), always
     * (bigger, smaller) — hub groups shrink because the hub's leaves
-    * leave for the hub's min.
-    *
-    * Memory bound (here and in [[smallStar]]): the `partitionBy(part)
-    * .join(mins)` cogroup buffers ONE key's full adjacency in one task —
-    * probed exact to a 4M-edge hub key (ScaleProbe, 20M-edge graph), and
-    * large-star shrinks hubs across rounds, but a ~10⁸-edge boilerplate
-    * hub on a real crawl would test task memory before the algorithm.
-    * Known mitigation if a probe ever shows it binding: broadcast the
-    * per-node minima above a degree cutoff (they are tiny) and re-point
-    * hub leaves map-side, or salt the hub key for the min computation.
+    * leave for the hub's min. No distinct: small-star skips duplicates.
     */
-  private def largeStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] = {
-    val sym = e.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
-    val mins = sym
-      .reduceByKey(part, math.min(_: Long, _: Long))
-      .mapPartitions(
-        _.map { case (u, mv) => (u, math.min(u, mv)) },
-        preservesPartitioning = true)
-    sym.partitionBy(part)
-      .join(mins) // co-partitioned: no extra shuffle
-      .flatMap { case (u, (v, m)) => if (v > u) Iterator((v, m)) else Iterator.empty }
-      .distinct(part.numPartitions)
-  }
+  private def largeStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] =
+    starStep(e.flatMap { case (u, v) => Iterator((u, v), (v, u)) }, part) { (u, minNbr, v) =>
+      if (v > u) Some((v, math.min(u, minNbr))) else None
+    }
 
   /** Small-star: every node re-points its SMALLER neighbors (and itself)
     * at the minimum of those neighbors. Operates on the directed
-    * (hi → lo) form as-is; emits exactly one edge per input edge.
+    * (hi → lo) form as-is; emits exactly one edge per distinct input edge.
     */
-  private def smallStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] = {
-    val mins = e.reduceByKey(part, math.min(_: Long, _: Long))
-    e.partitionBy(part)
-      .join(mins)
-      .map { case (u, (v, m)) => if (v == m) (u, m) else (v, m) }
+  private def smallStar(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] =
+    starStep(e, part) { (u, m, v) => Some(if (v == m) (u, m) else (v, m)) }
       .distinct(part.numPartitions)
+
+  /** The pass both star steps share: edges partitioned by source and
+    * sorted by (source, target), so a source's first target IS its
+    * minimum neighbour, and `step(source, minNeighbour, target)` maps
+    * each distinct edge with O(1) state. Spark's external sorter spills,
+    * so no task holds a node's adjacency: a hub costs sort time, not heap.
+    */
+  private def starStep(e: RDD[(Long, Long)], part: HashPartitioner)(
+      step: (Long, Long, Long) => Option[(Long, Long)]): RDD[(Long, Long)] = {
+    val bySource = new Partitioner {
+      def numPartitions: Int = part.numPartitions
+      def getPartition(key: Any): Int = part.getPartition(key.asInstanceOf[(Long, Long)]._1)
+    }
+    implicit val sourceThenTarget: Ordering[(Long, Long)] =
+      Ordering.fromLessThan((a, b) => a._1 < b._1 || a._1 == b._1 && a._2 < b._2)
+    e.map((_, ())).repartitionAndSortWithinPartitions(bySource).keys.mapPartitions { it =>
+      var prev: (Long, Long) = null
+      var minNbr = 0L
+      it.flatMap { case uv @ (u, v) =>
+        val sameSource = prev != null && prev._1 == u
+        if (!sameSource) minNbr = v
+        val dup = sameSource && prev._2 == v
+        prev = uv
+        if (dup) None else step(u, minNbr, v)
+      }
+    }
   }
 
   /** Distributed star-forest check (the loop postcondition): no node is

@@ -245,11 +245,11 @@ class BlockEvictionSpec extends AnyFunSuite {
   // ---- q39 star-forest pin (cluster resolution) --------------------------
 
   test("q39 components stay exact while iteration pins and the star pin are evicted") {
-    // the connected-components loop persists THREE pin generations per
-    // round (curr, largeStar, next) and hands the converged star forest
-    // off lazily — chaos must never change a label: every transform in
-    // the chain (min-reduce, hash-partitioned join, distinct) recomputes
-    // identical contents, so eviction can only cost recompute time. The
+    // the connected-components loop persists TWO pin generations per
+    // round (curr, next) and hands the converged star forest off
+    // lazily — chaos must never change a label: every transform in the
+    // chain (sorted-by-source star pass, distinct) recomputes identical
+    // contents, so eviction can only cost recompute time. The
     // chain shape forces ~8 alternation rounds = a long mid-query window.
     import spark.implicits._
     val edges = ((0L until 255L).map(i => (i, i + 1)) ++

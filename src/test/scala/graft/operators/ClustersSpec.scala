@@ -172,6 +172,47 @@ class ClustersSpec extends AnyFunSuite {
       s"q40 diverged: extra=${(got diff want).take(5)} missing=${(want diff got).take(5)}")
   }
 
+  test("each alternation round runs four shuffle map stages: two sorted star passes, distinct, star check") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerStageSubmitted}
+    // per job, in job order: shuffle map stages actually submitted (a
+    // stage whose output already exists is skipped, not submitted). A
+    // job's result stage is created after its parents, so it has the
+    // job's largest stage id; every other stage is a shuffle map stage.
+    val jobOfMapStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val mapStages = new java.util.concurrent.ConcurrentSkipListMap[Int, Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        mapStages.put(e.jobId, 0)
+        e.stageIds.filter(_ != e.stageIds.max).foreach(s => jobOfMapStage.put(s, e.jobId))
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(jobOfMapStage.get(e.stageInfo.stageId))
+          .foreach(j => mapStages.merge(j, 1, _ + _))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+    }
+    // four disjoint 64-node chains: a fixed multi-round graph
+    val edges = for (c <- 0L until 4L; i <- 0L until 63L) yield (c * 64 + i, c * 64 + i + 1)
+    val df = edges.toDF("u", "v")
+    spark.sparkContext.addSparkListener(listener)
+    val rounds = try {
+      Clusters.connectedComponents(spark, df)
+      val r = Clusters.lastRounds.get
+      // jobs: the sizing count, the first star check, then one per round
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (ended.get < r + 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val perRound = mapStages.values.asScala.toSeq.takeRight(rounds)
+    println(s"CLUSTERS shuffle map stages per round: ${perRound.mkString(",")} (rounds=$rounds)")
+    assert(rounds > 1, s"the chains must force several rounds, got $rounds")
+    assert(ended.get == rounds + 2, s"expected ${rounds + 2} jobs, saw ${ended.get}")
+    assert(perRound.forall(_ == 4), s"shuffle map stages per round: $perRound")
+  }
+
   test("per-call pin discipline: one live handoff pin, settles to zero on release") {
     import spark.implicits._
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet

@@ -30,6 +30,7 @@ import org.apache.spark.sql.functions._
   * Usage:
   *   sbt -batch "Test/runMain graft.scale.ScaleProbe gen <dir> <nDocs> <nLineitem>"
   *   sbt -batch "Test/runMain graft.scale.ScaleProbe q32|q17|q19 <dir>"
+  *   sbt -batch "Test/runMain graft.scale.ScaleProbe q39cc|q39hub <dir> [edges...]"
   * Results are recorded in ROADMAP.md (round 8).
   */
 object ScaleProbe {
@@ -287,7 +288,7 @@ object ScaleProbe {
           out.unpersist()
           require(bad == 0, s"q39 audit: $bad rows diverged from driver union-find")
           require(nDocs > 0 && clustered > 0, "q39 audit vacuous")
-        case "q39cc" =>
+        case "q39cc" | "q39hub" =>
           // q39's OWN core (the star alternation) at 3-4 orders beyond
           // oracle scale, decoupled from the q17 substrate whose
           // cumulative-shuffle single-box ceiling is already
@@ -295,16 +296,28 @@ object ScaleProbe {
           // Synthetic edge set with CLOSED-FORM components so the audit
           // needs no driver graph: disjoint id regions of 64-node chains
           // (round-count stress: ~8 alternations), ONE mega-star (hub
-          // skew: a single reduce key carries ~20% of all edges), and
-          // mixed groups (spanning chain + seeded random intra-group
-          // extras, incl. duplicate and self edges). Expected label of
-          // any node derives from its id alone.
+          // skew), and mixed groups (spanning chain + seeded random
+          // intra-group extras, incl. duplicate and self edges). Expected
+          // label of any node derives from its id alone.
+          //   q39cc <dir> [nEdges=2e7]: chains 40%, hub 20%, mixed 40%.
+          //   q39hub <dir> [hubEdges=1e7] [otherEdges=hubEdges/5]: one
+          //     hub of the given degree plus chains and mixed groups
+          //     (half each). The chains are what make rounds run: a lone
+          //     star is already a star forest and converges before any
+          //     star step. Run it under a pinned heap (SPARK_DRIVER_MEM)
+          //     to check that no task buffers the hub's adjacency.
           import spark.implicits._
-          val nEdges = if (args.length > 2) args(2).toLong else 20000000L
           val K = 64L
-          val chainEdges = (nEdges * 4) / 10
-          val starEdges  = (nEdges * 2) / 10
-          val mixEdges   = nEdges - chainEdges - starEdges
+          val (chainEdges, starEdges, mixEdges) =
+            if (mode == "q39cc") {
+              val n = if (args.length > 2) args(2).toLong else 20000000L
+              ((n * 4) / 10, (n * 2) / 10, n - (n * 4) / 10 - (n * 2) / 10)
+            } else {
+              val hub = if (args.length > 2) args(2).toLong else 10000000L
+              val rest = if (args.length > 3) args(3).toLong else hub / 5
+              (rest / 2, hub, rest - rest / 2)
+            }
+          val nEdges = chainEdges + starEdges + mixEdges
           val StarBase = 1L << 40
           val MixBase  = 1L << 41
           val edges = spark.range(nEdges).as[Long].map { i =>
@@ -342,12 +355,20 @@ object ScaleProbe {
             gFull * K + (if (gRem == 0) 0 else if (gRem <= K - 1) gRem + 1 else K)
           val expClusters = cFull + (if (cRem > 0) 1 else 0) + 1 +
             gFull + (if (gRem > 0) 1 else 0)
-          println(f"PROBE q39cc edges=$nEdges nodes=$nNodes (exp $expNodes) " +
+          println(f"PROBE $mode edges=$nEdges nodes=$nNodes (exp $expNodes) " +
             f"clusters=$nClusters (exp $expClusters) rounds=$rounds bad=$bad wall=$dt%.1f s")
           labels.unpersist()
           graft.operators.Clusters.releaseQ39Cache()
+          if (mode == "q39hub") {
+            // measured off the input, not the closed form: the largest
+            // per-node degree the star steps had to stream
+            val hubDegree = edges.select(explode(array($"u", $"v")).as("n"))
+              .groupBy("n").count().agg(max("count")).head().getLong(0)
+            println(s"PROBE q39hub hubDegree=$hubDegree (exp $starEdges) rounds=$rounds")
+            require(hubDegree == starEdges, s"q39hub: hub degree $hubDegree != $starEdges")
+          }
           require(bad == 0 && nNodes == expNodes && nClusters == expClusters,
-            s"q39cc audit failed: bad=$bad nodes=$nNodes/$expNodes clusters=$nClusters/$expClusters")
+            s"$mode audit failed: bad=$bad nodes=$nNodes/$expNodes clusters=$nClusters/$expClusters")
         case "q29" =>
           // distributed trainer at scale: groupBy-count with map-side
           // combine + prefix/suffix self-joins; exactness is gated at

@@ -11,6 +11,9 @@
 #  - q19 (within-source 0.3): same audit, per-source;
 #  - q39 (cluster resolution): every doc's label compared against a
 #    driver union-find over the collected (q17-audited) pair set;
+#  - q39hub (cluster resolution under hub skew): one 10^6-edge hub plus
+#    64-node chains and mixed groups, every label checked against the
+#    closed form (correctness only; the pinned-heap 10^7 run is manual);
 #  - q32: range-partitioned prefix-sum percentiles, checked value-exact
 #    against a DuckDB quantile_cont oracle (tools/scale_q32_oracle.py).
 #
@@ -44,6 +47,11 @@ echo "== q39 at 10x (cluster resolution vs driver union-find) =="
 sbt -batch "Test/runMain graft.scale.ScaleProbe q39 $DIR" \
   > "$WORK/q39.log" 2>&1
 grep -E "PROBE q39" "$WORK/q39.log"
+
+echo "== q39hub (10^6-edge hub + chain mix vs closed-form labels) =="
+sbt -batch "Test/runMain graft.scale.ScaleProbe q39hub $DIR 1000000" \
+  > "$WORK/q39hub.log" 2>&1
+grep -E "PROBE q39hub" "$WORK/q39hub.log"
 
 echo "== q32 at 10x (escalated path vs DuckDB quantile oracle) =="
 sbt -batch "Test/runMain graft.scale.ScaleProbe q32 $DIR" \
