@@ -20,7 +20,7 @@
 # The 100x/20M tiers (multi-GB shuffles, -Xmx24g direct-java launches)
 # stay manual — see ROADMAP round 8 and the ScaleProbe scaladoc.
 #
-# Usage: tools/scale_gate.sh [workdir]    (~5 min at local[16])
+# Usage: tools/scale_gate.sh [workdir]    (~9 min at local[16] on a 4-core host)
 set -euo pipefail
 WORK="${1:-/tmp/graft_scale_gate}"
 DIR="$WORK/corpus10x"
@@ -53,10 +53,10 @@ sbt -batch "Test/runMain graft.scale.ScaleProbe q39hub $DIR 1000000" \
   > "$WORK/q39hub.log" 2>&1
 grep -E "PROBE q39hub" "$WORK/q39hub.log"
 
-echo "== q32 at 10x (escalated path vs DuckDB quantile oracle) =="
+echo "== q32 at 10x (range-partitioned prefix sum vs DuckDB quantile oracle) =="
 sbt -batch "Test/runMain graft.scale.ScaleProbe q32 $DIR" \
   > "$WORK/q32.log" 2>&1
-grep -E "PROBE q32 (escalated|rows)" "$WORK/q32.log"
+grep "PROBE q32 rows" "$WORK/q32.log"
 python3 tools/scale_q32_oracle.py "$DIR"
 
 echo "SCALE GATE PASS (10x tier)"
