@@ -476,8 +476,8 @@ object Relational {
         col("n"), col("total")
       )
 
-  /** Tumbling event-time buckets — the batch shape of the streaming
-    * windowed aggregation (StreamingFilter.startMetrics).
+  /** Tumbling event-time buckets: a grouped aggregation over
+    * `window(ts, "6 hours")` starts.
     */
   def q36TimeBuckets(spark: SparkSession, sfDir: String): DataFrame =
     Tables.events(spark, sfDir)

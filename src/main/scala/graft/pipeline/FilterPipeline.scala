@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * The batch path (`run`) and the streaming path
   * (graft.streaming.StreamingFilter) share every part of the rule defined
   * here: the detector configuration, the content key, and the post-dedup
-  * step (fused kernel or duplicate placeholder, then the keep/drop gate).
+  * step (fused kernel or duplicate placeholder, then the keep/drop gate),
+  * and the quality counts both observe (`metrics`).
   * Both deduplicate the narrow (url, warc_ts, text) rows before the
   * kernel. Only how the first copy is found differs (a window here, keyed
   * state there), so the two emit the same columns and, on one micro-batch,
@@ -104,6 +105,26 @@ object FilterPipeline {
     * manifests count rows per entry of this list.
     */
   val dropReasons: Seq[String] = dropRules.map(_._1)
+
+  /** Every language the kernel can emit: `detectorConfig`'s, plus `und`
+    * for a page with no candidate.
+    */
+  val langs: Seq[String] = (detectorConfig.languages.toSeq.map(ScriptLang.code) :+ "und").sorted
+
+  /** The pipeline's quality counts over the output rows where `inScope`
+    * holds, each named `prefix` + `rows`, `kept`, a drop reason, or
+    * `lang_` + a language of `langs` (kernel rows only: a duplicate is
+    * counted by the `dup` reason). Batch manifests observe them per day,
+    * streaming per micro-batch. Only `count(when(...))`, which cannot
+    * throw: an observed aggregate that fails leaves `Observation.get`
+    * waiting.
+    */
+  def metrics(inScope: Column, prefix: String): Seq[Column] = {
+    def n(cond: Column, name: String) = count(when(cond, 1)).as(prefix + name)
+    Seq(n(inScope, "rows"), n(inScope && col("keep"), "kept")) ++
+      dropReasons.map(r => n(inScope && col("drop_reason") === r, r)) ++
+      langs.map(l => n(inScope && !col("is_dup") && col("lang") === l, s"lang_$l"))
+  }
 
   /** The keep/drop gate: `drop_reason` is the first rule a row fails (null
     * when it passes all) and `keep ⇔ drop_reason IS NULL`. `is_dup` marks a
@@ -376,7 +397,7 @@ object FilterPipeline {
   }
 
   /** Convenience: pipeline over a freshly generated corpus with the fixture
-    * model — used by SparkEntry and the bench.
+    * model (SparkEntry's q28).
     */
   def runGenerated(spark: SparkSession, n: Int): DataFrame = {
     val bc = graft.operators.LangOps.broadcastModel(spark)

@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * expected scrubbed text is built by inserting the placeholder where the
   * generator inserted the PII — exact-match oracle for the scrubber.
   *
-  * Hosts are Zipf-skewed so the salted repartition has real skew to defeat.
+  * Hosts are Zipf-skewed so the pipeline's exchange, keyed by content hash
+  * within host, has real host skew to spread (SkewSpec).
   */
 object PagesGen {
 

@@ -25,7 +25,7 @@ final class SnapshotStore(root: String) {
 
   final case class PartitionEntry(
       partition: String, rows: Long, kept: Long, dataPath: String,
-      dropReasons: Map[String, Long] = Map.empty)
+      dropReasons: Map[String, Long] = Map.empty, langs: Map[String, Long] = Map.empty)
 
   private def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
@@ -41,19 +41,22 @@ final class SnapshotStore(root: String) {
     if (Files.exists(m)) Some(m) else None
   }
 
-  /** Parse a manifest's `entries` array back into PartitionEntry values. */
+  /** Parse a manifest's `entries` array back into PartitionEntry values.
+    * A missing count object (`langs` in a manifest written before it
+    * existed) reads as empty.
+    */
   private def readEntries(manifest: Path): Seq[PartitionEntry] = {
     val node = mapper.readTree(Files.readString(manifest))
     val entries = node.get("entries")
     if (entries == null || !entries.isArray) return Seq.empty
     (0 until entries.size()).map { i =>
       val e = entries.get(i)
-      val drops = Option(e.get("drop_reasons")).filter(_.isObject).map { d =>
+      def counts(key: String) = Option(e.get(key)).filter(_.isObject).map { d =>
         d.properties().asScala.map(kv => kv.getKey -> kv.getValue.asLong()).toMap
       }.getOrElse(Map.empty[String, Long])
       PartitionEntry(
         e.get("partition").asText(), e.get("rows").asLong(), e.get("kept").asLong(),
-        e.get("data_path").asText(), drops)
+        e.get("data_path").asText(), counts("drop_reasons"), counts("langs"))
     }
   }
 
@@ -80,10 +83,11 @@ final class SnapshotStore(root: String) {
   }
 
   private def entryJson(e: PartitionEntry): String = {
-    val drops = e.dropReasons.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    def counts(m: Map[String, Long]) =
+      m.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
     s"""{"partition":${q(e.partition)},"rows":${e.rows},"kept":${e.kept},""" +
-      s""""drop_reasons":$drops,"data_path":${q(e.dataPath)}}"""
+      s""""drop_reasons":${counts(e.dropReasons)},"langs":${counts(e.langs)},""" +
+      s""""data_path":${q(e.dataPath)}}"""
   }
 
   /** Commit new partitions atomically: carries forward the previous
@@ -153,8 +157,9 @@ object SnapshotStore {
     *    dynamic partition overwrite, which replaces only the batch's days:
     *    committed days are never touched, and a day left behind by a crash
     *    is replaced on resume;
-    *  - each day's manifest counts (rows, kept, rows per drop reason) are
-    *    observed while the batch is written, not read back. After the
+    *  - each day's manifest counts (`FilterPipeline.metrics`: rows, kept,
+    *    rows per drop reason, kernel rows per language) are observed
+    *    while the batch is written, not read back. After the
     *    write the days are committed in date order, with
     *    `onPartitionCommitted` after each commit.
     *
@@ -209,23 +214,21 @@ object SnapshotStore {
     batches(todo, bytesOf, wave).foreach { batch =>
       val day = $"p_date"
       val result = FilterPipeline.run(spark, pages.filter(day.isin(batch: _*)), model, Some("p_date"))
-      // per day: rows, kept, and rows per drop reason
-      val counts = batch.flatMap { d =>
-        val inDay = day === d
-        Seq(count(when(inDay, 1)).as(s"$d rows"), count(when(inDay && $"keep", 1)).as(s"$d kept")) ++
-          FilterPipeline.dropReasons.map(r => count(when(inDay && $"drop_reason" === r, 1)).as(s"$d $r"))
-      }
+      val counts = batch.flatMap(d => FilterPipeline.metrics(day === d, s"$d "))
       val observed = Observation()
       result.observe(observed, counts.head, counts.tail: _*)
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("p_date").parquet(store.dataDir.toString)
       val metrics = observed.get
-      def n(name: String): Long = metrics(name).asInstanceOf[Long]
       batch.foreach { d =>
-        val drops = FilterPipeline.dropReasons.map(r => r -> n(s"$d $r")).filter(_._2 > 0).toMap
+        def n(name: String): Long = metrics(s"$d $name").asInstanceOf[Long]
+        def nonZero(keys: Seq[String], name: String => String) =
+          keys.map(k => k -> n(name(k))).filter(_._2 > 0).toMap
         committed += 1
         store.commit(
-          Seq(store.PartitionEntry(d, n(s"$d rows"), n(s"$d kept"), store.dataPath(d), drops)),
+          Seq(store.PartitionEntry(d, n("rows"), n("kept"), store.dataPath(d),
+            nonZero(FilterPipeline.dropReasons, identity),
+            nonZero(FilterPipeline.langs, l => s"lang_$l"))),
           Map(
             "job" -> "quality_filter",
             "model_hash" -> graft.lang.PackedModel.registryHash.toString,

@@ -13,8 +13,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * survives; later arrivals drop. Like the batch pipeline it deduplicates
   * the narrow (url, warc_ts, text) rows first, then runs FilterPipeline's
   * post-dedup step (kernel or duplicate placeholder, then the gate), so
-  * its rows have exactly batch's columns. Windowed language metrics run
-  * as a watermarked aggregation.
+  * its rows have exactly batch's columns. Every sink of `filtered`
+  * reports batch's quality counts (`FilterPipeline.metrics`) per
+  * micro-batch, as the observed metrics named `quality` of its
+  * `StreamingQueryProgress`.
   */
 object StreamingFilter {
 
@@ -89,6 +91,7 @@ object StreamingFilter {
     * output with the same columns as the batch pipeline (dup detection via
     * GroupState instead of a window function): the first copy of a
     * `firstWithinHorizon` generation is kept, every other copy is a dup.
+    * The output observes `FilterPipeline.metrics` as `quality`.
     * Arrival order is batch's (warc_ts, url), with warc_ts to the
     * microsecond. Only the narrow rows and the two-long key cross the
     * exchange into the state operator.
@@ -118,7 +121,8 @@ object StreamingFilter {
           }
       )
       .toDF("url", "warc_ts", "text", "is_dup")
-    FilterPipeline.kernelOrDup(flagged, model)
+    val quality = FilterPipeline.metrics(lit(true), "")
+    FilterPipeline.kernelOrDup(flagged, model).observe("quality", quality.head, quality.tail: _*)
   }
 
   /** Start the doc-level filter into an in-memory sink (tests/demo). */
@@ -136,41 +140,4 @@ object StreamingFilter {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()
-
-  /** Watermarked per-day language metrics stream. It counts every row the
-    * kernel sees, duplicates included, by running `processPartition` on
-    * the narrow rows rather than reading `filtered`'s output: there a
-    * duplicate carries `dupDoc`'s lang `und`, so the language mix would
-    * count every copy after the first as undetermined. Spark 4.1 also
-    * refuses an Append-mode window aggregation over `filtered`: without a
-    * fresh watermark it has none, and with one its global-watermark check
-    * rejects a stateful operator fed by `flatMapGroupsWithState` (possible
-    * late rows) unless `statefulOperator.checkCorrectness` is disabled.
-    */
-  def startMetrics(
-      spark: SparkSession,
-      pagesDir: String,
-      model: Broadcast[PackedModel],
-      queryName: String,
-      checkpoint: String
-  ): StreamingQuery = {
-    import spark.implicits._
-    val agg = pageStream(spark, pagesDir)
-      .as[Narrow]
-      .mapPartitions(it =>
-        FilterPipeline.processPartition(model.value, FilterPipeline.detectorConfig, it))
-      .withWatermark("warc_ts", "2 days")
-      .groupBy(window(col("warc_ts"), "1 day"), col("lang"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        avg(col("confidence")).as("avg_conf")
-      )
-    agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .start()
-  }
 }

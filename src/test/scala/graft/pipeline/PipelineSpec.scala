@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.operators.LangOps
+import graft.pipeline.ManifestRecount.DayCounts
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -237,6 +238,7 @@ class PipelineSpec extends AnyFunSuite {
     val manifest = ManifestRecount.manifest(outRoot)
     assert(manifest == ManifestRecount.recount(spark, outRoot))
     assert(manifest.values.map(_._1).sum == 603L)
+    assert(ManifestRecount.langsCoverKernelRows(manifest), s"langs must count every non-dup row: $manifest")
 
     val out = spark.read.parquet(s"$outRoot/data")
       .filter($"url".startsWith("https://copy.example/"))
@@ -296,5 +298,85 @@ class PipelineSpec extends AnyFunSuite {
     SnapshotStore.runResumable(spark, pagesPath, s"$tmp/uninterrupted", bc)
     assert(outputRows(outRoot) == outputRows(s"$tmp/uninterrupted"))
     assert(ManifestRecount.manifest(outRoot) == ManifestRecount.recount(spark, outRoot))
+  }
+
+  test("a manifest written before `langs` existed resumes and carries its entries forward unchanged") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-snap-old").toString
+    val pagesPath = s"$tmp/pages"
+    val partialPath = s"$tmp/pages_partial"
+    val outRoot = s"$tmp/out"
+    PagesGen.writePartitioned(spark, 600, pagesPath)
+    val days = spark.read.parquet(pagesPath).select($"p_date".cast("string")).distinct()
+      .as[String].collect().sorted.toSeq
+    spark.read.parquet(pagesPath).filter($"p_date" =!= days.last)
+      .write.partitionBy("p_date").parquet(partialPath)
+    val bc = LangOps.broadcastModel(spark)
+    SnapshotStore.runResumable(spark, partialPath, outRoot, bc)
+
+    // rewrite the current manifest as one written before `langs` existed
+    val current = java.nio.file.Paths.get(outRoot,
+      java.nio.file.Files.readString(java.nio.file.Paths.get(outRoot, "CURRENT")).trim)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(java.nio.file.Files.readString(current))
+    node.get("entries").forEach(e =>
+      e.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("langs"))
+    java.nio.file.Files.writeString(current, mapper.writeValueAsString(node))
+    assert(!java.nio.file.Files.readString(current).contains("langs"))
+
+    val store = new SnapshotStore(outRoot)
+    val old = store.committedEntries()
+    assert(old.map(_.partition) == days.init)
+    assert(old.forall(e => e.langs.isEmpty && e.rows > 0 && e.dropReasons.nonEmpty))
+
+    assert(SnapshotStore.runResumable(spark, pagesPath, outRoot, bc) == Seq(days.last))
+    val entries = store.committedEntries()
+    assert(entries.init == old, "the old entries are carried forward unchanged")
+    val last = days.last
+    val recounted = ManifestRecount.recount(spark, outRoot)
+    assert(ManifestRecount.manifest(outRoot)(last) == recounted(last))
+    assert(ManifestRecount.langsCoverKernelRows(Map(last -> recounted(last))))
+  }
+
+  test("a day of injected gibberish shows as a rise of langs.und and low_coverage in the manifests") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-snap-und").toString
+    val pagesPath = s"$tmp/pages"
+    val outRoot = s"$tmp/out"
+    val (pages, labels) = PagesGen.generate(900)
+    val gibberish = pages.zip(labels).collect { case (p, l) if l.ref_defect == "gibberish" => p.text }
+    // the same consonant words in Greek letters: a script none of the
+    // detector's languages is written in, so the kernel finds no candidate
+    val latin = "bcdfghjklmnpqrstvwxz"
+    val greek = "βγδφχηξκλμνπθρστωψζς"
+    def page(host: String, i: Int, text: String) = {
+      val url = s"https://$host.example/g$i"
+      val ts = java.sql.Timestamp.valueOf(s"2025-06-02 ${10 + i % 10}:00:00")
+      PagesGen.Page(url, ts, PagesGen.wrapHtml(url, text), text, "und")
+    }
+    val injected = gibberish.zipWithIndex.flatMap { case (t, i) =>
+      Seq(page("latin", i, t), page("greek", i, t.map(c => latin.indexOf(c) match {
+        case -1 => c
+        case k => greek(k)
+      })))
+    }
+    assert(gibberish.length >= 40, s"too little gibberish: ${gibberish.length}")
+    pages.filter(_.warc_ts.before(java.sql.Timestamp.valueOf("2025-06-03 00:00:00")))
+      .toDF().unionByName(spark.createDataset(injected).toDF())
+      .withColumn("p_date", date_format($"warc_ts", "yyyy-MM-dd"))
+      .write.partitionBy("p_date").parquet(pagesPath)
+
+    val bc = LangOps.broadcastModel(spark)
+    assert(SnapshotStore.runResumable(spark, pagesPath, outRoot, bc) == Seq("2025-06-01", "2025-06-02"))
+    val manifest = ManifestRecount.manifest(outRoot)
+    assert(manifest == ManifestRecount.recount(spark, outRoot))
+
+    def rate(day: String, counts: DayCounts => Map[String, Long], key: String): Double =
+      counts(manifest(day)).getOrElse(key, 0L).toDouble / manifest(day)._1
+    val und = (rate("2025-06-01", _._4, "und"), rate("2025-06-02", _._4, "und"))
+    val lowCoverage = (rate("2025-06-01", _._3, "low_coverage"), rate("2025-06-02", _._3, "low_coverage"))
+    info(s"und rate $und, low_coverage rate $lowCoverage")
+    assert(und._2 >= und._1 + 0.1, s"langs.und must rise on the gibberish day: $und")
+    assert(lowCoverage._2 >= lowCoverage._1 + 0.05, s"low_coverage must rise on the gibberish day: $lowCoverage")
   }
 }

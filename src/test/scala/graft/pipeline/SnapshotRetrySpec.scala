@@ -59,6 +59,7 @@ class SnapshotRetrySpec extends AnyFunSuite {
       val manifest = ManifestRecount.manifest(s"$tmp/out")
       assert(manifest == ManifestRecount.recount(spark, s"$tmp/out"))
       assert(manifest.values.map(_._1).sum == 600L)
+      assert(ManifestRecount.langsCoverKernelRows(manifest), s"langs must count every non-dup row: $manifest")
     } finally spark.stop()
   }
 }

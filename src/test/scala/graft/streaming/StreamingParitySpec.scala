@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Batch `FilterPipeline.run` and `StreamingFilter` apply one dup rule
   * with one content key and one post-dedup step, so on input that one
-  * micro-batch reads they emit the same rows, every column. (Over several
-  * micro-batches first arrival and earliest (warc_ts, url) can differ.)
+  * micro-batch reads they emit the same rows, every column, and streaming
+  * observes batch's quality counts. (Over several micro-batches first
+  * arrival and earliest (warc_ts, url) can differ.)
   */
 class StreamingParitySpec extends AnyFunSuite with BothStateStores {
   protected lazy val spark = SparkSession.builder()
@@ -84,6 +85,23 @@ class StreamingParitySpec extends AnyFunSuite with BothStateStores {
     val onlyStream = s.except(b).collect()
     if (onlyBatch.nonEmpty) problems += s"${onlyBatch.length} rows only in batch, e.g. ${onlyBatch.take(3).mkString("; ")}"
     if (onlyStream.nonEmpty) problems += s"${onlyStream.length} rows only in streaming, e.g. ${onlyStream.take(3).mkString("; ")}"
+    // the quality counts streaming observes, summed over its micro-batches,
+    // are batch's over the same rows
+    val quality = FilterPipeline.metrics(lit(true), "")
+    val want = batch.agg(quality.head, quality.tail: _*).head()
+    val observed = q.recentProgress.toSeq.flatMap(p => Option(p.observedMetrics.get("quality")))
+    if (observed.isEmpty) problems += "no micro-batch reported the observed metrics `quality`"
+    val names = want.schema.fieldNames.toSeq
+    val got = names.map(n => n -> observed.map(_.getAs[Long](n)).sum).toMap
+    val expected = names.map(n => n -> want.getAs[Long](n)).toMap
+    if (got != expected)
+      problems += s"observed quality counts differ: streaming ${got.filter(kv => expected(kv._1) != kv._2)}, " +
+        s"batch ${expected.filter(kv => got(kv._1) != kv._2)}"
+    // the language counts take each kernel row once; a duplicate is not one
+    val kernelLangs = batch.filter(!$"is_dup").groupBy($"lang").count().as[(String, Long)].collect().toMap
+    val observedLangs = got.collect { case (n, v) if n.startsWith("lang_") && v > 0 => n.stripPrefix("lang_") -> v }
+    if (observedLangs != kernelLangs)
+      problems += s"observed language counts $observedLangs are not the kernel rows' $kernelLangs"
     streamed.unpersist(); batch.unpersist()
     val found = problems.result()
     assert(found.isEmpty, found.mkString("\n"))

@@ -135,21 +135,4 @@ class StreamingSpec extends AnyFunSuite with BothStateStores {
     val urls = spark.read.parquet(outDir).select($"url").distinct().count()
     assert(urls == 350L, s"duplicate reprocessing detected: $urls distinct of $resumed")
   }
-
-  streamingTest("watermarked metrics stream aggregates per day and language") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-m").toString
-    val pagesDir = s"$tmp/pages"
-    PagesGen.pagesDf(spark, 400).write.parquet(pagesDir)
-    val bc = LangOps.broadcastModel(spark)
-
-    val q = StreamingFilter.startMetrics(spark, pagesDir, bc, "stream_metrics", s"$tmp/ckpt")
-    q.processAllAvailable()
-    // append-mode watermark holds back open windows; force one more batch
-    q.processAllAvailable()
-    q.stop()
-    // metrics may be withheld by the watermark in append mode for the last
-    // window; just assert the query ran and the schema is right
-    val m = spark.table("stream_metrics")
-    assert(m.columns.toSet == Set("window", "lang", "n_docs", "avg_conf"))
-  }
 }
